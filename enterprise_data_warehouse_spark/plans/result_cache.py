@@ -10,7 +10,9 @@ caller-supplied input versions, so:
 
 - the same query built twice (fresh scans, different exprIds, re-ordered
   builder calls that produce the same plan) HITS;
-- any semantic change (different filter, column, constant) MISSES;
+- any semantic change (different filter, column, constant) MISSES, and so
+  does a different output schema (canonicalization erases alias names, so
+  the schema is part of the key);
 - a new input version (VersionedTable.current_version(), a partition
   watermark, an ingest batch id) MISSES without plan inspection.
 
@@ -19,6 +21,8 @@ rename (crash-safe: a torn write is invisible because the final directory
 never exists half-written). At 100 TB this is exactly a materialized
 result store: hits cost one parquet scan of the RESULT (usually orders of
 magnitude smaller than the inputs), misses cost the query plus one write.
+Entries are read with the schema the key names, so neither a hit nor a
+miss runs Spark's schema-inference job.
 """
 
 from __future__ import annotations
@@ -29,19 +33,24 @@ import uuid
 from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def plan_fingerprint(df: DataFrame, versions: Mapping[str, object] | None = None) -> str:
-    """md5 over the canonicalized logical plan + sorted input versions.
+    """md5 over the canonicalized logical plan + output schema + sorted
+    input versions.
 
     Canonicalization (Catalyst's ``sameResult`` normal form) zeroes
     expression ids and normalizes auto-generated aliases, so two
     independently-built DataFrames with identical semantics fingerprint
     identically — plain ``analyzed.toString()`` would differ on every
-    build because exprIds are session-global counters."""
+    build because exprIds are session-global counters. It also erases
+    alias NAMES, so the output schema is hashed too: ``count(*) AS n`` and
+    ``count(*) AS m`` must not share an entry."""
     canon = df._jdf.queryExecution().logical().canonicalized().toString()
     vtext = repr(sorted((versions or {}).items()))
-    return hashlib.md5((canon + "\n@versions:" + vtext).encode()).hexdigest()
+    text = canon + "\n@schema:" + df.schema.json() + "\n@versions:" + vtext
+    return hashlib.md5(text.encode()).hexdigest()
 
 
 class ResultCache:
@@ -70,15 +79,19 @@ class ResultCache:
         cache (staged write + atomic-on-HDFS rename, same contract as
         sources.sink) and returns a scan of the materialized result — so
         downstream consumers of a miss ALSO read the compact result
-        instead of re-running the query's lineage."""
+        instead of re-running the query's lineage. Either way the entry is
+        read with ``df``'s schema (as written: nullable), which the key
+        names, so the read launches no schema-inference job."""
         from ..sources.sink import fs_handles, staged_swap
+        from ..sources.versioned import written_schema
 
         key = plan_fingerprint(df, versions)
         path = self._entry(name, key)
+        reader = self.spark.read.schema(StructType.fromJson(written_schema(df)))
         _, fs, hpath = fs_handles(self.spark, path)
         if fs.exists(hpath):
             self.hits += 1
-            return self.spark.read.parquet(path), True
+            return reader.parquet(path), True
         self.misses += 1
         # stage under an underscore-prefixed sibling: Spark/Hadoop readers
         # skip _-prefixed paths, so in-flight (or crash-orphaned) staged
@@ -91,7 +104,7 @@ class ResultCache:
             # concurrent builder won the race — their result is ours too
             if not fs.exists(hpath):
                 raise RuntimeError(f"result-cache rename failed for {path}")
-        return self.spark.read.parquet(path), False
+        return reader.parquet(path), False
 
     def entries(self, name: str) -> list[str]:
         from ..sources.sink import fs_handles

@@ -155,10 +155,14 @@ def _adopt_plain(spark: SparkSession, path: str,
 def read_table(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
     """Read a sink-managed table: commit-manifest layout when present
     (the default merge path), plain parquet otherwise (write_table
-    output)."""
+    output). The current version is resolved once and its marker handed
+    to ``read``, which then needs no schema-inference job either (see
+    sources/versioned.py)."""
+    # read-only: the create-capability probe is irrelevant
     t = _versioned(spark, path, assume_atomic_marker_create=True)
-    if t.exists():  # read-only: the create-capability probe is irrelevant
-        return t.read(merge_schema=merge_schema)
+    version, meta = t.current()
+    if version is not None:
+        return t.read(version=version, merge_schema=merge_schema, meta=meta)
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")

@@ -12,11 +12,20 @@ created. There is no moment at which a reader can observe a half-table:
     root/
       v00000001-3f2a9c1b/ ... parquet files ...  (immutable once committed)
       v00000002-8d11e04a/ ...
-      _commits/v00000001.json                    {"dir": "v00000001-3f2a9c1b", ...}
+      _commits/v00000001.json                    {"dir": "v00000001-3f2a9c1b", "schema": {...}, ...}
       _commits/v00000002.json
 
 * Readers resolve ``current = max(version whose marker's data dir exists)``
   and read that directory only.
+* ``schema`` is the JSON of the schema a parquet read of the version's
+  files infers (for data Spark wrote: the DataFrame's schema made
+  nullable). Reads pass it to ``spark.read.schema(...)``, so reading a
+  committed version launches no schema-inference job. Reads infer instead
+  when the marker has no ``schema``: markers written before the field
+  existed, ``partition_by`` commits (partition columns move to the end and
+  their types come from directory names), and partitioned merges whose
+  schema differs from the recorded schema of the map they inherit.
+  ``merge_schema=True`` reads (``merge(evolve_schema=True)``) always infer.
 * Writers stage a fresh uuid-suffixed dir, then create the marker. A crash
   at ANY point before the marker leaves an orphan dir readers never see —
   the previous version stays live. ``vacuum`` reclaims orphans and old
@@ -56,6 +65,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _DIR_RE = re.compile(r"^v(\d{8})-[0-9a-f]{8}$")
 _MARKER_RE = re.compile(r"^v(\d{8})\.json$")
@@ -129,6 +139,33 @@ def _fs(spark: SparkSession, path: str):
     return jvm, hpath.getFileSystem(conf)
 
 
+def _as_nullable(t):
+    """Spark's ``asNullable`` over a DataType's JSON form: every struct
+    field, array element and map value nullable, at any depth."""
+    if not isinstance(t, dict):
+        return t
+    if t["type"] == "struct":
+        return {**t, "fields": [
+            {**f, "nullable": True, "type": _as_nullable(f["type"])}
+            for f in t["fields"]
+        ]}
+    if t["type"] == "array":
+        return {**t, "containsNull": True,
+                "elementType": _as_nullable(t["elementType"])}
+    if t["type"] == "map":
+        return {**t, "valueContainsNull": True,
+                "keyType": _as_nullable(t["keyType"]),
+                "valueType": _as_nullable(t["valueType"])}
+    return t
+
+
+def written_schema(df: DataFrame) -> dict:
+    """The schema (JSON form) a parquet read infers for files Spark wrote
+    from ``df`` without ``partitionBy``: Spark writes every field nullable
+    and keeps names, order, types and field metadata."""
+    return _as_nullable(df.schema.jsonValue())
+
+
 class VersionedTable:
     """A parquet table whose visible state moves only via atomic
     commit-marker creation (see module docstring)."""
@@ -137,7 +174,12 @@ class VersionedTable:
                  assume_atomic_marker_create: bool = False):
         self.spark = spark
         self.root = root.rstrip("/")
-        self._jvm, self._hfs = _fs(spark, self.root)
+        self._jvm = spark.sparkContext._jvm
+        # one class lookup per table: each ``jvm.org.apache...Path`` walk
+        # resolves the package one py4j round trip per name segment
+        self._Path = self._jvm.org.apache.hadoop.fs.Path
+        self._hfs = self._Path(self.root).getFileSystem(
+            spark.sparkContext._jsc.hadoopConfiguration())
         scheme = self._scheme()
         if scheme not in _ATOMIC_CREATE_SCHEMES and not assume_atomic_marker_create:
             raise UnsupportedStoreError(
@@ -167,7 +209,7 @@ class VersionedTable:
 
     # -- path helpers ------------------------------------------------------
     def _path(self, rel: str):
-        return self._jvm.org.apache.hadoop.fs.Path(f"{self.root}/{rel}")
+        return self._Path(f"{self.root}/{rel}")
 
     def _is_local(self, rel: str) -> bool:
         """Marker dir/parts entries are root-relative by default; CLONE
@@ -179,7 +221,7 @@ class VersionedTable:
         return rel if not self._is_local(rel) else f"{self.root}/{rel}"
 
     def _anypath(self, rel: str):
-        return self._jvm.org.apache.hadoop.fs.Path(self._abs(rel))
+        return self._Path(self._abs(rel))
 
     def _marker(self, version: int):
         return self._path(f"_commits/v{version:08d}.json")
@@ -191,23 +233,24 @@ class VersionedTable:
         would make a live version read as uncommitted, and a vacuum built
         on that misreading would delete the live version's data dir —
         fail-open data loss. Callers that want fail-closed semantics for
-        IO errors wrap this themselves."""
-        if not self._hfs.exists(hpath):
-            return None
-        stream = self._hfs.open(hpath)
+        IO errors wrap this themselves.
+
+        The common case costs three py4j round trips (open, one
+        whole-file read, close); existence is checked only when the read
+        fails (some object-store connectors open lazily and report a
+        missing file on the first read)."""
         try:
-            reader = self._jvm.java.io.BufferedReader(
-                self._jvm.java.io.InputStreamReader(stream, "UTF-8")
-            )
-            lines = []
-            line = reader.readLine()
-            while line is not None:
-                lines.append(line)
-                line = reader.readLine()
-        finally:
-            stream.close()
+            stream = self._hfs.open(hpath)
+            try:
+                raw = stream.readAllBytes()
+            finally:
+                stream.close()
+        except Exception:
+            if not self._hfs.exists(hpath):
+                return None
+            raise
         try:
-            return json.loads("\n".join(lines))
+            return json.loads(bytes(raw).decode("utf-8"))
         except ValueError:
             return None
 
@@ -282,25 +325,41 @@ class VersionedTable:
             )
         return sorted(out, key=lambda r: -r["version"])
 
-    def current_version(self) -> int | None:
-        """Highest live version — walks DOWN from the highest marker
-        number, so the common case costs one listStatus + ONE marker read
-        regardless of retained history depth. (The naive
-        committed_versions()[-1] made every merge O(versions) driver-side
-        marker reads — measured at 2.8× merge latency by 60 retained
-        versions, SCALING.md protocol table; dead markers from crashed
-        writers are rare, so the walk almost never descends.)"""
+    def current(self) -> tuple[int | None, dict | None]:
+        """(version, marker meta) of the highest live version, or (None,
+        None) — walks DOWN from the highest marker number, so the common
+        case costs one listStatus + ONE marker read regardless of retained
+        history depth. (The naive committed_versions()[-1] made every merge
+        O(versions) driver-side marker reads — measured at 2.8× merge
+        latency by 60 retained versions, SCALING.md protocol table; dead
+        markers from crashed writers are rare, so the walk almost never
+        descends.) Callers that go on to read the version pass the meta to
+        ``read(meta=...)`` instead of re-reading the marker."""
         for v in reversed(self._marker_versions()):
-            if self._live_meta(v):
-                return v
-        return None
+            meta = self._live_meta(v)
+            if meta:
+                return v, meta
+        return None, None
+
+    def current_version(self) -> int | None:
+        """Highest live version (see ``current``)."""
+        return self.current()[0]
 
     def exists(self) -> bool:
         return self.current_version() is not None
 
+    def _reader(self, schema: dict | None):
+        """``spark.read`` with a recorded schema (see the module docstring)
+        when there is one: Spark then skips its schema-inference job. None
+        leaves the read to infer."""
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader
+
     def read(
         self, version: int | None = None, merge_schema: bool = False,
-        prune: dict | None = None,
+        prune: dict | None = None, meta: dict | None = None,
     ) -> DataFrame:
         """Read the current version, or a specific still-retained one
         (time travel — every committed version is immutable until
@@ -323,19 +382,30 @@ class VersionedTable:
         info (old commits, plain merge output, clones) read in full — the
         result is always a SUPERSET of the matching rows, so the caller
         applies the real filter on top exactly as with parquet row-group
-        skipping."""
-        if version is None:
-            version = self.current_version()
-            if version is None:
-                raise FileNotFoundError(f"no committed version under {self.root}")
-        meta = self._live_meta(version)
+        skipping.
+
+        ``meta`` is the live marker of ``version`` as ``current()``
+        returned it; passing it skips resolving and re-reading the
+        marker. ``merge_schema=True`` infers the schema by merging every
+        file's footer; otherwise the marker's recorded schema is used when
+        it has one."""
         if meta is None:
-            raise FileNotFoundError(
-                f"version {version} not committed (or vacuumed) under {self.root}"
-            )
-        reader = self.spark.read
+            if version is None:
+                version, meta = self.current()
+                if version is None:
+                    raise FileNotFoundError(
+                        f"no committed version under {self.root}")
+            else:
+                meta = self._live_meta(version)
+            if meta is None:
+                raise FileNotFoundError(
+                    f"version {version} not committed (or vacuumed) under "
+                    f"{self.root}"
+                )
         if merge_schema:
-            reader = reader.option("mergeSchema", "true")
+            reader = self.spark.read.option("mergeSchema", "true")
+        else:
+            reader = self._reader(meta.get("schema"))
         if meta.get("parts"):
             rels = sorted(meta["parts"].values())
             # partition-value skipping: a point/IN-list prune on the
@@ -659,15 +729,9 @@ class VersionedTable:
         (a plain commit/adopt/merge landed on top): the parts map can no
         longer say which rows belong to which partition, and returning None
         there would let a caller mistake existing data for absent data."""
-        version = self.current_version()
+        version, meta = self.current()
         if version is None:
             return None
-        meta = self._read_marker(version)
-        if meta is None:  # racing erase/vacuum reclaimed it — clean error
-            raise FileNotFoundError(
-                f"version {version} of {self.root} was reclaimed while "
-                "resolving partitions — re-resolve and retry"
-            )
         parts = meta.get("parts") or {}
         if not parts:
             raise ValueError(
@@ -678,7 +742,8 @@ class VersionedTable:
         hit = [parts[v] for v in values if v in parts]
         if not hit:
             return None
-        return self.spark.read.parquet(*[self._abs(rel) for rel in hit])
+        return self._reader(meta.get("schema")).parquet(
+            *[self._abs(rel) for rel in hit])
 
     # -- write side --------------------------------------------------------
     def _stage_data(self, df: DataFrame, version: int,
@@ -811,7 +876,8 @@ class VersionedTable:
                 n += 1
         return n
 
-    def _collect_file_stats(self, dirname: str, cols: Sequence[str]) -> dict | None:
+    def _collect_file_stats(self, dirname: str, cols: Sequence[str],
+                            schema: dict | None = None) -> dict | None:
         """File-level min/max for ``cols``: parquet-FOOTER fast path on
         local storage (pyarrow metadata — no data read, O(files)
         driver-side, the cost class of Delta's add-file stats), and a
@@ -822,15 +888,16 @@ class VersionedTable:
         {"cols": [...], "files": {rel_path: {col: [min, max]}}} or None
         when stats can't be gathered (too many files, no usable values) —
         callers then commit WITHOUT stats and read() falls back to the
-        full scan: strictly fail-open."""
+        full scan: strictly fail-open. ``schema`` is the staged data's
+        recorded schema, when known (saves the pass's inference job)."""
         if self._scheme() == "file" and not self._force_distributed_stats:
             stats = self._collect_file_stats_footer(dirname, cols)
             if stats is not None:
                 return stats
-        return self._collect_file_stats_distributed(dirname, cols)
+        return self._collect_file_stats_distributed(dirname, cols, schema)
 
     def _collect_file_stats_distributed(
-        self, dirname: str, cols: Sequence[str]
+        self, dirname: str, cols: Sequence[str], schema: dict | None = None
     ) -> dict | None:
         """Per-file min/max via ONE column-pruned Spark aggregation
         grouped on input_file_name() — executor-side like the write
@@ -846,7 +913,7 @@ class VersionedTable:
             return None
         base = self._abs(dirname)
         try:
-            df = self.spark.read.option("basePath", base).parquet(base)
+            df = self._reader(schema).option("basePath", base).parquet(base)
         except Exception:
             return None
         present = [c for c in cols if c in df.columns]
@@ -932,7 +999,8 @@ class VersionedTable:
         return {"cols": list(cols), "files": out}
 
     def _collect_file_blooms(self, dirname: str, cols: Sequence[str],
-                             m: int, k: int) -> dict | None:
+                             m: int, k: int,
+                             schema: dict | None = None) -> dict | None:
         """Per-file bloom bitmaps for ``cols``, computed DISTRIBUTED: one
         Spark aggregation over the staged files (JVM xxhash64, k seeds,
         explode → per-file collect_set of bit positions, bounded by m),
@@ -945,7 +1013,7 @@ class VersionedTable:
         without materializing anything. Returns {"m", "k", "cols":
         {col: dtype}, "files": {rel: {col: b64bitmap}}} or None (no
         indexable column / too many files) — callers then commit without
-        a bloom: strictly fail-open."""
+        a bloom: strictly fail-open. ``schema`` as in _collect_file_stats."""
         try:
             if not 0 < self._count_staged_files(dirname) <= self.MAX_STATS_FILES:
                 return None
@@ -953,7 +1021,7 @@ class VersionedTable:
             return None
         base = self._abs(dirname)
         try:
-            df = self.spark.read.option("basePath", base).parquet(base)
+            df = self._reader(schema).option("basePath", base).parquet(base)
         except Exception:
             return None
         present = [c for c in cols if c in df.columns]
@@ -1063,7 +1131,11 @@ class VersionedTable:
 
         ``extra_meta`` lets protocol ops attach auxiliary marker fields
         (e.g. incremental()'s ``wm`` watermark memo); core fields can
-        never be overridden (setdefault semantics)."""
+        never be overridden (setdefault semantics).
+
+        The marker records ``schema`` (see the module docstring) unless
+        ``partition_by`` is set: hive partition columns are read back last,
+        with types inferred from the directory names."""
         if bloom_cols:
             # explicit user input → validate loudly (the fail-open
             # contract covers environmental failures, not bad arguments).
@@ -1082,16 +1154,19 @@ class VersionedTable:
             at_version = (self.current_version() or 0) + 1
         dirname = self._stage_data(df, at_version, partition_by)
         meta = {"version": at_version, "dir": dirname, "op": op}
+        schema = None if partition_by else written_schema(df)
+        if schema is not None:
+            meta["schema"] = schema
         if extra_meta:
             for kk, vv in extra_meta.items():
                 meta.setdefault(kk, vv)
         if stats_cols:
-            stats = self._collect_file_stats(dirname, stats_cols)
+            stats = self._collect_file_stats(dirname, stats_cols, schema)
             if stats:
                 meta["stats"] = stats
         if bloom_cols:
             bloom = self._collect_file_blooms(
-                dirname, bloom_cols, bloom_bits, bloom_hashes)
+                dirname, bloom_cols, bloom_bits, bloom_hashes, schema)
             if bloom:
                 meta["bloom"] = {
                     "m": bloom["m"], "k": bloom["k"], "cols": bloom["cols"],
@@ -1100,26 +1175,32 @@ class VersionedTable:
         self._create_marker(at_version, meta)
         return at_version
 
-    def _inherited_stats_cols(self, version: int | None) -> list[str] | None:
-        """Stats columns the given version's marker carries — maintenance
-        ops (merge/compact) re-record stats for the SAME columns so a
-        table that opted into data skipping keeps it across its whole
-        maintenance lifecycle, the way Delta's writer keeps emitting
-        add-file stats."""
+    def _inherited_stats_cols(self, version: int | None,
+                              meta: dict | None = None) -> list[str] | None:
+        """Stats columns the given version's marker (``meta``, when the
+        caller already holds it) carries — maintenance ops (merge/compact)
+        re-record stats for the SAME columns so a table that opted into
+        data skipping keeps it across its whole maintenance lifecycle, the
+        way Delta's writer keeps emitting add-file stats."""
         if version is None:
             return None
-        meta = self._live_meta(version)
+        if meta is None:
+            meta = self._live_meta(version)
         return (meta or {}).get("stats", {}).get("cols") or None
 
-    def _inherited_bloom(self, version: int | None) -> dict:
+    def _inherited_bloom(self, version: int | None,
+                         meta: dict | None = None) -> dict:
         """commit() kwargs reproducing the given version's bloom index
-        (same columns, same geometry) — maintenance ops pass these through
-        so point-lookup skipping survives merges and compactions. The
-        bloom pass is one extra map-side column-hash job over data the op
-        is already rewriting in full."""
+        (same columns, same geometry; ``meta`` as in _inherited_stats_cols)
+        — maintenance ops pass these through so point-lookup skipping
+        survives merges and compactions. The bloom pass is one extra
+        map-side column-hash job over data the op is already rewriting in
+        full."""
         if version is None:
             return {}
-        b = (self._live_meta(version) or {}).get("bloom")
+        if meta is None:
+            meta = self._live_meta(version)
+        b = (meta or {}).get("bloom")
         if not b:
             return {}
         # geometry outside commit()'s accepted range, or a malformed/absent
@@ -1155,17 +1236,18 @@ class VersionedTable:
         output is not re-clustered, so file ranges may widen until the
         next compact() restores the clustering — pruning stays correct
         either way, it is fail-open)."""
-        current = self.current_version()
+        current, meta = self.current()
         if current is None:
             return self.commit(src, op="merge", at_version=1,
                                extra_meta=extra_meta)
-        target = self.read(version=current, merge_schema=evolve_schema)
+        target = self.read(version=current, merge_schema=evolve_schema,
+                           meta=meta)
         survivors = target.join(src.select(*keys).distinct(), list(keys), "left_anti")
         merged = src.unionByName(survivors, allowMissingColumns=evolve_schema)
         return self.commit(merged, op="merge", at_version=current + 1,
-                           stats_cols=self._inherited_stats_cols(current),
+                           stats_cols=self._inherited_stats_cols(current, meta),
                            extra_meta=extra_meta,
-                           **self._inherited_bloom(current))
+                           **self._inherited_bloom(current, meta))
 
     def merge_partitioned(
         self, src: DataFrame, keys: Sequence[str], partition_col: str,
@@ -1189,20 +1271,17 @@ class VersionedTable:
         touched partitions, so a key migrating from an untouched partition
         would leave its old row behind (the same contract Delta MERGE has
         under partition-pruning predicates; fact tables keyed on
-        (entity, date) satisfy it by construction)."""
-        current = self.current_version()
+        (entity, date) satisfy it by construction).
+
+        The marker records ``schema`` when every mapped dir holds data of
+        that schema: always for a fresh map, and for an inherited map only
+        when the merged schema equals the previous marker's recorded one
+        (otherwise the union's files differ and reads infer)."""
+        # one step: current() hands back the live marker it resolved, so
+        # no racing erase/vacuum can slip between resolving the version
+        # and reading its parts map
+        current, prev = self.current()
         version = (current or 0) + 1
-        prev = self._read_marker(current) if current else None
-        if current and prev is None:
-            # a racing erase/vacuum reclaimed the marker between resolve
-            # and read — treating it as "not partition-mapped" would
-            # commit ONLY the delta and silently drop every untouched
-            # partition from the new map; conflict out so the caller's
-            # retry loop re-derives against the new current instead
-            raise ConcurrentWriteError(
-                f"version {current} of {self.root} was reclaimed while "
-                "deriving a partitioned merge — re-derive and retry"
-            )
         parts: dict[str, str] = dict((prev or {}).get("parts") or {})
         # NULL — and EMPTY-STRING — partition values land in the hive
         # default dir (Spark's getPartitionPathString maps both); key the
@@ -1219,7 +1298,7 @@ class VersionedTable:
             # current version is NOT partition-mapped (plain commit/adopt/
             # merge): one-time full conversion — every row must land in a
             # mapped dir or the new marker would silently drop it
-            target = self.read()
+            target = self.read(version=current, meta=prev)
             survivors = target.join(
                 src.select(*keys).distinct(), list(keys), "left_anti"
             )
@@ -1227,7 +1306,7 @@ class VersionedTable:
         else:
             existing_rel = [parts[p] for p in touched if p in parts]
             if existing_rel:
-                target = self.spark.read.parquet(
+                target = self._reader((prev or {}).get("schema")).parquet(
                     *[self._abs(rel) for rel in existing_rel]
                 )
                 survivors = target.join(
@@ -1256,12 +1335,15 @@ class VersionedTable:
             "touched": touched,  # this commit's blast radius (history())
             "op": "merge_partitioned",
         }
+        fresh_map = prev is None or not (prev or {}).get("parts")
+        schema = written_schema(merged)
+        if fresh_map or (prev or {}).get("schema") == schema:
+            meta["schema"] = schema
         # record the partition column so read(prune={pcol: value}) can
         # skip unmapped partitions — but only when the whole map is keyed
         # by ONE column (a caller that switched partition_col mid-history
         # has mixed keys; recording either name would mis-prune)
         prev_pcol = (prev or {}).get("pcol")
-        fresh_map = prev is None or not (prev or {}).get("parts")
         if fresh_map or prev_pcol == partition_col:
             meta["pcol"] = partition_col
             # also record the column's DTYPE so read-side pruning can
@@ -1322,15 +1404,14 @@ class VersionedTable:
     def _resolve_watermark(self, watermark_col: str, default: str) -> str:
         """Current watermark: the marker memo when the CURRENT version
         carries one for this column, else the exact max() table scan."""
-        current = self.current_version()
+        current, meta = self.current()
         wm = None
         if current is not None:
-            rec = ((self._live_meta(current) or {}).get("wm") or {}).get(
-                watermark_col)
+            rec = (meta.get("wm") or {}).get(watermark_col)
             if rec is not None:
                 wm = rec
             else:
-                row = self.read(version=current).agg(
+                row = self.read(version=current, meta=meta).agg(
                     F.max(watermark_col).alias("wm")).collect()[0]
                 wm = str(row["wm"]) if row["wm"] is not None else None
         return default if wm is None else wm
@@ -1393,8 +1474,8 @@ class VersionedTable:
                 "drop each clone (release_parent_ref after a local rewrite, "
                 "or delete the clone) first, then re-run the erase."
             )
-        current = self.current_version()
-        target = self.read(version=current)
+        current, meta = self.current()
+        target = self.read(version=current, meta=meta)
         keyset = subject_keys.select(*keys).distinct()
         survivors = target.join(keyset, list(keys), "left_anti")
         n_before = target.count()
@@ -1567,6 +1648,8 @@ class VersionedTable:
                 clone_meta["pcol"] = meta["pcol"]
                 if meta.get("ptype"):
                     clone_meta["ptype"] = meta["ptype"]
+        if meta.get("schema"):  # same files, same schema
+            clone_meta["schema"] = meta["schema"]
         # Linkage BEFORE marker: _clone.json without a marker is inert
         # (dest.exists() is still False), but a marker without linkage
         # would be a live clone whose parent ref can never be released
@@ -1666,7 +1749,7 @@ class VersionedTable:
                 "clone v1 marker's source/ref fields) before releasing"
             )
         _, src_fs = _fs(self.spark, source)
-        ref = self._jvm.org.apache.hadoop.fs.Path(f"{source}/_refs/{token}.json")
+        ref = self._Path(f"{source}/_refs/{token}.json")
         released = bool(src_fs.delete(ref, False))
         if not released:
             # The linkage may carry a DEAD rival's token: a losing clone
@@ -1677,7 +1760,7 @@ class VersionedTable:
             # win is exclusive), so any such ref is ours or a dead
             # loser's leftover; releasing them all is safe and un-leaks
             # the winner's ref that the clobbered token was hiding.
-            refs_dir = self._jvm.org.apache.hadoop.fs.Path(f"{source}/_refs")
+            refs_dir = self._Path(f"{source}/_refs")
             try:
                 if src_fs.exists(refs_dir):
                     for st in src_fs.listStatus(refs_dir):
@@ -1722,17 +1805,9 @@ class VersionedTable:
             raise ValueError("compact max_retries must be >= 1")
         last_err: Exception | None = None
         for _ in range(max_retries):
-            current = self.current_version()
+            current, meta = self.current()
             if current is None:
                 raise FileNotFoundError(f"no committed version under {self.root}")
-            meta = self._read_marker(current)
-            if meta is None or "dir" not in meta:
-                # a racing erase/vacuum reclaimed the marker between
-                # current_version() and here — re-resolve and retry
-                last_err = ConcurrentWriteError(
-                    f"version {current} of {self.root} vanished mid-compact"
-                )
-                continue
             rels = (sorted(meta["parts"].values())
                     if meta.get("parts") else [meta["dir"]])
             try:
@@ -1749,8 +1824,10 @@ class VersionedTable:
                 continue
             n_files = max(1, -(-n_bytes // max(1, target_file_bytes)))
             try:
+                # re-checks liveness: a racing erase/vacuum may have
+                # reclaimed `current` since it was resolved and sized
                 df = self.read(version=current)
-                stats_cols = self._inherited_stats_cols(current)
+                stats_cols = self._inherited_stats_cols(current, meta)
                 if stats_cols:
                     # re-establish range clustering on the stats columns so
                     # the rewrite RESTORES data skipping's selectivity
@@ -1762,7 +1839,7 @@ class VersionedTable:
                     df = df.repartition(n_files)
                 version = self.commit(df, op="compact", at_version=current + 1,
                                       stats_cols=stats_cols,
-                                      **self._inherited_bloom(current))
+                                      **self._inherited_bloom(current, meta))
             except ConcurrentWriteError as e:
                 last_err = e
                 continue
@@ -2024,12 +2101,12 @@ class VersionedTable:
                     continue  # unparseable → fail closed (pins everything)
                 token = name[:-5]
                 try:
-                    dest_hpath = self._jvm.org.apache.hadoop.fs.Path(dest_root)
+                    dest_hpath = self._Path(dest_root)
                     if not self._hfs.exists(dest_hpath):
                         reap = True  # clone dropped from storage entirely
                     else:
                         link = self._read_json(
-                            self._jvm.org.apache.hadoop.fs.Path(
+                            self._Path(
                                 f"{dest_root}/_clone.json"
                             )
                         )

@@ -228,9 +228,9 @@ def stream_mv_merge(
         )
         _adopt_plain(spark, target_path)  # migrate a legacy plain-parquet MV
         t = VersionedTable(spark, target_path)
-        cur = t.current_version()
+        cur, meta = t.current()
         if cur is not None:
-            existing = t.read(version=cur)
+            existing = t.read(version=cur, meta=meta)
             if "_last_batch_id" in existing.columns:
                 # Constant columns → one row answers the replay probe.
                 row = existing.select("_last_batch_id", "_ckpt").first()

@@ -19,6 +19,12 @@ Three claims, each measured:
 3. **Vacuum is linear in version count.** At sf0.1, 10× the superseded
    versions should cost ~10× the vacuum time (and no more).
 
+The merge/vacuum leg also prints the Spark jobs launched per merge and
+per ``read_table`` (status-tracker job-id delta of a job group): a
+read of a committed version takes its schema from the commit marker, so
+it launches no schema-inference job; a read naming more than 32 dirs
+still runs Spark's parallel file-listing job.
+
 Usage: python tools/protocol_probe.py   (prints a table; paste → SCALING.md)
 """
 
@@ -27,6 +33,7 @@ from __future__ import annotations
 import shutil
 import sys
 import time
+import uuid
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -36,6 +43,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from enterprise_data_warehouse_spark.session import get_spark  # noqa: E402
 from enterprise_data_warehouse_spark.sources.sink import (  # noqa: E402
     merge_upsert_partitioned,
+    read_table,
 )
 from enterprise_data_warehouse_spark.sources.tables import load_table  # noqa: E402
 from enterprise_data_warehouse_spark.sources.versioned import (  # noqa: E402
@@ -53,9 +61,29 @@ def _du(path: Path) -> int:
     return sum(f.stat().st_size for f in path.rglob("*") if f.is_file())
 
 
+def _timed_jobs(spark, fn) -> tuple[float, int]:
+    """(wall seconds, Spark jobs launched) of ``fn()``: the job count is
+    the status tracker's job ids for a fresh job group, read after the
+    listener bus has delivered every job-start event."""
+    sc = spark.sparkContext
+    group = f"protocol-probe-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "protocol probe")
+    t0 = time.perf_counter()
+    try:
+        fn()
+    finally:
+        wall = time.perf_counter() - t0
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return wall, jobs
+
+
 def _orders(spark, sf_dir):
+    # bare-day key: o_orderdate is a TIMESTAMP, whose cast-to-string form
+    # carries " 00:00:00" and would never equal DELTA_DAY (empty deltas)
     return load_table(spark, sf_dir, "orders").withColumn(
-        "date_key", F.col("o_orderdate").cast("string")
+        "date_key", F.date_format("o_orderdate", "yyyy-MM-dd")
     )
 
 
@@ -76,13 +104,16 @@ def probe_sf(spark, sf: str, n_versions: int) -> dict:
     table_bytes = _du(root)
 
     # n_versions same-day delta merges (the streaming-foreachBatch shape)
-    merge_times = []
+    merge_times, merge_jobs = [], []
     for i in range(n_versions):
         d = _delta(orders, i + 1)
-        t0 = time.perf_counter()
-        merge_upsert_partitioned(spark, str(root), d, ["o_orderkey"], "date_key")
-        merge_times.append(time.perf_counter() - t0)
+        wall, jobs = _timed_jobs(spark, lambda: merge_upsert_partitioned(
+            spark, str(root), d, ["o_orderkey"], "date_key"))
+        merge_times.append(wall)
+        merge_jobs.append(jobs)
     merge_bytes = _du(root) - table_bytes  # all delta versions combined
+    reads = [_timed_jobs(spark, lambda: read_table(spark, str(root)))
+             for _ in range(3)]
 
     t = VersionedTable(spark, str(root))
     n_committed = len(t.committed_versions())
@@ -98,6 +129,9 @@ def probe_sf(spark, sf: str, n_versions: int) -> dict:
         "table_mb": table_bytes / 1e6,
         "merge_best_s": min(merge_times),
         "merge_avg_s": sum(merge_times) / len(merge_times),
+        "merge_jobs": sum(merge_jobs) / len(merge_jobs),
+        "read_best_s": min(wall for wall, _ in reads),
+        "read_jobs": max(jobs for _, jobs in reads),
         "merge_mb_per_version": merge_bytes / n_versions / 1e6,
         "versions_reclaimed": len(removed["versions"]),
         "vacuum_s": vacuum_s,
@@ -385,13 +419,16 @@ def main() -> None:
     r = probe_sf(spark, sf, n_versions)
     print(
         f"{'probe':<20}{'rows':>9}{'build':>8}{'tableMB':>9}"
-        f"{'merge(best)':>12}{'merge(avg)':>11}{'MB/ver':>8}"
+        f"{'merge(best)':>12}{'merge(avg)':>11}{'jobs/merge':>11}"
+        f"{'read(best)':>11}{'jobs/read':>10}{'MB/ver':>8}"
         f"{'reclaimed':>10}{'vacuum':>8}"
     )
     print(
         f"sf{r['sf']:<4} v={r['n_committed']:<11}{r['rows']:>9}"
         f"{r['build_s']:>7.1f}s{r['table_mb']:>8.1f}"
         f"{r['merge_best_s']:>11.2f}s{r['merge_avg_s']:>10.2f}s"
+        f"{r['merge_jobs']:>11.1f}"
+        f"{r['read_best_s']:>10.3f}s{r['read_jobs']:>10}"
         f"{r['merge_mb_per_version']:>8.2f}"
         f"{r['versions_reclaimed']:>10}{r['vacuum_s']:>7.2f}s"
     )
