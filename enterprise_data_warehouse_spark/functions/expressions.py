@@ -46,18 +46,6 @@ def email_valid(col: Column | str) -> Column:
     return _c(col).rlike(EMAIL_RE)
 
 
-def not_test_row(col: Column | str) -> Column:
-    """P3: exclude TEST_% ids and %test% names (case-insensitive)."""
-    c = _c(col)
-    return c.isNotNull() & ~c.like("TEST_%") & ~F.lower(c).like("%test%")
-
-
-# --- F5: concat / coalesce ------------------------------------------------
-
-def full_address(*cols: Column | str, sep: str = ", ") -> Column:
-    return F.concat_ws(sep, *[F.coalesce(_c(c), F.lit("")) for c in cols])
-
-
 # --- F6/F7/F9/F10/F11: date & time ---------------------------------------
 
 def datediff_years(end: Column | str, start: Column | str) -> Column:
@@ -69,10 +57,6 @@ def datediff_years(end: Column | str, start: Column | str) -> Column:
 def epoch_seconds_between(end: Column | str, start: Column | str) -> Column:
     """extract(epoch from a - b) — data-age seconds."""
     return F.unix_timestamp(_c(end)) - F.unix_timestamp(_c(start))
-
-
-def hours_between(end: Column | str, start: Column | str) -> Column:
-    return F.floor(epoch_seconds_between(end, start) / F.lit(3600)).cast("bigint")
 
 
 # --- F13: multi-branch CASE bands ----------------------------------------
@@ -122,12 +106,6 @@ def surrogate_key(*cols: Column | str) -> Column:
 def change_hash(*cols: Column | str) -> Column:
     """Row-content hash for SCD2 change detection (same construction)."""
     return surrogate_key(*cols)
-
-
-def xx_key(*cols: Column | str) -> Column:
-    """xxhash64 surrogate — the fast path at scale (no oracle mirror)."""
-    parts = [F.coalesce(_c(c).cast("string"), F.lit("_null_")) for c in cols]
-    return F.xxhash64(F.concat_ws("-", *parts))
 
 
 # --- F19: JSON --------------------------------------------------------------

@@ -11,9 +11,18 @@ so this layer is designed Spark-first for a 100 TB training-data pipeline:
 - plan-level operators (frame sampling, audio chunking) are **pure JVM
   explode/sequence** — no Python in the hot path, whole-stage codegen'd;
 - decode / feature-extraction crosses the Arrow boundary ONCE per batch via
-  ``mapInPandas``; the actual pixel/sample decode is STUBBED (PIL/librosa are
-  not in this container — see ``_decode_image_real``) behind a deterministic
-  fake so the batch shape, schema, and partitioning are real and tested.
+  ``mapInPandas``; the pixel decode itself is a deterministic fake
+  (``_fake_pixel_stats``) so the batch shape, schema, and partitioning are
+  real and value-verified against the oracle.
+
+Deploy-time decode hook: the ``_fake_pixel_stats(bytes(p))`` call inside
+``image_feature_extract``'s ``extract`` is the one line a deployment replaces
+with a real decoder (e.g. PIL) returning the same ``(mean, std)`` pair.
+
+The pure-Python decoders below (``decode_bmp``/``decode_png``/
+``decode_jpeg``/``decode_tiff`` behind ``_decode_image_real``, plus
+``decode_wav``, ``parse_mp3`` and ``parse_mp4``) are reached by no
+registered query; they are kept as a tested library surface.
 
 The test corpus has no binary column, so the manifest derives one
 deterministically from ``documents.text`` (UTF-8 encode) — at production
@@ -632,8 +641,7 @@ def decode_tiff(payload: bytes):
     width, height = first(256), first(257)
     if not width or not height:
         raise ValueError("TIFF missing ImageWidth/ImageLength")
-    # same 64 Mpx bomb cap as JPEG/PNG/GIF/BMP; webp.py's VP8L leg is
-    # deliberately TIGHTER (16 Mpx) because it decodes per-symbol in Python
+    # same 64 Mpx bomb cap as JPEG/PNG/BMP
     if width * height > _JPEG_MAX_PIXELS:
         raise ValueError(f"TIFF dimensions {width}x{height} out of bounds")
     comp = first(259, 1)
@@ -745,194 +753,6 @@ def decode_tiff(payload: bytes):
         # deltas off the left neighbor; invert with a wrapping cumsum
         img = np.add.accumulate(img, axis=1, dtype=np.uint8)
     return np.ascontiguousarray(img)
-
-
-def _gif_lzw_decode(data: bytes, min_code_size: int, max_out: int) -> bytes:
-    """GIF-variant LZW: LSB-first bit packing (opposite of TIFF), Clear =
-    2^mcs, EOI = Clear+1, code width grows from mcs+1 to 12 WITHOUT the
-    early change (GIF bumps when the table actually fills). Output capped
-    at ``max_out``."""
-    if not 2 <= min_code_size <= 11:
-        raise ValueError(f"GIF LZW min code size {min_code_size} invalid")
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    out = bytearray()
-    # spec does not require a leading Clear: the table starts initialized
-    table: list[bytes] = [bytes([i]) for i in range(clear)] + [b"", b""]
-    prev = b""
-    acc = accbits = pos = 0
-    size = min_code_size + 1
-
-    def read_code() -> int:
-        nonlocal acc, accbits, pos
-        while accbits < size:
-            if pos >= len(data):
-                raise ValueError("GIF LZW stream truncated")
-            acc |= data[pos] << accbits
-            pos += 1
-            accbits += 8
-        code = acc & ((1 << size) - 1)
-        acc >>= size
-        accbits -= size
-        return code
-
-    started = False
-    while True:
-        code = read_code()
-        if code == eoi:
-            break
-        if code == clear:
-            table = [bytes([i]) for i in range(clear)] + [b"", b""]
-            size = min_code_size + 1
-            started = False
-            continue
-        if not started:
-            if code >= clear:
-                raise ValueError("GIF LZW: invalid code after Clear")
-            prev = table[code]
-            out += prev
-            started = True
-        else:
-            if code < len(table):
-                entry = table[code]
-            elif code == len(table):
-                entry = prev + prev[:1]  # the KwKwK case
-            else:
-                raise ValueError("GIF LZW code out of range")
-            out += entry
-            if len(table) < 4096:
-                table.append(prev + entry[:1])
-            prev = entry
-        if len(out) > max_out:
-            raise ValueError(
-                f"GIF LZW stream inflates past its declared {max_out} bytes"
-            )
-        if len(table) >= (1 << size) and size < 12:
-            size += 1  # late change: width grows when the table IS full
-    return bytes(out)
-
-
-def decode_gif(payload: bytes):
-    """REAL image decode for GIF87a/GIF89a — pure stdlib + numpy. Walks
-    the block stream (logical screen descriptor, global/local color
-    tables, extensions), LZW-decodes the FIRST image frame (LSB-first
-    variable-width codes, late width change, 4096-entry table cap),
-    de-interlaces the 4-pass row order when flagged, and composites the
-    frame onto a background-filled screen canvas. Returns (H, W, 3)
-    uint8 RGB, or (H, W, 4) RGBA when the graphic-control extension
-    declares a transparent index. Later animation frames are ignored by
-    design (the pipeline fingerprints stills). Hostile payloads
-    (dimension bombs, ballooning or truncated LZW, missing color
-    tables, out-of-range indices) raise ValueError before any large
-    allocation."""
-    import struct
-
-    import numpy as np
-
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF payload")
-    if len(payload) < 13:
-        raise ValueError("GIF header truncated")
-    sw, sh, flags, bg, _ = struct.unpack_from("<HHBBB", payload, 6)
-    if not 0 < sw * sh <= _JPEG_MAX_PIXELS:
-        raise ValueError(f"GIF dimensions {sw}x{sh} out of bounds")
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 2 << (flags & 7)
-        if pos + 3 * n > len(payload):
-            raise ValueError("GIF global color table truncated")
-        gct = np.frombuffer(payload, np.uint8, 3 * n, pos).reshape(n, 3)
-        pos += 3 * n
-    transparent = None
-    while pos < len(payload):
-        block = payload[pos]
-        pos += 1
-        if block == 0x3B:  # trailer
-            break
-        if block == 0x21:  # extension: GCE carries the transparent index
-            if pos + 1 > len(payload):
-                raise ValueError("GIF extension truncated")
-            label = payload[pos]
-            pos += 1
-            sub_start = pos
-            while True:  # sub-block chain
-                if pos >= len(payload):
-                    raise ValueError("GIF extension sub-blocks truncated")
-                n = payload[pos]
-                pos += 1
-                if n == 0:
-                    break
-                pos += n
-            if label == 0xF9 and payload[sub_start] >= 4:
-                gce_flags = payload[sub_start + 1]
-                if gce_flags & 1:
-                    transparent = payload[sub_start + 4]
-            continue
-        if block != 0x2C:
-            raise ValueError(f"unexpected GIF block {block:#x}")
-        # image descriptor — the FIRST frame is the decode target
-        if pos + 9 > len(payload):
-            raise ValueError("GIF image descriptor truncated")
-        fx, fy, fw, fh, iflags = struct.unpack_from("<HHHHB", payload, pos)
-        pos += 9
-        if not fw or not fh or fx + fw > sw or fy + fh > sh:
-            raise ValueError(
-                f"GIF frame {fw}x{fh}@{fx},{fy} outside its {sw}x{sh} screen"
-            )
-        ct = gct
-        if iflags & 0x80:  # local color table overrides
-            n = 2 << (iflags & 7)
-            if pos + 3 * n > len(payload):
-                raise ValueError("GIF local color table truncated")
-            ct = np.frombuffer(payload, np.uint8, 3 * n, pos).reshape(n, 3)
-            pos += 3 * n
-        if ct is None:
-            raise ValueError("GIF frame has no color table")
-        if pos >= len(payload):
-            raise ValueError("GIF LZW header truncated")
-        mcs = payload[pos]
-        pos += 1
-        stream = bytearray()
-        while True:
-            if pos >= len(payload):
-                raise ValueError("GIF image data sub-blocks truncated")
-            n = payload[pos]
-            pos += 1
-            if n == 0:
-                break
-            stream += payload[pos:pos + n]
-            pos += n
-        idx = np.frombuffer(
-            _gif_lzw_decode(bytes(stream), mcs, fw * fh), np.uint8
-        )
-        if idx.size < fw * fh:
-            raise ValueError(
-                f"GIF frame decodes to {idx.size} pixels, need {fw * fh}"
-            )
-        idx = idx[: fw * fh].reshape(fh, fw)
-        if iflags & 0x40:  # 4-pass row interlace
-            grid = np.zeros_like(idx)
-            rows = np.concatenate([np.arange(0, fh, 8), np.arange(4, fh, 8),
-                                   np.arange(2, fh, 4), np.arange(1, fh, 2)])
-            grid[rows] = idx
-            idx = grid
-        if int(idx.max(initial=0)) >= len(ct):
-            raise ValueError("GIF pixel index out of color-table range")
-        # composite onto the background-filled screen canvas
-        bg_rgb = gct[bg] if gct is not None and bg < len(gct) else \
-            np.zeros(3, np.uint8)
-        canvas = np.empty((sh, sw, 3), np.uint8)
-        canvas[:] = bg_rgb
-        canvas[fy:fy + fh, fx:fx + fw] = ct[idx]
-        if transparent is None:
-            return canvas
-        alpha = np.full((sh, sw), 255, np.uint8)
-        if transparent < len(ct):
-            alpha[fy:fy + fh, fx:fx + fw] = np.where(
-                idx == transparent, 0, 255)
-        return np.dstack([canvas, alpha])
-    raise ValueError("GIF contains no image frame")
 
 
 # IMA ADPCM tables (IMA Recommended Practices / WAV fmt 0x11)
@@ -1299,8 +1119,7 @@ _JPEG_ZIGZAG = [
 ]
 
 _JPEG_MAX_PIXELS = 1 << 26  # 64 Mpx cap: a crafted SOF0 must not OOM an
-# executor. Shared by the numpy-vectorized legs (JPEG/PNG/GIF/BMP/TIFF);
-# webp.py's VP8L leg caps at 16 Mpx — see _MAX_PIXELS there
+# executor. Shared by the numpy-vectorized legs (JPEG/PNG/BMP/TIFF)
 
 
 class _JpegBitReader:
@@ -1868,13 +1687,9 @@ def _jpeg_prog_finish(frame, qt, state):
 def _decode_image_real(payload: bytes, width: int, height: int):
     """The real decode path. Uncompressed 24-bit BMP (decode_bmp), 8-bit
     full-variant PNG (decode_png, stdlib zlib), baseline + progressive
-    huffman JPEG (decode_jpeg), TIFF incl. LZW/Deflate/PackBits/JPEG
-    strips (decode_tiff), GIF (decode_gif), and lossless WebP
-    (webp.decode_webp — VP8L prefix codes + LZ77 + color cache + all
-    four transforms) and lossy VP8 WebP (vp8.decode_vp8_yuv — boolean
-    arithmetic coding, intra prediction, loop filter) all decode
-    IN-CONTAINER with a nearest-neighbor resize; no image format is
-    gated any more."""
+    huffman JPEG (decode_jpeg) and TIFF incl. LZW/Deflate/PackBits/JPEG
+    strips (decode_tiff) decode IN-CONTAINER with a nearest-neighbor
+    resize; every other format is gated behind pillow."""
     img = None
     if payload[:2] == b"BM":
         img = decode_bmp(payload)
@@ -1884,12 +1699,6 @@ def _decode_image_real(payload: bytes, width: int, height: int):
         img = decode_jpeg(payload)
     elif payload[:4] in (b"II*\x00", b"MM\x00*"):
         img = decode_tiff(payload)
-    elif payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from .webp import decode_webp
-
-        img = decode_webp(payload)  # VP8L and lossy VP8 both native
-    elif payload[:6] in (b"GIF87a", b"GIF89a"):
-        img = decode_gif(payload)
     if img is not None:
         import numpy as np
 
@@ -1903,9 +1712,8 @@ def _decode_image_real(payload: bytes, width: int, height: int):
         raise NotImplementedError(
             "remaining exotic image formats require pillow; deterministic "
             "fake used instead (BMP, TIFF incl. LZW/Deflate/PackBits/JPEG "
-            "strips, 8-bit PNG, baseline/progressive JPEG, GIF, and WebP "
-            "— lossless AND lossy — decode natively: decode_bmp/"
-            "decode_tiff/decode_png/decode_jpeg/decode_gif/decode_webp)"
+            "strips, 8-bit PNG and baseline/progressive JPEG decode "
+            "natively: decode_bmp/decode_tiff/decode_png/decode_jpeg)"
         ) from exc
     raise NotImplementedError("real decode wired at deploy time")
 
@@ -1963,9 +1771,9 @@ def image_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow batch per ~10k rows, model/decoder initialized once per batch
     iterator (not per row).
 
-    Oracle-paired: the deterministic byte-stat fake (the stand-in for pixel
-    statistics while the real decoder is import-gated, see
-    _decode_image_real) is itself SQL-expressible, so the whole Arrow
+    Oracle-paired: the deterministic byte-stat fake (``_fake_pixel_stats``,
+    the stand-in for pixel statistics and the call a deployment replaces
+    with a real decoder) is itself SQL-expressible, so the whole Arrow
     round-trip — schema, batching, column alignment — is value-verified
     against DuckDB, not just row-counted. The corpus is ASCII, so byte
     values equal character ordinals on the oracle side."""

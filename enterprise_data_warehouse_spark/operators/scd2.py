@@ -32,8 +32,6 @@ from ..functions.expressions import change_hash
 from ..queries import query
 from ..sources.tables import load_table
 
-HIGH_TS = "9999-12-31 00:00:00"
-
 
 def _hash_expr(tracked: Sequence[str | Column]) -> Column:
     return change_hash(*tracked)

@@ -304,10 +304,7 @@ def load_registry() -> dict[str, QuerySpec]:
     """Import every operator module (each registers its queries) and return
     the populated registry, priority-ordered (see PRIORITY_ORDER)."""
     for mod in _OPERATOR_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            pass  # module not built yet (incremental rounds)
+        importlib.import_module(mod)
     missing = [n for n in PRIORITY_ORDER if n not in REGISTRY]
     assert not missing, f"PRIORITY_ORDER names not in registry: {missing}"
     ordered = {n: REGISTRY[n] for n in PRIORITY_ORDER}

@@ -184,3 +184,37 @@ def test_interleave_ab_interleaves_control_and_movers(monkeypatch, capsys):
     expect = [ab.CONTROL] + ab.ROUNDS * [ab.CONTROL, *ab.DEFAULT_MOVERS]
     assert names == expect
     assert fake.catalog.cleared == len(names) - 1  # every timed run
+
+
+def test_dump_round_plans_writes_round_dir(monkeypatch, tmp_path, capsys):
+    """One plan dumper for every round: argv is `<round> <tag> [query ...]`
+    and each named query's formatted plan lands in
+    plans/<round>/<query>_<tag>.txt."""
+    dump = _tool("dump_round_plans")
+    fake = _FakeSpark()
+
+    class _Df:
+        def __init__(self, name):
+            self.name = name
+
+        def explain(self, mode):
+            print(f"plan of {self.name} ({mode})")
+
+    class _Spec:
+        bench = True
+
+        def __init__(self, name):
+            self.fn = lambda spark, sf_dir, _n=name: _Df(_n)
+
+    monkeypatch.setattr(dump, "REPO", tmp_path)
+    monkeypatch.setattr(dump, "get_spark", lambda app_name: fake)
+    monkeypatch.setattr(dump, "load_registry",
+                        lambda: {n: _Spec(n) for n in ("q_a", "q_b")})
+    dump.main(["r99", "after", "q_b"])
+    written = sorted(p.relative_to(tmp_path).as_posix()
+                     for p in tmp_path.rglob("*.txt"))
+    assert written == ["plans/r99/q_b_after.txt"]
+    assert (tmp_path / "plans/r99/q_b_after.txt").read_text() == (
+        "plan of q_b (formatted)\n"
+    )
+    assert fake.stopped

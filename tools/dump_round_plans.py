@@ -1,7 +1,7 @@
-"""Dump .explain('formatted') for every bench-flagged query to
-plans/r12/<query>_<tag>.txt (tag = before/after). Usage:
+"""Dump .explain('formatted') for every bench-flagged query (or the named
+ones) to plans/<round>/<query>_<tag>.txt (tag = before/after). Usage:
 
-    python tools/dump_r12_plans.py before [query ...]
+    python tools/dump_round_plans.py r13 before [query ...]
 """
 
 from __future__ import annotations
@@ -16,16 +16,18 @@ sys.path.insert(0, str(REPO))
 
 from enterprise_data_warehouse_spark.queries import load_registry  # noqa: E402
 from enterprise_data_warehouse_spark.session import get_spark  # noqa: E402
+from scaling_probe import SF_DIRS  # noqa: E402
 
-SF_DIR = "/root/testdata/sf0.1"
-OUT = REPO / "plans" / "r12"
+SF_DIR = SF_DIRS["0.1"]
 
 
-def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:]
-    OUT.mkdir(parents=True, exist_ok=True)
-    spark = get_spark("plan-dump-r12")
+def main(argv: list[str]) -> None:
+    if len(argv) < 2:
+        sys.exit(__doc__)
+    rnd, tag, names = argv[0], argv[1], argv[2:]
+    out = REPO / "plans" / rnd
+    out.mkdir(parents=True, exist_ok=True)
+    spark = get_spark(f"plan-dump-{rnd}")
     registry = load_registry()
     targets = names or [n for n, s in registry.items() if s.bench]
     for name in targets:
@@ -33,10 +35,10 @@ def main() -> None:
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
-        (OUT / f"{name}_{tag}.txt").write_text(buf.getvalue())
+        (out / f"{name}_{tag}.txt").write_text(buf.getvalue())
         print(f"wrote {name}_{tag}.txt ({len(buf.getvalue())} chars)")
     spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
