@@ -17,10 +17,7 @@ from pyspark.sql.types import StructType
 
 
 def load_csv_seed(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str,
-    delimiter: str = ",",
+    spark: SparkSession, path: str, schema: StructType | str
 ) -> DataFrame:
     """S4: one seed CSV → typed DataFrame. Malformed rows fail the load
     (FAILFAST) — a bad seed should stop the build, not silently null-fill,
@@ -29,7 +26,7 @@ def load_csv_seed(
     return (
         spark.read.schema(schema)
         .option("header", "true")
-        .option("delimiter", delimiter)
+        .option("delimiter", ",")
         .option("mode", "FAILFAST")
         .csv(path)
     )

@@ -1,4 +1,4 @@
-"""Sinks & materialization (SURVEY.md §2.1 S4, S8–S12).
+"""Sinks & materialization (SURVEY.md §2.1 S8–S12).
 
 The reference's materializations (dbt view/table/incremental-merge,
 chunked pandas appends, audit INSERTs) re-expressed as DataFrame writes.
@@ -355,16 +355,6 @@ def incremental_build_partitioned(
                 raise
     if retain_versions is not None:
         t.vacuum(keep=retain_versions)
-
-
-def read_csv_seed(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
-    """S4: CSV seed load (reference setup_dbt_environment.py:350-394)."""
-    reader = spark.read.option("header", True)
-    if schema:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", True)
-    return reader.csv(path)
 
 
 def write_with_audit(

@@ -1,9 +1,8 @@
 """Multimodal plumbing: binary payload typing, column pruning of payloads,
-narrow explode plans, and the import-gated decode stub."""
+narrow explode plans, and the deterministic feature-extraction batch."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql.types import BinaryType, StructType
 
 from enterprise_data_warehouse_spark.operators import multimodal as mm
@@ -50,1957 +49,3 @@ def test_image_features_deterministic(spark):
     assert len(a) > 0
     for row in a:
         assert 0.0 <= row[3] <= 255.0  # mean_intensity in byte range
-
-
-def test_real_decode_is_gated():
-    with pytest.raises(NotImplementedError):
-        mm._decode_image_real(b"\x00", 4, 4)
-
-
-def _make_bmp(img) -> bytes:
-    """Serialize an (H, W, 3) uint8 RGB array as an uncompressed 24-bit
-    BMP (bottom-up, BGR, 4-byte row padding) — the format under test."""
-    import struct
-
-    import numpy as np
-
-    h, w = img.shape[:2]
-    row_bytes = (w * 3 + 3) & ~3
-    body = bytearray()
-    for y in range(h - 1, -1, -1):
-        row = img[y, :, ::-1].astype(np.uint8).tobytes()  # RGB→BGR
-        body += row + b"\x00" * (row_bytes - len(row))
-    data_off = 14 + 40
-    header = struct.pack("<2sIHHI", b"BM", data_off + len(body), 0, 0, data_off)
-    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body),
-                       2835, 2835, 0, 0)
-    return bytes(header + info + body)
-
-
-def _make_wav(samples, rate: int) -> bytes:
-    """Serialize an (n_frames, n_ch) int16 array as a PCM16 RIFF/WAVE."""
-    import struct
-
-    data = samples.astype("<i2").tobytes()
-    n_ch = samples.shape[1]
-    fmt = struct.pack("<HHIIHH", 1, n_ch, rate, rate * n_ch * 2, n_ch * 2, 16)
-    return (b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data))
-            + b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data)
-
-
-def test_bmp_decode_roundtrips_real_pixels():
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, size=(5, 7, 3), dtype=np.uint8)  # odd width → padding
-    decoded = mm.decode_bmp(_make_bmp(img))
-    assert decoded.shape == (5, 7, 3)
-    assert (decoded == img).all()
-    # the real-decode gate routes BMP through decode_bmp with a resize
-    resized = mm._decode_image_real(_make_bmp(img), width=14, height=10)
-    assert resized.shape == (10, 14, 3)
-    assert (resized[0, 0] == img[0, 0]).all()  # nearest-neighbor corners
-    # compressed formats stay gated in this container
-    with pytest.raises(NotImplementedError):
-        mm._decode_image_real(b"\x89PNG...", 4, 4)
-
-
-def test_wav_decode_roundtrips_real_samples():
-    import numpy as np
-
-    t = np.arange(160)
-    stereo = np.stack(
-        [(1000 * np.sin(t / 5)).astype(np.int16),
-         (np.linspace(-3000, 3000, 160)).astype(np.int16)], axis=1
-    )
-    rate, n_ch, out = mm.decode_wav(_make_wav(stereo, 16000))
-    assert (rate, n_ch) == (16000, 2)
-    assert out.shape == (160, 2)
-    assert (out == stereo).all()
-
-
-def _make_wav_fmt(fmt, n_ch, rate, bits, data, block_align=None,
-                  spb=None) -> bytes:
-    """WAV container around arbitrary fmt-code payloads (G.711, float,
-    IMA ADPCM with its samples-per-block extension)."""
-    import struct
-
-    ext = struct.pack("<HH", 2, spb) if spb else b""
-    ba = block_align or max(1, (bits // 8)) * n_ch
-    fmtc = struct.pack("<HHIIHH", fmt, n_ch, rate, rate * ba, ba, bits) + ext
-    return (b"RIFF" + struct.pack("<I", 4 + 8 + len(fmtc) + 8 + len(data))
-            + b"WAVE" + b"fmt " + struct.pack("<I", len(fmtc)) + fmtc
-            + b"data" + struct.pack("<I", len(data)) + data)
-
-
-def test_wav_g711_exact_vs_audioop():
-    """All 256 µ-law and A-law codes expand to exactly the ITU table
-    (audioop is the stdlib reference; skipped where it's been removed)."""
-    import numpy as np
-
-    audioop = pytest.importorskip("audioop")
-    codes = np.arange(256, dtype=np.uint8)
-    want_u = np.frombuffer(audioop.ulaw2lin(codes.tobytes(), 2), np.int16)
-    assert (mm._g711_ulaw_to_int16(codes) == want_u).all()
-    want_a = np.frombuffer(audioop.alaw2lin(codes.tobytes(), 2), np.int16)
-    assert (mm._g711_alaw_to_int16(codes) == want_a).all()
-    # end-to-end through the container
-    rng = np.random.default_rng(21)
-    raw = rng.integers(0, 256, 1000, dtype=np.uint8)
-    rate, n_ch, s = mm.decode_wav(_make_wav_fmt(7, 2, 8000, 8, raw.tobytes()))
-    assert (rate, n_ch) == (8000, 2)
-    assert (s.reshape(-1) == want_u[raw]).all()
-    _, _, s = mm.decode_wav(_make_wav_fmt(6, 1, 8000, 8, raw.tobytes()))
-    assert (s.reshape(-1) == want_a[raw]).all()
-
-
-def test_wav_pcm_widths_and_float():
-    import numpy as np
-
-    rng = np.random.default_rng(22)
-    pcm8 = rng.integers(0, 256, 200, dtype=np.uint8)
-    _, _, s = mm.decode_wav(_make_wav_fmt(1, 1, 22050, 8, pcm8.tobytes()))
-    assert (s.reshape(-1) == ((pcm8.astype(np.int16) - 128) << 8)).all()
-    v24 = rng.integers(-2**23, 2**23, 99, dtype=np.int32)
-    b24 = b"".join(int(x).to_bytes(3, "little", signed=True) for x in v24)
-    _, _, s = mm.decode_wav(_make_wav_fmt(1, 3, 48000, 24, b24))
-    assert (s.reshape(-1) == (v24 >> 8).astype(np.int16)).all()
-    pcm32 = rng.integers(-2**31, 2**31, 100, dtype=np.int64).astype(np.int32)
-    _, _, s = mm.decode_wav(_make_wav_fmt(1, 1, 48000, 32, pcm32.tobytes()))
-    assert (s.reshape(-1) == (pcm32 >> 16).astype(np.int16)).all()
-    f32 = (rng.random(100, dtype=np.float32) * 2 - 1).astype("<f4")
-    _, _, s = mm.decode_wav(_make_wav_fmt(3, 1, 16000, 32, f32.tobytes()))
-    assert (s.reshape(-1)
-            == (np.clip(f32, -1, 1) * 32767).astype(np.int16)).all()
-
-
-def test_wav_ima_adpcm_exact_vs_audioop_mono_and_stereo():
-    """IMA ADPCM blocks decode to the exact integer recurrence: audioop's
-    adpcm2lin (the same IMA core) seeded from each block header must
-    reproduce every post-seed sample, mono and stereo (the stereo path
-    exercises the channel-interleaved 4-byte nibble groups)."""
-    import struct
-
-    import numpy as np
-
-    audioop = pytest.importorskip("audioop")
-    rng = np.random.default_rng(23)
-    for n_ch in (1, 2):
-        spb = 249  # odd nibble count per channel exercises the tail nibble
-        align = 4 * n_ch + (spb - 1) // 2 * n_ch
-        blocks = b""
-        expect_ch = [[] for _ in range(n_ch)]
-        for _ in range(3):
-            packs = []
-            for c in range(n_ch):
-                pred = int(rng.integers(-30000, 30000))
-                idx = int(rng.integers(0, 89))
-                nibs = rng.integers(0, 16, spb - 1).astype(np.uint8)
-                even = np.concatenate([nibs, np.zeros((-len(nibs)) % 2,
-                                                      np.uint8)])
-                # audioop packs the FIRST sample in the HIGH nibble
-                lin, _ = audioop.adpcm2lin(
-                    ((even[0::2] << 4) | even[1::2]).astype(
-                        np.uint8).tobytes(), 2, (pred, idx))
-                expect_ch[c].append(pred)
-                expect_ch[c].extend(
-                    np.frombuffer(lin, np.int16)[: spb - 1].tolist())
-                packed = (even[0::2] | (even[1::2] << 4)).astype(np.uint8)
-                packs.append((struct.pack("<hBB", pred, idx, 0), packed))
-            blocks += b"".join(p[0] for p in packs)
-            # channel-interleaved 4-byte groups
-            streams = [p[1] for p in packs]
-            for g in range(0, len(streams[0]), 4):
-                for c in range(n_ch):
-                    blocks += streams[c][g:g + 4].tobytes()
-        payload = _make_wav_fmt(17, n_ch, 8000, 4, blocks,
-                                block_align=align, spb=spb)
-        rate, ch, s = mm.decode_wav(payload)
-        assert (rate, ch) == (8000, n_ch)
-        assert s.shape == (3 * spb, n_ch)
-        for c in range(n_ch):
-            assert (s[:, c] == np.asarray(expect_ch[c], np.int16)).all(), \
-                (n_ch, c)
-
-
-def test_wav_unsupported_formats_refused_by_name():
-    import numpy as np
-
-    rng = np.random.default_rng(24)
-    raw = rng.integers(0, 256, 64, dtype=np.uint8).tobytes()
-    with pytest.raises(ValueError, match="unsupported WAV format"):
-        mm.decode_wav(_make_wav_fmt(85, 1, 44100, 16, raw))  # MP3-in-WAV
-    with pytest.raises(ValueError, match="unsupported WAV format"):
-        mm.decode_wav(_make_wav_fmt(1, 1, 44100, 12, raw))  # odd width
-    with pytest.raises(ValueError, match="IMA ADPCM"):
-        # fmt 17 without the samples-per-block extension
-        mm.decode_wav(_make_wav_fmt(17, 1, 8000, 4, raw))
-
-
-def test_bmp_decode_through_spark_arrow_boundary(spark):
-    """The decoder running where it runs in production: inside a
-    mapInPandas batch over a binary payload column."""
-    import numpy as np
-    import pandas as pd
-
-    rng = np.random.default_rng(11)
-    imgs = [rng.integers(0, 256, size=(4, 4, 3), dtype=np.uint8) for _ in range(3)]
-    df = spark.createDataFrame(
-        [(i, bytearray(_make_bmp(img))) for i, img in enumerate(imgs)],
-        "img_id int, payload binary",
-    )
-
-    def decode(batches):
-        for pdf in batches:
-            arrs = [mm.decode_bmp(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "img_id": pdf["img_id"],
-                    "mean_px": [float(a.mean()) for a in arrs],
-                    "h": [a.shape[0] for a in arrs],
-                    "w": [a.shape[1] for a in arrs],
-                }
-            )
-
-    got = {r["img_id"]: r for r in
-           df.mapInPandas(decode, "img_id int, mean_px double, h int, w int").collect()}
-    for i, img in enumerate(imgs):
-        assert got[i]["h"] == 4 and got[i]["w"] == 4
-        assert abs(got[i]["mean_px"] - float(img.mean())) < 1e-9
-
-
-def test_bmp_top_down_negative_height_decodes():
-    """biHeight is signed; negative means top-down row storage (legal BMP).
-    A top-down serialization of the same pixels must decode identically."""
-    import struct
-
-    import numpy as np
-
-    rng = np.random.default_rng(13)
-    img = rng.integers(0, 256, size=(3, 5, 3), dtype=np.uint8)
-    h, w = img.shape[:2]
-    row_bytes = (w * 3 + 3) & ~3
-    body = bytearray()
-    for y in range(h):  # top-down: natural row order
-        row = img[y, :, ::-1].astype(np.uint8).tobytes()
-        body += row + b"\x00" * (row_bytes - len(row))
-    data_off = 14 + 40
-    header = struct.pack("<2sIHHI", b"BM", data_off + len(body), 0, 0, data_off)
-    info = struct.pack("<IiiHHIIiiII", 40, w, -h, 1, 24, 0, len(body),
-                       2835, 2835, 0, 0)
-    decoded = mm.decode_bmp(bytes(header + info + body))
-    assert (decoded == img).all()
-
-
-def test_bmp_truncated_pixel_data_raises_clearly():
-    import numpy as np
-
-    img = np.zeros((4, 4, 3), dtype=np.uint8)
-    payload = _make_bmp(img)
-    with pytest.raises(ValueError, match="truncated"):
-        mm.decode_bmp(payload[:-8])
-
-
-def test_wav_malformed_payloads_raise_clearly():
-    import struct
-
-    import numpy as np
-
-    stereo = np.zeros((8, 2), dtype=np.int16)
-    good = _make_wav(stereo, 8000)
-
-    # n_ch = 0 must be a clear format error, not a reshape crash
-    zero_ch = bytearray(good)
-    fmt_body = good.index(b"fmt ") + 8
-    struct.pack_into("<H", zero_ch, fmt_body + 2, 0)
-    with pytest.raises(ValueError, match="channel count"):
-        mm.decode_wav(bytes(zero_ch))
-
-    # data size field exceeding the payload must not silently truncate
-    oversize = bytearray(good)
-    data_hdr = good.index(b"data") + 4
-    struct.pack_into("<I", oversize, data_hdr, 10_000)
-    with pytest.raises(ValueError, match="declares"):
-        mm.decode_wav(bytes(oversize))
-
-    # payload cut mid-frame (odd sample split across channels)
-    cut = bytearray(good[:-2])
-    struct.pack_into("<I", cut, data_hdr, len(stereo.tobytes()) - 2)
-    with pytest.raises(ValueError, match="mid-frame"):
-        mm.decode_wav(bytes(cut))
-
-
-def _make_png(img, filters=None) -> bytes:
-    """Serialize an (H, W, C) uint8 array as an 8-bit non-interlaced PNG,
-    applying the given per-row filter types (cycling 0..4 by default) so
-    the decoder's filter-reversal paths are all exercised."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    h, w, c = img.shape
-    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[c]
-    filters = filters or [y % 5 for y in range(h)]
-
-    def chunk(ctype, body):
-        return (struct.pack(">I", len(body)) + ctype + body
-                + struct.pack(">I", zlib.crc32(ctype + body)))
-
-    flat = img.reshape(h, w * c).astype(np.int32)
-    stream = bytearray()
-    prev = np.zeros(w * c, np.int32)
-    for y in range(h):
-        row, ftype = flat[y], filters[y]
-        if ftype == 0:
-            filt = row
-        elif ftype == 1:
-            left = np.concatenate([np.zeros(c, np.int32), row[:-c]])
-            filt = row - left
-        elif ftype == 2:
-            filt = row - prev
-        elif ftype == 3:
-            left = np.concatenate([np.zeros(c, np.int32), row[:-c]])
-            filt = row - ((left + prev) >> 1)
-        else:
-            filt = row.copy()
-            for i in range(w * c):
-                a = int(row[i - c]) if i >= c else 0
-                b = int(prev[i])
-                cc = int(prev[i - c]) if i >= c else 0
-                pa, pb, pc = abs(b - cc), abs(a - cc), abs(a + b - 2 * cc)
-                pred = a if pa <= pb and pa <= pc else (b if pb <= pc else cc)
-                filt[i] = row[i] - pred
-        stream += bytes([ftype]) + (filt & 0xFF).astype(np.uint8).tobytes()
-        prev = row
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(stream)))
-            + chunk(b"IEND", b""))
-
-
-def test_png_decode_roundtrips_all_filter_types():
-    import numpy as np
-
-    rng = np.random.default_rng(17)
-    # ≥5 rows so every filter type (None/Sub/Up/Average/Paeth) appears
-    for channels in (1, 3, 4):
-        img = rng.integers(0, 256, size=(6, 5, channels), dtype=np.uint8)
-        decoded = mm.decode_png(_make_png(img))
-        assert decoded.shape == img.shape
-        assert (decoded == img).all(), f"channels={channels}"
-    # each filter type alone, on a gradient image where predictions matter
-    grad = (np.arange(6 * 5 * 3, dtype=np.uint8).reshape(6, 5, 3) * 7)
-    for f in range(5):
-        decoded = mm.decode_png(_make_png(grad, filters=[f] * 6))
-        assert (decoded == grad).all(), f"filter={f}"
-
-
-def test_png_decode_through_real_gate_with_resize():
-    import numpy as np
-
-    rng = np.random.default_rng(19)
-    img = rng.integers(0, 256, size=(4, 4, 3), dtype=np.uint8)
-    resized = mm._decode_image_real(_make_png(img), width=8, height=8)
-    assert resized.shape == (8, 8, 3)
-    assert (resized[0, 0] == img[0, 0]).all()
-
-
-def test_png_unsupported_variants_raise_clearly():
-    import struct
-    import zlib
-
-    import numpy as np
-
-    img = np.zeros((2, 2, 3), dtype=np.uint8)
-    good = _make_png(img)
-
-    with pytest.raises(ValueError, match="not a PNG"):
-        mm.decode_png(b"JFIF....")
-
-    # since r09 depth 16 / palette / Adam7 all DECODE (see the variant
-    # tests below); flipping only the IHDR byte leaves the stream sized
-    # for the old layout, which must still refuse cleanly, never crash
-    deep = bytearray(good)
-    deep[8 + 8 + 8] = 16  # IHDR bit_depth byte, stream still 8-bit sized
-    with pytest.raises(ValueError, match="expected|inflates"):
-        mm.decode_png(bytes(deep))
-
-    # palette color type without a PLTE chunk
-    pal = bytearray(good)
-    pal[8 + 8 + 8] = 8
-    pal[8 + 8 + 9] = 3  # IHDR color_type byte
-    with pytest.raises(ValueError, match="PLTE"):
-        mm.decode_png(bytes(pal))
-
-    # illegal depth/color combination
-    deep2 = bytearray(good)
-    deep2[8 + 8 + 8] = 2  # depth 2 is illegal for truecolor
-    with pytest.raises(ValueError, match="depth/color"):
-        mm.decode_png(bytes(deep2))
-
-    # interlace byte flipped: per-pass stream sizes no longer match
-    lace = bytearray(good)
-    lace[8 + 8 + 12] = 1  # IHDR interlace byte
-    with pytest.raises(ValueError, match="expected|inflates"):
-        mm.decode_png(bytes(lace))
-
-    # unknown interlace method
-    lace2 = bytearray(good)
-    lace2[8 + 8 + 12] = 2
-    with pytest.raises(ValueError, match="interlace"):
-        mm.decode_png(bytes(lace2))
-
-
-def _make_png_variant(samples, color_type, depth, palette=None, trns=None,
-                      interlace=0, filters=None) -> bytes:
-    """Full-variant PNG test encoder: any legal depth/color combination,
-    optional PLTE/tRNS, Adam7 interlacing (pass grid imported from the
-    decoder's table — the exactly-once cover is pinned separately), and
-    None/Sub/Up filters. ``samples`` is (H, W, C) uint16 (palette: C=1
-    of indices; depth 16 uses the full range)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    def chunk(ctype, body):
-        return (struct.pack(">I", len(body)) + ctype + body
-                + struct.pack(">I", zlib.crc32(ctype + body)))
-
-    def pack_row(row, d):
-        flat = row.reshape(-1)
-        if d == 8:
-            return flat.astype(np.uint8).tobytes()
-        if d == 16:
-            return flat.astype(">u2").tobytes()
-        bits = ((flat[:, None] >> np.arange(d - 1, -1, -1)) & 1).astype(
-            np.uint8).reshape(-1)
-        bits = np.concatenate([bits, np.zeros((-len(bits)) % 8, np.uint8)])
-        return np.packbits(bits).tobytes()
-
-    h, w, c = samples.shape
-    stream = bytearray()
-    fi = 0
-    passes = [(0, 0, 1, 1)] if interlace == 0 else mm._PNG_ADAM7
-    for x0, y0, dx, dy in passes:
-        sub = samples[y0::dy, x0::dx]
-        ph, pw = sub.shape[:2]
-        if not ph or not pw:
-            continue
-        prev = None
-        for y in range(ph):
-            rb = np.frombuffer(pack_row(sub[y], depth), np.uint8).astype(
-                np.int16)
-            ft = (filters[fi % len(filters)] if filters else 0)
-            fi += 1
-            bpp = max(1, c * depth // 8)
-            if ft == 1 and len(rb) > bpp:
-                out = rb - np.concatenate(
-                    [np.zeros(bpp, np.int16), rb[:-bpp]])
-            elif ft == 2:
-                out = rb - (prev if prev is not None else 0)
-            else:
-                ft = 0
-                out = rb
-            stream += bytes([ft]) + (out & 0xFF).astype(np.uint8).tobytes()
-            prev = rb
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, color_type, 0, 0, interlace)
-    out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-    if palette is not None:
-        out += chunk(b"PLTE", palette.astype(np.uint8).tobytes())
-    if trns is not None:
-        out += chunk(b"tRNS", bytes(trns))
-    return out + chunk(b"IDAT", zlib.compress(bytes(stream))) \
-        + chunk(b"IEND", b"")
-
-
-def test_png_adam7_pass_grid_covers_exactly_once():
-    import numpy as np
-
-    for h, w in ((1, 1), (1, 3), (8, 8), (13, 11), (21, 17)):
-        g = np.zeros((h, w), int)
-        for x0, y0, dx, dy in mm._PNG_ADAM7:
-            g[y0::dy, x0::dx] += 1
-        assert (g == 1).all(), (h, w)
-    # the spec's canonical 8x8 pass-number pattern
-    pat = np.zeros((8, 8), int)
-    for i, (x0, y0, dx, dy) in enumerate(mm._PNG_ADAM7):
-        pat[y0::dy, x0::dx] = i + 1
-    assert pat[0].tolist() == [1, 6, 4, 6, 2, 6, 4, 6]
-    assert pat[4].tolist() == [3, 6, 4, 6, 3, 6, 4, 6]
-    assert (pat[1::2] == 7).all() and (pat[2::4, ::2] == 5).all()
-
-
-def test_png_subbyte_gray_depths_decode_scaled():
-    import numpy as np
-
-    rng = np.random.default_rng(5)
-    for d in (1, 2, 4):
-        idx = rng.integers(0, 1 << d, (13, 11, 1)).astype(np.uint16)
-        want = (idx * (255 // ((1 << d) - 1))).astype(np.uint8)
-        for il in (0, 1):
-            got = mm.decode_png(
-                _make_png_variant(idx, 0, d, interlace=il))
-            assert (got == want).all(), (d, il)
-
-
-def test_png_16bit_decodes_high_byte():
-    import numpy as np
-
-    rng = np.random.default_rng(6)
-    for ct, c in ((0, 1), (2, 3), (4, 2), (6, 4)):
-        img = rng.integers(0, 65536, (9, 14, c)).astype(np.uint16)
-        for il in (0, 1):
-            got = mm.decode_png(
-                _make_png_variant(img, ct, 16, interlace=il))
-            assert (got == (img >> 8).astype(np.uint8)).all(), (ct, il)
-
-
-def test_png_palette_with_and_without_trns():
-    import numpy as np
-
-    rng = np.random.default_rng(8)
-    for d in (1, 2, 4, 8):
-        n = 1 << d
-        pal = rng.integers(0, 256, (n, 3)).astype(np.uint8)
-        idx = rng.integers(0, n, (15, 12, 1)).astype(np.uint16)
-        got = mm.decode_png(_make_png_variant(idx, 3, d, palette=pal))
-        assert (got == pal[idx[..., 0]]).all(), d
-        trns = list(rng.integers(0, 256, min(n, 4)))
-        alpha = np.full(n, 255, np.uint8)
-        alpha[: len(trns)] = trns
-        want = np.dstack([pal[idx[..., 0]], alpha[idx[..., 0]]])
-        got = mm.decode_png(_make_png_variant(
-            idx, 3, d, palette=pal, trns=trns, interlace=1))
-        assert got.shape[-1] == 4 and (got == want).all(), d
-
-
-def test_png_adam7_roundtrips_all_color_types_and_tiny_shapes():
-    import numpy as np
-
-    rng = np.random.default_rng(9)
-    for ct, c in ((0, 1), (2, 3), (4, 2), (6, 4)):
-        img = rng.integers(0, 256, (21, 17, c)).astype(np.uint16)
-        got = mm.decode_png(_make_png_variant(
-            img, ct, 8, interlace=1, filters=[0, 1, 2]))
-        assert (got == img.astype(np.uint8)).all(), ct
-    for h, w in ((1, 1), (1, 3), (3, 1), (2, 2), (5, 5), (9, 9)):
-        img = rng.integers(0, 256, (h, w, 3)).astype(np.uint16)
-        got = mm.decode_png(_make_png_variant(img, 2, 8, interlace=1))
-        assert (got == img.astype(np.uint8)).all(), (h, w)
-
-
-def test_png_palette_index_out_of_range_rejected():
-    import numpy as np
-
-    pal = np.zeros((4, 3), np.uint8)  # 4 entries, but depth-8 indices
-    idx = np.full((3, 3, 1), 200, np.uint16)
-    with pytest.raises(ValueError, match="PLTE range"):
-        mm.decode_png(_make_png_variant(idx, 3, 8, palette=pal))
-
-
-def test_png_truncated_stream_rejected():
-    import struct
-    import zlib
-
-    # truncated pixel stream: fewer rows than IHDR declares
-    short_stream = zlib.compress(b"\x00" + b"\x00" * 6)  # 1 row, IHDR says 2
-    def chunk(ctype, body):
-        return (struct.pack(">I", len(body)) + ctype + body
-                + struct.pack(">I", zlib.crc32(ctype + body)))
-    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0)
-    broken = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-              + chunk(b"IDAT", short_stream) + chunk(b"IEND", b""))
-    with pytest.raises(ValueError, match="expected"):
-        mm.decode_png(broken)
-
-
-def test_png_decode_through_spark_arrow_boundary(spark):
-    """decode_png where it runs in production: inside mapInPandas over a
-    binary payload column."""
-    import numpy as np
-    import pandas as pd
-
-    rng = np.random.default_rng(23)
-    imgs = [rng.integers(0, 256, size=(4, 4, 3), dtype=np.uint8) for _ in range(3)]
-    df = spark.createDataFrame(
-        [(i, bytearray(_make_png(img))) for i, img in enumerate(imgs)],
-        "img_id int, payload binary",
-    )
-
-    def decode(batches):
-        for pdf in batches:
-            arrs = [mm.decode_png(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "img_id": pdf["img_id"],
-                    "mean_px": [float(a.mean()) for a in arrs],
-                }
-            )
-
-    got = {r["img_id"]: r["mean_px"] for r in
-           df.mapInPandas(decode, "img_id int, mean_px double").collect()}
-    for i, img in enumerate(imgs):
-        assert abs(got[i] - float(img.mean())) < 1e-9
-
-
-def test_png_decompression_bomb_rejected_before_allocation():
-    """A small IDAT that inflates far past the declared dimensions must be
-    rejected by the bounded inflate, never fully materialized."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    def chunk(ctype, body):
-        return (struct.pack(">I", len(body)) + ctype + body
-                + struct.pack(">I", zlib.crc32(ctype + body)))
-
-    # declares 2x2 RGB (expected 14 bytes) but inflates to ~50 MB
-    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0)
-    bomb = zlib.compress(b"\x00" * (50 << 20), 9)  # ~50 KB compressed
-    payload = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-               + chunk(b"IDAT", bomb) + chunk(b"IEND", b""))
-    with pytest.raises(ValueError, match="inflates past"):
-        mm.decode_png(payload)
-
-    # a legitimate image of the same dimensions still decodes
-    img = np.zeros((2, 2, 3), dtype=np.uint8)
-    assert mm.decode_png(_make_png(img)).shape == (2, 2, 3)
-
-
-def test_truncated_headers_raise_value_error_not_struct_error():
-    import struct
-    import zlib
-
-    import numpy as np
-
-    # BMP cut inside the info header
-    img = np.zeros((2, 2, 3), dtype=np.uint8)
-    with pytest.raises(ValueError, match="header truncated"):
-        mm.decode_bmp(_make_bmp(img)[:20])
-
-    # PNG IHDR declaring fewer than 13 bytes
-    def chunk(ctype, body):
-        return (struct.pack(">I", len(body)) + ctype + body
-                + struct.pack(">I", zlib.crc32(ctype + body)))
-
-    short_ihdr = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", b"\x00" * 8)
-                  + chunk(b"IEND", b""))
-    with pytest.raises(ValueError, match="IHDR chunk truncated"):
-        mm.decode_png(short_ihdr)
-
-    # WAV payload ending inside the fmt body
-    stereo = np.zeros((4, 2), dtype=np.int16)
-    good = _make_wav(stereo, 8000)
-    cut_in_fmt = good[: good.index(b"fmt ") + 8 + 6]
-    with pytest.raises(ValueError, match="fmt chunk truncated"):
-        mm.decode_wav(cut_in_fmt)
-
-
-# --- baseline JPEG test encoder (decoder-independent reference) ---------------
-
-# standard Annex K DC code lengths (multi-length canonical codes — exercises
-# the decoder's variable-length walk); AC uses flat 8-bit canonical codes
-# (162 symbols < 255), equally valid per T.81 since tables travel in DHT
-_JPEG_DC_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-_JPEG_DC_VALS = list(range(12))
-_JPEG_AC_VALS = [0x00, 0xF0] + [
-    (r << 4) | s for r in range(16) for s in range(1, 11)
-]
-_JPEG_AC_BITS = [0, 0, 0, 0, 0, 0, 0, len(_JPEG_AC_VALS), 0, 0, 0, 0, 0, 0, 0, 0]
-
-
-def _huff_codes(bits, vals):
-    out, code, k = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[vals[k]] = (length, code)
-            code += 1
-            k += 1
-        code <<= 1
-    return out
-
-
-class _JpegBitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc, self.n = 0, 0
-
-    def write(self, length, code):
-        self.acc = (self.acc << length) | code
-        self.n += length
-        while self.n >= 8:
-            self.n -= 8
-            b = (self.acc >> self.n) & 0xFF
-            self.out.append(b)
-            if b == 0xFF:
-                self.out.append(0x00)  # byte stuffing
-
-    def pad(self):
-        if self.n:
-            self.write(8 - self.n, (1 << (8 - self.n)) - 1)  # pad with 1s
-
-
-def _dct_basis():
-    import numpy as np
-
-    u = np.arange(8)
-    T = np.cos((2 * u[None, :] + 1) * u[:, None] * np.pi / 16) / 2
-    T[0] /= np.sqrt(2)
-    return T
-
-
-def _encode_block(writer, block, q, pred, dc_codes, ac_codes, T):
-    import numpy as np
-
-    from enterprise_data_warehouse_spark.operators.multimodal import _JPEG_ZIGZAG
-
-    coefs = T @ (block.astype(np.float64) - 128.0) @ T.T
-    quant = np.round(coefs / q).astype(np.int64)
-    zz = quant.reshape(64)[_JPEG_ZIGZAG]
-
-    def put(v, codes, run=0):
-        s = int(abs(v)).bit_length()
-        writer.write(*codes[(run << 4) | s if codes is ac_codes else s])
-        if s:
-            writer.write(s, int(v) if v > 0 else int(v) + (1 << s) - 1)
-
-    put(int(zz[0]) - pred, dc_codes)
-    run = 0
-    for k in range(1, 64):
-        if zz[k] == 0:
-            run += 1
-            continue
-        while run > 15:
-            writer.write(*ac_codes[0xF0])  # ZRL
-            run -= 16
-        put(int(zz[k]), ac_codes, run)
-        run = 0
-    if run:
-        writer.write(*ac_codes[0x00])  # EOB
-    return int(zz[0])
-
-
-def _jpeg_prep_planes(img, subsampling):
-    """Color-transform, downsample, and MCU-pad the component planes —
-    shared by the baseline and progressive test encoders. Returns
-    (comp_planes, samp, qmap, mcus_x, mcus_y, gray)."""
-    import numpy as np
-
-    h, w = img.shape[:2]
-    gray = img.shape[2] == 1
-    if gray:
-        planes = [img[:, :, 0].astype(np.float64)]
-        samp, qmap = [(1, 1)], [0]
-    else:
-        rgb = img.astype(np.float64)
-        y = 0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2]
-        cb = -0.168736 * rgb[..., 0] - 0.331264 * rgb[..., 1] + 0.5 * rgb[..., 2] + 128
-        cr = 0.5 * rgb[..., 0] - 0.418688 * rgb[..., 1] - 0.081312 * rgb[..., 2] + 128
-        planes = [y, cb, cr]
-        samp = [(2, 2), (1, 1), (1, 1)] if subsampling == "420" else \
-               [(1, 1), (1, 1), (1, 1)]
-        qmap = [0, 1, 1]
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcus_x, mcus_y = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-
-    comp_planes = []
-    for (hi, vi), plane in zip(samp, planes):
-        if hi < hmax or vi < vmax:  # box-mean downsample
-            fy, fx = vmax // vi, hmax // hi
-            ph = -(-plane.shape[0] // fy) * fy
-            pw = -(-plane.shape[1] // fx) * fx
-            padded = np.pad(plane, ((0, ph - plane.shape[0]),
-                                    (0, pw - plane.shape[1])), mode="edge")
-            plane = padded.reshape(ph // fy, fy, pw // fx, fx).mean(axis=(1, 3))
-        th, tw = mcus_y * vi * 8, mcus_x * hi * 8
-        comp_planes.append(np.pad(
-            plane, ((0, th - plane.shape[0]), (0, tw - plane.shape[1])),
-            mode="edge"))
-    return comp_planes, samp, qmap, mcus_x, mcus_y, gray
-
-
-def _make_jpeg(img, subsampling="444", q_luma=1, q_chroma=1,
-               restart_interval=0) -> bytes:
-    """Serialize an (H, W, 3) RGB or (H, W, 1) grayscale uint8 array as a
-    BASELINE sequential-DCT JPEG (SOF0). q_*: flat quant-table values
-    (1 = near-lossless). subsampling: '444' or '420' (3-channel only)."""
-    import struct
-
-    import numpy as np
-
-    h, w = img.shape[:2]
-    T = _dct_basis()
-    ql = np.full((8, 8), q_luma, np.int32)
-    qc = np.full((8, 8), q_chroma, np.int32)
-    dc_codes = _huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-
-    comp_planes, samp, qmap, mcus_x, mcus_y, gray = _jpeg_prep_planes(
-        img, subsampling)
-    planes = comp_planes
-
-    writer = _JpegBitWriter()
-    pred = [0] * len(planes)
-    rst = 0
-    for m in range(mcus_x * mcus_y):
-        if restart_interval and m and m % restart_interval == 0:
-            writer.pad()
-            writer.out += bytes([0xFF, 0xD0 + rst % 8])
-            rst += 1
-            pred = [0] * len(planes)
-        my, mx = divmod(m, mcus_x)
-        for ci, ((hi, vi), plane) in enumerate(zip(samp, comp_planes)):
-            q = ql if qmap[ci] == 0 else qc
-            for by in range(vi):
-                for bx in range(hi):
-                    y0, x0 = (my * vi + by) * 8, (mx * hi + bx) * 8
-                    pred[ci] = _encode_block(
-                        writer, plane[y0:y0 + 8, x0:x0 + 8], q,
-                        pred[ci], dc_codes, ac_codes, T)
-    writer.pad()
-
-    from enterprise_data_warehouse_spark.operators.multimodal import _JPEG_ZIGZAG
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    dqt = bytes([0]) + bytes(ql.reshape(64)[_JPEG_ZIGZAG].astype(np.uint8))
-    if not gray:
-        dqt += bytes([1]) + bytes(qc.reshape(64)[_JPEG_ZIGZAG].astype(np.uint8))
-    out += seg(0xDB, dqt)
-    sof = struct.pack(">BHHB", 8, h, w, len(planes))
-    for ci, (hi, vi) in enumerate(samp):
-        sof += bytes([ci + 1, (hi << 4) | vi, qmap[ci]])
-    out += seg(0xC0, sof)
-    dht = (bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-           + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS))
-    if not gray:
-        dht += (bytes([0x01]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-                + bytes([0x11]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS))
-    out += seg(0xC4, dht)
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    sos = bytes([len(planes)])
-    for ci in range(len(planes)):
-        td_ta = 0x00 if qmap[ci] == 0 else 0x11
-        sos += bytes([ci + 1, td_ta])
-    sos += bytes([0, 63, 0])
-    out += seg(0xDA, sos)
-    out += writer.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-# progressive AC table: the baseline flat table plus the EOBn symbols
-# (r<<4, r=1..14) progressive EOB runs need — 176 codes, still flat 8-bit
-_JPEG_ACP_VALS = ([0x00, 0xF0] + [r << 4 for r in range(1, 15)]
-                  + [(r << 4) | s for r in range(16) for s in range(1, 11)])
-_JPEG_ACP_BITS = [0, 0, 0, 0, 0, 0, 0, len(_JPEG_ACP_VALS), 0, 0, 0, 0, 0, 0, 0, 0]
-
-
-def _quantized_zigzag(comp_planes, samp, qmap, ql, qc, T):
-    """Per-component (blocks_y, blocks_x, 64) quantized coefficients in
-    ZIGZAG order — the shared input for all progressive scans."""
-    import numpy as np
-
-    from enterprise_data_warehouse_spark.operators.multimodal import _JPEG_ZIGZAG
-
-    out = []
-    for ci, plane in enumerate(comp_planes):
-        q = ql if qmap[ci] == 0 else qc
-        bh, bw = plane.shape[0] // 8, plane.shape[1] // 8
-        zz = np.zeros((bh, bw, 64), np.int64)
-        for by in range(bh):
-            for bx in range(bw):
-                block = plane[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8]
-                coefs = T @ (block - 128.0) @ T.T
-                zz[by, bx] = np.round(coefs / q).reshape(64)[_JPEG_ZIGZAG]
-        out.append(zz)
-    return out
-
-
-class _EobRun:
-    """EOB-run + buffered-correction-bit state for one progressive AC
-    scan (mirrors libjpeg's EOBRUN/BE bookkeeping)."""
-
-    def __init__(self, writer, ac_codes):
-        self.writer, self.ac_codes = writer, ac_codes
-        self.run = 0
-        self.bits: list[int] = []
-
-    def flush(self):
-        if self.run:
-            r = self.run.bit_length() - 1
-            self.writer.write(*self.ac_codes[r << 4])
-            if r:
-                self.writer.write(r, self.run - (1 << r))
-            self.run = 0
-        for b in self.bits:
-            self.writer.write(1, b)
-        self.bits.clear()
-
-
-def _enc_ac_first_block(zzblk, eob, writer, ac_codes, ss, se, al):
-    r = 0
-    for k in range(ss, se + 1):
-        v = int(zzblk[k])
-        t = abs(v) >> al
-        if t == 0:
-            r += 1
-            continue
-        eob.flush()
-        while r > 15:
-            writer.write(*ac_codes[0xF0])
-            r -= 16
-        s = t.bit_length()
-        writer.write(*ac_codes[(r << 4) | s])
-        writer.write(s, t if v > 0 else (1 << s) - 1 - t)
-        r = 0
-    if r > 0:
-        eob.run += 1
-        if eob.run == 0x7FFF:
-            eob.flush()
-
-
-def _enc_ac_refine_block(zzblk, eob, writer, ac_codes, ss, se, al):
-    # history magnitude = |v| >> (Al+1); this scan appends bit Al
-    absv = [abs(int(zzblk[k])) >> al for k in range(ss, se + 1)]
-    last_new = -1
-    for i, t in enumerate(absv):
-        if t == 1:
-            last_new = i
-    r = 0
-    br: list[int] = []
-    for i, t in enumerate(absv):
-        if t == 0:
-            r += 1
-            continue
-        while r > 15 and i <= last_new:
-            eob.flush()
-            writer.write(*ac_codes[0xF0])
-            r -= 16
-            for b in br:
-                writer.write(1, b)
-            br.clear()
-        if t > 1:  # already significant: buffer its correction bit
-            br.append(t & 1)
-            continue
-        eob.flush()
-        writer.write(*ac_codes[(r << 4) | 1])
-        writer.write(1, 1 if int(zzblk[ss + i]) > 0 else 0)
-        for b in br:
-            writer.write(1, b)
-        br.clear()
-        r = 0
-    if r > 0 or br:
-        eob.run += 1
-        eob.bits.extend(br)
-        if eob.run == 0x7FFF:
-            eob.flush()
-
-
-def _make_progressive_jpeg(img, subsampling="444", q_luma=1, q_chroma=1,
-                           restart_interval=0) -> bytes:
-    """Serialize as PROGRESSIVE JPEG (SOF2) with a full successive-
-    approximation script: interleaved DC first (Al=1) → DC refine, then
-    per component AC first Ss=1..63 (Al=1) → AC refine (Ah=1, Al=0) —
-    exercising spectral selection, both bit planes, EOB runs with
-    buffered correction bits, ZRL, multi-scan accumulation, and (when
-    ``restart_interval`` is set) per-scan RSTn resync with DC-pred and
-    EOB-run resets."""
-    import struct
-
-    import numpy as np
-
-    h, w = img.shape[:2]
-    T = _dct_basis()
-    ql = np.full((8, 8), q_luma, np.int32)
-    qc = np.full((8, 8), q_chroma, np.int32)
-    dc_codes = _huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _huff_codes(_JPEG_ACP_BITS, _JPEG_ACP_VALS)
-
-    comp_planes, samp, qmap, mcus_x, mcus_y, gray = _jpeg_prep_planes(
-        img, subsampling)
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    zzs = _quantized_zigzag(comp_planes, samp, qmap, ql, qc, T)
-    ncomp = len(comp_planes)
-    # true (non-padded) block grid per component — AC scans cover this
-    dims = []
-    for hi, vi in samp:
-        comp_w = (w * hi + hmax - 1) // hmax
-        comp_h = (h * vi + vmax - 1) // vmax
-        dims.append(((comp_w + 7) // 8, (comp_h + 7) // 8))
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    def sos(comps_td_ta, ss, se, ah, al):
-        body = bytes([len(comps_td_ta)])
-        for cs, td, ta in comps_td_ta:
-            body += bytes([cs, (td << 4) | ta])
-        body += bytes([ss, se, (ah << 4) | al])
-        return seg(0xDA, body)
-
-    def rst_marker(wtr, count):
-        wtr.pad()
-        wtr.out += bytes([0xFF, 0xD0 + count % 8])
-
-    def dc_scan(ah, al):
-        wtr = _JpegBitWriter()
-        pred = [0] * ncomp
-        rst = 0
-        for m in range(mcus_x * mcus_y):
-            if restart_interval and m and m % restart_interval == 0:
-                rst_marker(wtr, rst)
-                rst += 1
-                pred = [0] * ncomp
-            my, mx = divmod(m, mcus_x)
-            for ci, (hi, vi) in enumerate(samp):
-                for by in range(vi):
-                    for bx in range(hi):
-                        dc = int(zzs[ci][my * vi + by, mx * hi + bx, 0])
-                        if ah == 0:  # first: DPCM of the arithmetic shift
-                            v = dc >> al
-                            diff = v - pred[ci]
-                            pred[ci] = v
-                            s = abs(diff).bit_length()
-                            wtr.write(*dc_codes[s])
-                            if s:
-                                wtr.write(
-                                    s, diff if diff > 0 else diff + (1 << s) - 1)
-                        else:  # refine: one bit per block
-                            wtr.write(1, (dc >> al) & 1)
-        wtr.pad()
-        return bytes(wtr.out)
-
-    def ac_scan(ci, ah, al, ss=1, se=63):
-        wtr = _JpegBitWriter()
-        eob = _EobRun(wtr, ac_codes)
-        bw, bh = dims[ci]
-        rst = 0
-        for u in range(bw * bh):
-            if restart_interval and u and u % restart_interval == 0:
-                eob.flush()  # EOB runs and buffered bits never cross RSTn
-                rst_marker(wtr, rst)
-                rst += 1
-            by, bx = divmod(u, bw)
-            blk = zzs[ci][by, bx]
-            if ah == 0:
-                _enc_ac_first_block(blk, eob, wtr, ac_codes, ss, se, al)
-            else:
-                _enc_ac_refine_block(blk, eob, wtr, ac_codes, ss, se, al)
-        eob.flush()
-        wtr.pad()
-        return bytes(wtr.out)
-
-    from enterprise_data_warehouse_spark.operators.multimodal import _JPEG_ZIGZAG
-
-    out = bytearray(b"\xff\xd8")
-    dqt = bytes([0]) + bytes(ql.reshape(64)[_JPEG_ZIGZAG].astype(np.uint8))
-    if not gray:
-        dqt += bytes([1]) + bytes(qc.reshape(64)[_JPEG_ZIGZAG].astype(np.uint8))
-    out += seg(0xDB, dqt)
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for ci, (hi, vi) in enumerate(samp):
-        sof += bytes([ci + 1, (hi << 4) | vi, qmap[ci]])
-    out += seg(0xC2, sof)  # SOF2 progressive
-    dht = (bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-           + bytes([0x10]) + bytes(_JPEG_ACP_BITS) + bytes(_JPEG_ACP_VALS))
-    out += seg(0xC4, dht)
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    # scan script: DC first (all comps, Al=1), DC refine, then per-comp
-    # AC first (Al=1) and AC refine (Ah=1, Al=0)
-    all_comps = [(ci + 1, 0, 0) for ci in range(ncomp)]
-    out += sos(all_comps, 0, 0, 0, 1) + dc_scan(0, 1)
-    out += sos(all_comps, 0, 0, 1, 0) + dc_scan(1, 0)
-    # split spectral bands (the cjpeg default script shape: 1-5 then 6-63)
-    for ci in range(ncomp):
-        out += sos([(ci + 1, 0, 0)], 1, 5, 0, 1) + ac_scan(ci, 0, 1, 1, 5)
-        out += sos([(ci + 1, 0, 0)], 6, 63, 0, 1) + ac_scan(ci, 0, 1, 6, 63)
-    for ci in range(ncomp):
-        out += sos([(ci + 1, 0, 0)], 1, 5, 1, 0) + ac_scan(ci, 1, 0, 1, 5)
-        out += sos([(ci + 1, 0, 0)], 6, 63, 1, 0) + ac_scan(ci, 1, 0, 6, 63)
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def test_jpeg_decode_reconstruction_error_bounds():
-    """Quantized DCT is lossy, so pin ERROR BOUNDS, not identity: with
-    flat q=1 tables (near-lossless) 4:4:4 reconstruction stays within a
-    few levels everywhere."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    img = rng.integers(0, 256, size=(24, 24, 3), dtype=np.uint8)
-    decoded = mm.decode_jpeg(_make_jpeg(img, "444"))
-    assert decoded.shape == img.shape
-    err = np.abs(decoded.astype(np.int32) - img.astype(np.int32))
-    assert err.max() <= 6, err.max()
-    assert err.mean() <= 2.0, err.mean()
-
-
-def test_jpeg_decode_grayscale_and_nonmultiple_dims():
-    import numpy as np
-
-    rng = np.random.default_rng(5)
-    img = rng.integers(0, 256, size=(13, 19, 1), dtype=np.uint8)  # crop path
-    decoded = mm.decode_jpeg(_make_jpeg(img))
-    assert decoded.shape == (13, 19, 1)
-    err = np.abs(decoded.astype(np.int32) - img.astype(np.int32))
-    assert err.max() <= 6, err.max()
-
-
-def test_jpeg_decode_420_subsampling():
-    """4:2:0: chroma is box-subsampled, so use gray-content RGB (constant
-    chroma — subsampling exact) for a tight bound, plus a smooth gradient
-    under a loose bound."""
-    import numpy as np
-
-    rng = np.random.default_rng(3)
-    g = rng.integers(0, 256, size=(20, 28), dtype=np.uint8)
-    img = np.stack([g, g, g], axis=-1)
-    decoded = mm.decode_jpeg(_make_jpeg(img, "420"))
-    assert decoded.shape == img.shape
-    err = np.abs(decoded.astype(np.int32) - img.astype(np.int32))
-    assert err.max() <= 6, err.max()
-
-    yy, xx = np.mgrid[0:32, 0:32]
-    smooth = np.stack([(yy * 8) % 256, (xx * 8) % 256,
-                       ((yy + xx) * 4) % 256], axis=-1).astype(np.uint8)
-    dec2 = mm.decode_jpeg(_make_jpeg(smooth, "420"))
-    err2 = np.abs(dec2.astype(np.int32) - smooth.astype(np.int32))
-    assert err2.mean() <= 12.0, err2.mean()
-
-
-def test_jpeg_decode_restart_intervals():
-    import numpy as np
-
-    rng = np.random.default_rng(9)
-    img = rng.integers(0, 256, size=(16, 40, 3), dtype=np.uint8)
-    payload = _make_jpeg(img, "444", restart_interval=2)
-    assert b"\xff\xd0" in payload or b"\xff\xd1" in payload  # RSTn present
-    decoded = mm.decode_jpeg(payload)
-    err = np.abs(decoded.astype(np.int32) - img.astype(np.int32))
-    assert err.max() <= 6, err.max()
-
-
-def test_jpeg_decode_rejects_unsupported_and_hostile():
-    import struct
-
-    import numpy as np
-
-    rng = np.random.default_rng(2)
-    img = rng.integers(0, 256, size=(8, 8, 3), dtype=np.uint8)
-    good = _make_jpeg(img)
-    with pytest.raises(ValueError, match="SOI"):
-        mm.decode_jpeg(b"\x00\x01")
-    # arithmetic-coded (SOF9) refused by name (progressive SOF2 decodes
-    # natively since r08 — see test_progressive_jpeg_*)
-    arith = bytearray(good)
-    arith[arith.index(b"\xff\xc0") + 1] = 0xC9
-    with pytest.raises(ValueError, match="SOF9"):
-        mm.decode_jpeg(bytes(arith))
-    # a baseline full-band scan mislabeled SOF2 violates the progressive
-    # scan rules (DC scan must have Se=0) and is refused clearly
-    prog = bytearray(good)
-    prog[prog.index(b"\xff\xc0") + 1] = 0xC2
-    with pytest.raises(ValueError, match="Se=0"):
-        mm.decode_jpeg(bytes(prog))
-    # dimension bomb: SOF0 declaring 65535x65535 must fail BEFORE allocation
-    bomb = bytearray(good)
-    sof_at = bomb.index(b"\xff\xc0") + 5
-    struct.pack_into(">HH", bomb, sof_at, 65535, 65535)
-    with pytest.raises(ValueError, match="out of bounds"):
-        mm.decode_jpeg(bytes(bomb))
-    # truncation anywhere raises cleanly (here: mid-DHT overrun)
-    with pytest.raises(ValueError, match="truncated|no SOS|overruns"):
-        mm.decode_jpeg(good[: len(good) // 2])
-    # truncated ENTROPY stream specifically (cut after the SOS header)
-    sos_at = good.index(b"\xff\xda")
-    with pytest.raises(ValueError, match="truncated"):
-        mm.decode_jpeg(good[: sos_at + 20])
-    # the real-decode gate routes JPEG natively now, with resize
-    resized = mm._decode_image_real(_make_jpeg(img), width=4, height=4)
-    assert resized.shape == (4, 4, 3)
-
-
-def test_progressive_jpeg_matches_baseline_decode_exactly():
-    """The progressive scan script transmits the SAME quantized
-    coefficients as the baseline encoding (DC: (dc>>1)<<1 | bit; AC:
-    magnitude bit-planes), so progressive decode must be BIT-IDENTICAL
-    to baseline decode of the same image — 4:4:4, 4:2:0, and gray."""
-    import numpy as np
-
-    rng = np.random.default_rng(17)
-    cases = [
-        rng.integers(0, 256, size=(24, 24, 3), dtype=np.uint8),
-        rng.integers(0, 256, size=(13, 21, 3), dtype=np.uint8),
-        rng.integers(0, 256, size=(16, 16, 1), dtype=np.uint8),
-        np.full((32, 32, 3), 128, dtype=np.uint8),  # long EOB runs
-    ]
-    for i, img in enumerate(cases):
-        sub = "420" if i == 1 else "444"
-        base = mm.decode_jpeg(_make_jpeg(img, sub))
-        prog = mm.decode_jpeg(_make_progressive_jpeg(img, sub))
-        assert prog.shape == base.shape, (i, prog.shape, base.shape)
-        assert (prog == base).all(), (
-            i, int(np.abs(prog.astype(int) - base.astype(int)).max()))
-
-
-def test_progressive_jpeg_error_bounds_vs_original():
-    import numpy as np
-
-    rng = np.random.default_rng(23)
-    img = rng.integers(0, 256, size=(24, 24, 3), dtype=np.uint8)
-    decoded = mm.decode_jpeg(_make_progressive_jpeg(img, "444"))
-    err = np.abs(decoded.astype(np.int32) - img.astype(np.int32))
-    assert err.max() <= 6, err.max()
-
-
-def _mp3_frame(kbps=128, sr=44100, version=3, mono=False, pad=0) -> bytes:
-    """One valid MPEG Layer-III frame: 4-byte header + zeroed body."""
-    from enterprise_data_warehouse_spark.operators.multimodal import (
-        _MP3_BITRATES_V1L3,
-        _MP3_BITRATES_V2L3,
-        _MP3_RATES_V1,
-    )
-
-    table = _MP3_BITRATES_V1L3 if version == 3 else _MP3_BITRATES_V2L3
-    br_idx = table.index(kbps)
-    base = {3: 1, 2: 2, 0: 4}[version]
-    sr_idx = _MP3_RATES_V1.index(sr * base)
-    h = (0x7FF << 21) | (version << 19) | (1 << 17) | (1 << 16)
-    h |= (br_idx << 12) | (sr_idx << 10) | (pad << 9)
-    h |= (3 if mono else 0) << 6
-    spf = 1152 if version == 3 else 576
-    frame_len = spf // 8 * kbps * 1000 // sr + pad
-    return h.to_bytes(4, "big") + b"\x00" * (frame_len - 4)
-
-
-def test_mp3_header_parse_cbr_exact_duration():
-    mp3 = _mp3_frame() * 38  # 38 frames at 44.1 kHz ≈ 0.99 s
-    meta = mm.parse_mp3(mp3)
-    assert meta["n_frames"] == 38
-    assert meta["sample_rate"] == 44100 and meta["channels"] == 2
-    assert abs(meta["duration_s"] - 38 * 1152 / 44100) < 1e-12
-    assert meta["avg_bitrate_kbps"] == 128.0
-
-
-def test_mp3_header_parse_vbr_id3_and_truncation():
-    # VBR: per-frame bitrates average exactly; ID3v2 head + ID3v1 tail skip
-    frames = (_mp3_frame(64) + _mp3_frame(128) + _mp3_frame(192)
-              + _mp3_frame(320, pad=1))
-    id3v2 = b"ID3\x04\x00\x00" + bytes([0, 0, 0, 12]) + b"\x00" * 12
-    id3v1 = b"TAG" + b"\x00" * 125
-    meta = mm.parse_mp3(id3v2 + frames + id3v1)
-    assert meta["n_frames"] == 4
-    assert meta["avg_bitrate_kbps"] == (64 + 128 + 192 + 320) / 4
-    # MPEG-2 mono at 22.05 kHz: 576 samples per frame
-    m2 = mm.parse_mp3(_mp3_frame(kbps=64, sr=22050, version=2, mono=True) * 5)
-    assert m2["sample_rate"] == 22050 and m2["channels"] == 1
-    assert abs(m2["duration_s"] - 5 * 576 / 22050) < 1e-12
-    # truncated final frame: tolerated, not counted
-    cut = frames[: len(frames) - 10]
-    assert mm.parse_mp3(cut)["n_frames"] == 3
-    # hostile inputs: parse or ValueError, nothing else
-    with pytest.raises(ValueError, match="no frame sync"):
-        mm.parse_mp3(b"\x00" * 64)
-    with pytest.raises(ValueError, match="no complete frame"):
-        mm.parse_mp3(_mp3_frame()[:40])
-    with pytest.raises(ValueError, match="Layer III"):
-        bad = bytearray(_mp3_frame())
-        bad[1] = (bad[1] & ~0x06) | 0x06  # Layer I bits
-        mm.parse_mp3(bytes(bad))
-
-
-def _make_tiff(img, big_endian=False, rows_per_strip=None) -> bytes:
-    """Serialize an (H, W, C) uint8 array (C=1/3/4) as an uncompressed
-    chunky TIFF, optionally big-endian and multi-strip."""
-    import struct
-
-    h, w, c = img.shape
-    e = ">" if big_endian else "<"
-    rps = rows_per_strip or h
-    strips = []
-    for y0 in range(0, h, rps):
-        strips.append(img[y0:y0 + rps].tobytes())
-    # layout: header(8) | IFD | tag arrays | strip data
-    ntags = 9
-    ifd_off = 8
-    arrays_off = ifd_off + 2 + 12 * ntags + 4
-    arr = bytearray()
-
-    def tag(tid, typ, vals):
-        nonlocal arr
-        fmt = {3: "H", 4: "I"}[typ]
-        sz = struct.calcsize(fmt) * len(vals)
-        if sz <= 4:
-            packed = struct.pack(e + fmt * len(vals), *vals)
-            return struct.pack(e + "HHI", tid, typ, len(vals)) + packed.ljust(4, b"\x00")
-        off = arrays_off + len(arr)
-        arr += struct.pack(e + fmt * len(vals), *vals)
-        return struct.pack(e + "HHI", tid, typ, len(vals)) + struct.pack(e + "I", off)
-
-    # strip offsets come after the tag arrays; reserve their array space
-    n_strips = len(strips)
-    bps_vals = [8] * c
-    # build twice: first to size the arrays, then with real strip offsets
-    for _ in range(2):
-        arr = bytearray()
-        body = b"".join([
-            tag(256, 4, [w]),
-            tag(257, 4, [h]),
-            tag(258, 3, bps_vals),
-            tag(259, 3, [1]),
-            tag(262, 3, [2 if c >= 3 else 1]),
-            tag(273, 4, getattr(_make_tiff, "_offs", [0] * n_strips)),
-            tag(277, 3, [c]),
-            tag(278, 4, [rps]),
-            tag(279, 4, [len(s) for s in strips]),
-        ])
-        data_off = arrays_off + len(arr)
-        offs, at = [], data_off
-        for s in strips:
-            offs.append(at)
-            at += len(s)
-        _make_tiff._offs = offs
-    del _make_tiff._offs
-    header = (b"MM\x00*" if big_endian else b"II*\x00") + struct.pack(e + "I", ifd_off)
-    ifd = struct.pack(e + "H", ntags) + body + struct.pack(e + "I", 0)
-    return header + ifd + bytes(arr) + b"".join(strips)
-
-
-def test_tiff_decode_roundtrips_both_endians_and_strips():
-    import numpy as np
-
-    rng = np.random.default_rng(29)
-    for c in (1, 3, 4):
-        img = rng.integers(0, 256, size=(7, 5, c), dtype=np.uint8)
-        for be in (False, True):
-            got = mm.decode_tiff(_make_tiff(img, big_endian=be))
-            assert got.shape == img.shape and (got == img).all(), (c, be)
-    # multi-strip layout
-    img = rng.integers(0, 256, size=(10, 4, 3), dtype=np.uint8)
-    got = mm.decode_tiff(_make_tiff(img, rows_per_strip=3))
-    assert (got == img).all()
-    # the real-decode gate routes TIFF natively with a resize
-    resized = mm._decode_image_real(_make_tiff(img), width=8, height=5)
-    assert resized.shape == (5, 8, 3)
-
-
-def test_tiff_rejects_unsupported_and_hostile():
-    import struct
-
-    import numpy as np
-
-    img = np.zeros((4, 4, 3), dtype=np.uint8)
-    good = _make_tiff(img)
-    with pytest.raises(ValueError, match="not a TIFF"):
-        mm.decode_tiff(b"ABCD" + good[4:])
-    # OLD-style JPEG (compression 6) refused by name; NEW-style (7)
-    # decodes natively since r11 — so a 7 tag over non-JPEG strip bytes
-    # must fail at the strip, not be misread as raw pixels
-    jpg = bytearray(good)
-    at = jpg.index(struct.pack("<HH", 259, 3))
-    struct.pack_into("<H", jpg, at + 8, 6)
-    with pytest.raises(ValueError, match="unsupported TIFF compression"):
-        mm.decode_tiff(bytes(jpg))
-    struct.pack_into("<H", jpg, at + 8, 7)
-    # (this container is photometric=2 RGB, which comp 7 refuses outright
-    # — RGB-coded JPEG strips would be color-rotated by the decoder's
-    # YCbCr→RGB step, so they are rejected rather than decoded wrong)
-    with pytest.raises(ValueError, match="photometric"):
-        mm.decode_tiff(bytes(jpg))
-    # dimension bomb fails before allocation
-    bomb = bytearray(good)
-    at = bomb.index(struct.pack("<HH", 256, 4))
-    struct.pack_into("<I", bomb, at + 8, 1 << 20)
-    at = bomb.index(struct.pack("<HH", 257, 4))
-    struct.pack_into("<I", bomb, at + 8, 1 << 20)
-    with pytest.raises(ValueError, match="out of bounds"):
-        mm.decode_tiff(bytes(bomb))
-    # truncated strip data
-    with pytest.raises(ValueError, match="overruns|truncated"):
-        mm.decode_tiff(good[:-10])
-
-
-def _lzw_encode_literals(data: bytes) -> bytes:
-    """Independent minimal TIFF-LZW encoder for fixture streams: emits
-    Clear then every byte as a literal code, tracking the decoder-side
-    table growth and the EARLY code-width change — so a long stream
-    exercises 10/11/12-bit codes and re-Clears without libtiff."""
-    out = bytearray()
-    acc = accbits = 0
-
-    def put(code, size):
-        nonlocal acc, accbits
-        acc = (acc << size) | code
-        accbits += size
-        while accbits >= 8:
-            accbits -= 8
-            out.append((acc >> accbits) & 0xFF)
-            acc &= (1 << accbits) - 1
-
-    size, table_len = 9, 258
-    put(256, size)  # Clear
-    first = True  # the decoder appends NO table entry for the first
-    for b in data:  # code after a Clear — mirror that exactly
-        put(b, size)
-        if first:
-            first = False
-        else:
-            table_len += 1
-        if table_len >= (1 << size) - 1:
-            if size < 12:
-                size += 1
-            else:  # table full: re-Clear, reset width
-                put(256, size)
-                size, table_len, first = 9, 258, True
-    put(257, size)  # EOI
-    if accbits:
-        out.append((acc << (8 - accbits)) & 0xFF)
-    return bytes(out)
-
-
-def test_tiff_lzw_and_packbits_decode_pure_fixtures():
-    """Oracle-free layer: hand-built LZW/PackBits strips decode exactly
-    (the libtiff cross-check below is skip-gated; this is not)."""
-    import numpy as np
-
-    rng = np.random.default_rng(31)
-    # long enough to push LZW through the 10/11/12-bit widths + a re-Clear
-    data = rng.integers(0, 256, 9000, dtype=np.uint8).tobytes()
-    assert mm._tiff_lzw_decode(_lzw_encode_literals(data), len(data)) == data
-    # PackBits: literal + repeat + noop mix
-    pb = bytes([2, 10, 20, 30]) + bytes([256 - 3, 7]) + b"\x80" + bytes([0, 9])
-    assert mm._tiff_packbits_decode(pb, 10) == bytes([10, 20, 30, 7, 7, 7, 7, 9])
-
-
-def test_tiff_compression_hostile_payloads():
-    import zlib
-
-    import numpy as np
-
-    # LZW must start with Clear
-    with pytest.raises(ValueError, match="start with Clear"):
-        mm._tiff_lzw_decode(b"\x00\x00\x00", 100)
-    # a code after Clear must be a literal
-    acc = (256 << 9) | 300  # Clear then 300: not a valid first code
-    raw = bytes([(acc >> 10) & 0xFF, (acc >> 2) & 0xFF,
-                 (acc << 6) & 0xFF])
-    with pytest.raises(ValueError, match="invalid code after Clear"):
-        mm._tiff_lzw_decode(raw, 100)
-    # LZW code beyond the table: Clear, literal 'a', then code 400
-    # (table holds 258 entries + the KwKwK slot 258 — 400 is unmapped)
-    acc = (((256 << 9) | ord("a")) << 9) | 400
-    raw = acc << (32 - 27)  # pad to a byte boundary
-    with pytest.raises(ValueError, match="out of range"):
-        mm._tiff_lzw_decode(raw.to_bytes(4, "big"), 100)
-    # LZW balloon: repeated growing sequences exceeding the declared size
-    data = _lzw_encode_literals(b"\x55" * 5000)
-    with pytest.raises(ValueError, match="inflates past"):
-        mm._tiff_lzw_decode(data, 100)
-    # PackBits truncated runs
-    with pytest.raises(ValueError, match="truncated"):
-        mm._tiff_packbits_decode(bytes([5, 1, 2]), 100)
-    with pytest.raises(ValueError, match="truncated"):
-        mm._tiff_packbits_decode(bytes([256 - 3]), 100)
-    # deflate bomb: 1 MB of zeros behind a small declared strip
-    bomb = zlib.compress(bytes(1 << 20))
-    with pytest.raises(ValueError, match="inflates past"):
-        mm._tiff_inflate(bomb, 1000)
-    assert mm._tiff_inflate(zlib.compress(b"xyz"), 3) == b"xyz"
-    # end-to-end: an LZW-tagged TIFF whose strip is garbage refuses cleanly
-    img = np.zeros((4, 4, 3), dtype=np.uint8)
-    payload = bytearray(_make_tiff(img))
-    import struct
-
-    at = payload.index(struct.pack("<HH", 259, 3))
-    struct.pack_into("<H", payload, at + 8, 5)
-    with pytest.raises(ValueError):
-        mm.decode_tiff(bytes(payload))
-
-
-try:
-    import ctypes as _ct
-
-    _LIBTIFF = _ct.CDLL("libtiff.so.6")
-    _LIBTIFF.TIFFOpen.restype = _ct.c_void_p
-    _LIBTIFF.TIFFOpen.argtypes = [_ct.c_char_p, _ct.c_char_p]
-    _LIBTIFF.TIFFWriteScanline.restype = _ct.c_int
-    _LIBTIFF.TIFFWriteScanline.argtypes = [
-        _ct.c_void_p, _ct.c_void_p, _ct.c_uint32, _ct.c_uint16
-    ]
-    _LIBTIFF.TIFFClose.argtypes = [_ct.c_void_p]
-    _LIBTIFF.TIFFSetField.restype = _ct.c_int
-except OSError:  # pragma: no cover - exercised only off-container
-    _LIBTIFF = None
-
-
-def _libtiff_write(path, img, comp, predictor=None, rows_per_strip=5,
-                   big_endian=False):
-    import numpy as np
-
-    h, w = img.shape[:2]
-    spp = 1 if img.ndim == 2 else img.shape[2]
-    tif = _LIBTIFF.TIFFOpen(
-        str(path).encode(), b"wb" if big_endian else b"w")
-    assert tif
-
-    def setf(tag, val):
-        assert _LIBTIFF.TIFFSetField(
-            _ct.c_void_p(tif), _ct.c_uint32(tag), _ct.c_int(val)) == 1, tag
-
-    setf(256, w)
-    setf(257, h)
-    setf(258, 8)
-    setf(259, comp)
-    setf(262, 2 if spp >= 3 else 1)
-    setf(277, spp)
-    setf(284, 1)
-    setf(278, rows_per_strip)
-    if spp == 4:
-        arr = (_ct.c_uint16 * 1)(2)  # unassociated alpha
-        assert _LIBTIFF.TIFFSetField(
-            _ct.c_void_p(tif), _ct.c_uint32(338), _ct.c_uint16(1), arr) == 1
-    if predictor:
-        setf(317, predictor)
-    for y in range(h):
-        assert _LIBTIFF.TIFFWriteScanline(
-            _ct.c_void_p(tif),
-            np.ascontiguousarray(img[y]).tobytes(), y, 0) == 1
-    _LIBTIFF.TIFFClose(_ct.c_void_p(tif))
-
-
-@pytest.mark.skipif(_LIBTIFF is None,
-                    reason="system libtiff not available for oracle runs")
-def test_tiff_compressed_decode_bit_exact_vs_libtiff(tmp_path):
-    """Reference-encoder oracle: libtiff-written LZW/Deflate/PackBits
-    strips (both predictors, both byte orders, strip sizes from 1 row to
-    single-strip, gray/RGB/RGBA, plus a 200x180 noise image that drives
-    LZW through its 12-bit codes and re-Clears) decode bit-exactly."""
-    import numpy as np
-
-    rng = np.random.default_rng(1)
-    cases = {
-        "gray": rng.integers(0, 256, (40, 33), dtype=np.uint8),
-        "rgba": rng.integers(0, 256, (19, 21, 4), dtype=np.uint8),
-        "noise": rng.integers(0, 256, (200, 180, 3), dtype=np.uint8),
-        "smooth": (np.add.outer(np.arange(60), np.arange(64))
-                   % 256).astype(np.uint8),
-    }
-    p = tmp_path / "case.tif"
-    for name, img in cases.items():
-        want = img if img.ndim == 3 else img[:, :, None]
-        for comp in (5, 8, 32773):
-            for pred in ((1, 2) if comp in (5, 8) else (1,)):
-                for be in (False, True):
-                    for rps in (1, 7, 10000):
-                        _libtiff_write(
-                            p, img, comp,
-                            predictor=(2 if pred == 2 else None),
-                            rows_per_strip=rps, big_endian=be)
-                        got = mm.decode_tiff(p.read_bytes())
-                        assert (got == want).all(), (name, comp, pred, be,
-                                                     rps)
-
-
-def _box(btype: bytes, body: bytes, largesize=False) -> bytes:
-    import struct
-
-    if largesize:
-        return (struct.pack(">I", 1) + btype
-                + struct.pack(">Q", 16 + len(body)) + body)
-    return struct.pack(">I", 8 + len(body)) + btype + body
-
-
-def _make_mp4(duration_s=12.5, timescale=1000, video_wh=(640, 360),
-              v1=False, largesize=False) -> bytes:
-    """Minimal ISO-BMFF: ftyp + mdat + moov(mvhd, video trak, audio trak)."""
-    import struct
-
-    dur = int(duration_s * timescale)
-    if v1:
-        mvhd = (b"\x01" + b"\x00" * 3 + b"\x00" * 16
-                + struct.pack(">IQ", timescale, dur) + b"\x00" * 80)
-    else:
-        mvhd = (b"\x00" * 4 + b"\x00" * 8
-                + struct.pack(">II", timescale, dur) + b"\x00" * 80)
-
-    def trak(handler, wh=None):
-        tkhd = b"\x00" * 4 + b"\x00" * 72  # v0 body sans width/height
-        if wh:
-            tkhd += struct.pack(">II", wh[0] << 16, wh[1] << 16)
-        else:
-            tkhd += b"\x00" * 8
-        hdlr = b"\x00" * 4 + b"\x00" * 4 + handler + b"\x00" * 12
-        mdia = _box(b"hdlr", hdlr)
-        return _box(b"trak", _box(b"tkhd", tkhd) + _box(b"mdia", mdia))
-
-    moov = _box(b"moov", _box(b"mvhd", mvhd)
-                + trak(b"vide", video_wh) + trak(b"soun"),
-                largesize=largesize)
-    ftyp = _box(b"ftyp", b"isom" + b"\x00" * 4 + b"isomiso2")
-    mdat = _box(b"mdat", b"\x00" * 64)
-    return ftyp + mdat + moov
-
-
-def test_mp4_box_parse_duration_tracks_dimensions():
-    meta = mm.parse_mp4(_make_mp4())
-    assert abs(meta["duration_s"] - 12.5) < 1e-9
-    assert meta["n_tracks"] == 2
-    assert meta["track_handlers"] == ["vide", "soun"]
-    assert (meta["video_width"], meta["video_height"]) == (640, 360)
-    # version-1 mvhd (64-bit duration) and a largesize moov box
-    m1 = mm.parse_mp4(_make_mp4(duration_s=3.25, v1=True, largesize=True))
-    assert abs(m1["duration_s"] - 3.25) < 1e-9
-
-
-def test_mp4_hostile_payloads_raise_clearly():
-    good = _make_mp4()
-    with pytest.raises(ValueError, match="ftyp"):
-        mm.parse_mp4(b"\x00" * 32)
-    with pytest.raises(ValueError, match="overruns|truncated|moov"):
-        mm.parse_mp4(good[: len(good) - 30])
-    # zero timescale refused, not ZeroDivisionError
-    import struct
-
-    zt = bytearray(good)
-    at = zt.index(b"mvhd") + 4 + 4 + 8
-    struct.pack_into(">I", zt, at, 0)
-    with pytest.raises(ValueError, match="timescale"):
-        mm.parse_mp4(bytes(zt))
-
-
-def test_progressive_jpeg_with_restart_intervals_matches_baseline():
-    """Progressive + DRI: every scan resyncs at RSTn (DC predictions and
-    EOB runs reset) — decode must still be bit-identical to baseline."""
-    import numpy as np
-
-    rng = np.random.default_rng(31)
-    img = rng.integers(0, 256, size=(24, 24, 3), dtype=np.uint8)
-    base = mm.decode_jpeg(_make_jpeg(img, "444"))
-    for rst in (1, 2, 5):
-        prog = mm.decode_jpeg(_make_progressive_jpeg(img, "444",
-                                                     restart_interval=rst))
-        assert (prog == base).all(), rst
-    gray = rng.integers(0, 256, size=(17, 9, 1), dtype=np.uint8)
-    gb = mm.decode_jpeg(_make_jpeg(gray))
-    gp = mm.decode_jpeg(_make_progressive_jpeg(gray, restart_interval=2))
-    assert (gp == gb).all()
-
-
-def test_jpeg_fill_bytes_before_markers_decode_identically():
-    """Runs of 0xFF FILL bytes before a marker are spec-legal (ITU T.81
-    B.1.1.2): a padded stream must decode bit-identically to the
-    unpadded one — in the header segment loop (fill after SOI), the
-    progressive next-marker tail scan (fill before EOI), and the two
-    entropy-stream resync paths (fill before every RSTn)."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, size=(24, 17, 3), dtype=np.uint8)
-
-    cases = [
-        (_make_jpeg, {}),
-        (_make_jpeg, {"restart_interval": 2}),
-        (_make_progressive_jpeg, {}),
-        (_make_progressive_jpeg, {"restart_interval": 2}),
-    ]
-    for enc, kw in cases:
-        data = enc(img, "444", **kw)
-        want = mm.decode_jpeg(data)
-        # fill after SOI (exercises the header loop) and before EOI
-        # (exercises the progressive tail marker scan)
-        padded = (data[:2] + b"\xff" * 4 + data[2:-2]
-                  + b"\xff" * 3 + data[-2:])
-        # fill before every RSTn in the entropy region: any 0xFF
-        # followed by 0xD0-0xD7 after the first SOS is a real restart
-        # marker (entropy data stuffs literal 0xFF as 0xFF00)
-        at = padded.find(b"\xff\xda")
-        tail = padded[at:]
-        for n in range(8):
-            tail = tail.replace(bytes([0xFF, 0xD0 + n]),
-                                b"\xff\xff" + bytes([0xFF, 0xD0 + n]))
-        padded = padded[:at] + tail
-        got = mm.decode_jpeg(padded)
-        assert np.array_equal(got, want), (enc.__name__, kw)
-
-
-def _split_jpeg_tables(stream: bytes):
-    """Split a full JPEG stream into (tables, abbreviated): DQT/DHT
-    segments vs everything else. `tables` is the SOI..EOI JPEGTables blob
-    TIFF TechNote 2 stores in tag 347; `abbreviated` is the per-strip
-    stream with the table segments removed."""
-    import struct
-
-    pos, tabs, rest = 2, b"", b""
-    while pos < len(stream):
-        assert stream[pos] == 0xFF, "marker expected"
-        marker = stream[pos + 1]
-        if marker == 0xDA:  # SOS: entropy data + EOI follow, copy verbatim
-            rest += stream[pos:]
-            break
-        ln = struct.unpack(">H", stream[pos + 2:pos + 4])[0]
-        seg = stream[pos:pos + 2 + ln]
-        if marker in (0xDB, 0xC4):  # DQT / DHT
-            tabs += seg
-        else:
-            rest += seg
-        pos += 2 + ln
-    return b"\xff\xd8" + tabs + b"\xff\xd9", b"\xff\xd8" + rest
-
-
-def _make_jpeg_tiff(img, rows_per_strip=None, abbreviated=False,
-                    photometric=None, predictor=None,
-                    strip_streams=None) -> bytes:
-    """Serialize an (H, W, C) uint8 array (C=1/3) as a NEW-STYLE
-    JPEG-in-TIFF (compression 7, TIFF TechNote 2): each strip is its own
-    `_make_jpeg` stream; `abbreviated=True` moves the shared DQT/DHT
-    segments into tag 347 JPEGTables and strips carry SOI+SOF+SOS only.
-    `strip_streams`/`photometric`/`predictor` exist for hostile-payload
-    tests."""
-    import struct
-
-    h, w, c = img.shape
-    e = "<"
-    rps = rows_per_strip or h
-    if strip_streams is None:
-        streams = [_make_jpeg(img[y0:y0 + rps])
-                   for y0 in range(0, h, rps)]
-    else:
-        streams = list(strip_streams)
-    tables_blob = None
-    if abbreviated:
-        tables_blob = _split_jpeg_tables(streams[0])[0]
-        streams = [_split_jpeg_tables(s)[1] for s in streams]
-    photo = photometric if photometric is not None else (6 if c == 3 else 1)
-
-    entries = [
-        (256, 4, [w]),
-        (257, 4, [h]),
-        (258, 3, [8] * c),
-        (259, 3, [7]),
-        (262, 3, [photo]),
-        (273, 4, None),  # strip offsets, filled on the second pass
-        (277, 3, [c]),
-        (278, 4, [rps]),
-        (279, 4, [len(s) for s in streams]),
-    ]
-    if predictor is not None:
-        entries.append((317, 3, [predictor]))
-    if tables_blob is not None:
-        entries.append((347, 7, list(tables_blob)))
-    ntags = len(entries)
-    ifd_off = 8
-    arrays_off = ifd_off + 2 + 12 * ntags + 4
-    offs = [0] * len(streams)
-    for _ in range(2):  # pass 1 sizes the arrays, pass 2 has real offsets
-        arr = bytearray()
-        body = b""
-        for tid, typ, vals in entries:
-            if tid == 273:
-                vals = offs
-            fmt = {3: "H", 4: "I", 7: "B"}[typ]
-            packed = struct.pack(e + fmt * len(vals), *vals)
-            if len(packed) <= 4:
-                body += struct.pack(e + "HHI", tid, typ, len(vals)) \
-                    + packed.ljust(4, b"\x00")
-            else:
-                body += struct.pack(e + "HHI", tid, typ, len(vals)) \
-                    + struct.pack(e + "I", arrays_off + len(arr))
-                arr += packed
-        at = arrays_off + len(arr)
-        offs = []
-        for s in streams:
-            offs.append(at)
-            at += len(s)
-    header = b"II*\x00" + struct.pack(e + "I", ifd_off)
-    ifd = struct.pack(e + "H", ntags) + body + struct.pack(e + "I", 0)
-    return header + ifd + bytes(arr) + b"".join(streams)
-
-
-def test_tiff_jpeg_strips_match_direct_jpeg_decode():
-    """JPEG-in-TIFF is container wiring over the verified decode_jpeg:
-    for full per-strip streams the TIFF result must be bit-identical to
-    vstacking decode_jpeg over the same streams — gray and RGB, single
-    and multi-strip with a short last strip."""
-    import numpy as np
-
-    rng = np.random.default_rng(347)
-    for c, rps in ((1, None), (3, None), (3, 8), (1, 8)):
-        img = rng.integers(0, 256, size=(20, 9, c), dtype=np.uint8)
-        tiff = _make_jpeg_tiff(img, rows_per_strip=rps)
-        got = mm.decode_tiff(tiff)
-        step = rps or 20
-        expect = np.vstack(
-            [mm.decode_jpeg(_make_jpeg(img[y0:y0 + step]))
-             for y0 in range(0, 20, step)]
-        )
-        assert got.dtype == np.uint8 and got.shape == (20, 9, c)
-        assert (got == expect).all(), (c, rps)
-    # the real-decode gate routes it natively (resize path, no fake)
-    img = rng.integers(0, 256, size=(16, 8, 3), dtype=np.uint8)
-    resized = mm._decode_image_real(
-        _make_jpeg_tiff(img, rows_per_strip=8), width=4, height=4)
-    assert resized.shape == (4, 4, 3)
-
-
-def test_tiff_jpeg_abbreviated_tables_decode_identically():
-    """TechNote 2 abbreviated streams: moving the shared DQT/DHT segments
-    into tag 347 JPEGTables must not change a single pixel vs the
-    full-stream container."""
-    import numpy as np
-
-    rng = np.random.default_rng(348)
-    img = rng.integers(0, 256, size=(20, 9, 3), dtype=np.uint8)
-    full = mm.decode_tiff(_make_jpeg_tiff(img, rows_per_strip=8))
-    abbr = mm.decode_tiff(
-        _make_jpeg_tiff(img, rows_per_strip=8, abbreviated=True))
-    assert (abbr == full).all()
-
-
-def test_tiff_jpeg_rejects_hostile_and_mismatched_strips():
-    import numpy as np
-    import pytest
-
-    rng = np.random.default_rng(349)
-    img = rng.integers(0, 256, size=(12, 6, 3), dtype=np.uint8)
-    # strip that is not a JPEG stream
-    with pytest.raises(ValueError, match="missing SOI"):
-        mm.decode_tiff(_make_jpeg_tiff(img, strip_streams=[b"\x00" * 40]))
-    # JPEGTables blob that is not SOI..EOI
-    bad = _make_jpeg_tiff(img, abbreviated=True)
-    tables = _split_jpeg_tables(_make_jpeg(img))[0]
-    with pytest.raises(ValueError, match="JPEGTables"):
-        mm.decode_tiff(bad.replace(tables, b"\x00" * len(tables), 1))
-    # strip whose SOF dims disagree with the container — refused from the
-    # frame header alone, before any decode work
-    wrong = _make_jpeg(rng.integers(0, 256, (12, 7, 3), dtype=np.uint8))
-    with pytest.raises(ValueError, match="declares"):
-        mm.decode_tiff(_make_jpeg_tiff(img, strip_streams=[wrong]))
-    # grayscale strip under an RGB container
-    gray = _make_jpeg(rng.integers(0, 256, (12, 6, 1), dtype=np.uint8))
-    with pytest.raises(ValueError, match="strip 0 decodes"):
-        mm.decode_tiff(_make_jpeg_tiff(img, strip_streams=[gray]))
-    # YCbCr photometric is ONLY valid for JPEG strips
-    plain = _make_tiff(img)
-    with pytest.raises(ValueError, match="photometric"):
-        mm.decode_tiff(
-            plain.replace(b"\x06\x01\x03\x00\x01\x00\x00\x00\x02\x00",
-                          b"\x06\x01\x03\x00\x01\x00\x00\x00\x06\x00", 1))
-    # horizontal-differencing predictor is invalid over JPEG strips
-    with pytest.raises(ValueError, match="predictor"):
-        mm.decode_tiff(_make_jpeg_tiff(img, predictor=2))
-
-
-def test_tiff_jpeg_oversized_strip_refused_before_decode():
-    """A strip whose DECLARED SOF frame exceeds its slot must be refused
-    from the frame header alone — a 64-pixel container pointing strips at
-    a huge JPEG must not amplify into the decode work (review finding,
-    round 11: previously a 2-row container silently accepted 400-row
-    strips)."""
-    import numpy as np
-    import pytest
-
-    rng = np.random.default_rng(350)
-    small = rng.integers(0, 256, size=(2, 6, 3), dtype=np.uint8)
-    big_stream = _make_jpeg(rng.integers(0, 256, (400, 6, 3), dtype=np.uint8))
-    hostile = _make_jpeg_tiff(small, rows_per_strip=1,
-                              strip_streams=[big_stream, big_stream])
-    with pytest.raises(ValueError, match="declares"):
-        mm.decode_tiff(hostile)
-    # MCU padding stays allowed: 10 rows in a 16-row (padded) frame
-    img = rng.integers(0, 256, size=(10, 8, 3), dtype=np.uint8)
-    assert mm.decode_tiff(_make_jpeg_tiff(img)).shape == (10, 8, 3)
-
-
-def test_tiff_truncated_ancillary_undefined_tag_still_decodes():
-    """Only tag 347 is consumed among UNDEFINED (type 7) tags: a TIFF
-    whose truncated ICC-profile blob (tag 34675) points past the payload
-    must stay decodable, exactly as before JPEG-in-TIFF support."""
-    import struct
-
-    import numpy as np
-
-    # hand-built minimal TIFF (all tag values inline — no array offsets
-    # that an IFD splice would shift): 2x2 grayscale, one strip
-    img = np.arange(4, dtype=np.uint8).reshape(2, 2, 1)
-    entries = [
-        (256, 4, 1, 2),          # width
-        (257, 4, 1, 2),          # height
-        (258, 3, 1, 8),          # bits per sample
-        (259, 3, 1, 1),          # uncompressed
-        (262, 3, 1, 1),          # BlackIsZero
-        (273, 4, 1, 0),          # strip offset (patched below)
-        (277, 3, 1, 1),          # samples per pixel
-        (278, 4, 1, 2),          # rows per strip
-        (279, 4, 1, 4),          # strip byte count
-        (34675, 7, 1 << 20, 1 << 30),  # ICC profile: truncated/hostile
-    ]
-    strip_off = 8 + 2 + 12 * len(entries) + 4
-    body = b"".join(
-        struct.pack("<HHII", t, ty, cnt, strip_off if t == 273 else val)
-        for t, ty, cnt, val in entries
-        for val in [val]
-    )
-    tiff = (b"II*\x00" + struct.pack("<I", 8)
-            + struct.pack("<H", len(entries)) + body
-            + struct.pack("<I", 0) + img.tobytes())
-    got = mm.decode_tiff(tiff)
-    assert (got == img).all()
-
-
-def test_tiff_jpeg_fill_bytes_and_standalone_markers_accepted():
-    """The SOF pre-walk must mirror decode_jpeg's marker walk exactly:
-    a strip decode_jpeg itself accepts — T.81 B.1.1.2 fill bytes or a
-    standalone TEM before the frame header — must pass the TIFF path's
-    declared-dims pre-check too, and decode identically to the clean
-    stream (judge-ADVICE r11)."""
-    import numpy as np
-
-    rng = np.random.default_rng(19)
-    img = rng.integers(0, 256, size=(10, 8, 3), dtype=np.uint8)
-    clean = [_make_jpeg(img[0:8]), _make_jpeg(img[8:10])]
-    want = mm.decode_tiff(
-        _make_jpeg_tiff(img, rows_per_strip=8, strip_streams=clean))
-    # fill run after SOI, then a standalone TEM marker, before any segment
-    padded = [s[:2] + b"\xff" * 4 + b"\xff\x01" + s[2:] for s in clean]
-    for p in padded:  # sanity: decode_jpeg itself accepts these
-        mm.decode_jpeg(p)
-    got = mm.decode_tiff(
-        _make_jpeg_tiff(img, rows_per_strip=8, strip_streams=padded))
-    assert np.array_equal(got, want)
-
-
-def test_tiff_jpeg_oversized_jpegtables_clear_error():
-    """A tag-347 JPEGTables count past the 1 MiB cap on a comp-7 file
-    must fail with a CLEAR JPEGTables diagnostic, not be silently
-    treated as absent (which would send abbreviated strips into
-    decode_jpeg to die with a misleading Huffman/DQT error)
-    (judge-ADVICE r11)."""
-    import struct
-
-    import numpy as np
-
-    import pytest
-
-    rng = np.random.default_rng(23)
-    img = rng.integers(0, 256, size=(8, 8, 3), dtype=np.uint8)
-    tiff = bytearray(_make_jpeg_tiff(img, rows_per_strip=8,
-                                     abbreviated=True))
-    ent = struct.pack("<HH", 347, 7)  # tag 347, type UNDEFINED
-    at = bytes(tiff).find(ent)
-    assert at > 0
-    cnt = struct.unpack_from("<I", tiff, at + 4)[0]
-    struct.pack_into("<I", tiff, at + 4, (1 << 20) + cnt)
-    with pytest.raises(ValueError, match="JPEGTables too large"):
-        mm.decode_tiff(bytes(tiff))

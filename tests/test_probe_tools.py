@@ -218,3 +218,13 @@ def test_dump_round_plans_writes_round_dir(monkeypatch, tmp_path, capsys):
         "plan of q_b (formatted)\n"
     )
     assert fake.stopped
+
+
+def test_dump_plans_showcase_names_are_registered():
+    """tools/dump_plans.py regenerates PLANS.md from its SHOWCASE list; a
+    renamed or deleted query must fail here, not as a KeyError halfway
+    through a regeneration."""
+    dump = _tool("dump_plans")
+    registry = dump.load_registry()
+    missing = [name for name, _ in dump.SHOWCASE if name not in registry]
+    assert not missing, missing

@@ -16,6 +16,7 @@ def test_seed_load_typed(spark, tmp_path):
         "US,United States,1\nDE,Germany,3\nJP,Japan,2\n"
     )
     df = load_csv_seed(spark, str(p), SCHEMA)
+    assert df.columns == ["country_code", "country_name", "region_key"]
     assert [f.dataType.simpleString() for f in df.schema.fields] == [
         "string",
         "string",

@@ -9,7 +9,6 @@ from enterprise_data_warehouse_spark.sources.sink import (
     append_audit,
     incremental_build,
     merge_upsert,
-    read_csv_seed,
     read_table,
     read_watermark,
     write_table,
@@ -94,14 +93,6 @@ def test_scd2_invariants_two_batches(spark):
     assert scd2_integrity_violations(dim3, "c_custkey").count() == 0
     keys_updated = upd2.select("c_custkey").distinct().count()
     assert dim3.count() == dim2.count() + keys_updated
-
-
-def test_csv_seed_roundtrip(spark, tmp_path):
-    src = tmp_path / "seed.csv"
-    src.write_text("country_code,country_name\nUS,United States\nDE,Germany\n")
-    df = read_csv_seed(spark, str(src))
-    assert df.count() == 2
-    assert set(df.columns) == {"country_code", "country_name"}
 
 
 def test_audit_append(spark, tmp_path):

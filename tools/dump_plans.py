@@ -37,7 +37,9 @@ SHOWCASE = [
      "bucket-offset rollup broadcast back — no global-order window, so no "
      "single-partition funnel of the corpus."),
     ("minhash_lsh_candidates",
-     "MinHash signatures computed entirely map-side (nested array lambdas); "
+     "MinHash signatures: one shingle explode feeds k compiled "
+     "MIN(xxhash64(...)) aggregates whose partial agg collapses each doc "
+     "to one row map-side, so the exchange ships |docs| × k longs; "
      "candidate pairs come from grouped per-bucket emission — the signature "
      "table is computed and shuffled once, and there is no join operator."),
     ("ngram_jaccard_pairs",
@@ -173,8 +175,10 @@ def main() -> None:
         "`python tools/dump_plans.py`)",
         "",
         "Captured at sf0.001 with the engine session (AQE on, 32 shuffle "
-        "partitions). Every property called out below is pinned by a test "
-        "in `tests/test_plans.py`, so these are invariants, not snapshots.",
+        "partitions). Each note describes the plan printed under it. "
+        "Plan-shape tests (most of them in `tests/test_plans.py`) pin some "
+        "of these properties, not all: read an unpinned note as a snapshot "
+        "of the current plan, not an invariant.",
         "",
     ]
     for name, note in SHOWCASE:
