@@ -58,7 +58,10 @@ class Warehouse:
         Registered UNCONDITIONALLY on every sql() call: temp views are
         session-global, so a second Warehouse on the same SparkSession
         would otherwise silently serve this one's sf_dir (or vice versa).
-        createOrReplaceTempView on a lazy scan is metadata-only — cheap."""
+        It launches no Spark job once each table has been read in this
+        process: ``load_table`` reuses the schema inferred for unchanged
+        local files. The first read of a table in a process, or of a
+        changed or non-local one, pays one schema-inference job."""
         for t in TABLE_NAMES:
             self.table(t).createOrReplaceTempView(t)
 

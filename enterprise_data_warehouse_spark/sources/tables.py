@@ -5,6 +5,18 @@ tables (reference models/staging/staging_customers.sql:45,
 models/marts/facts/fact_sales_daily.sql:45). Here a scan is a lazy
 ``spark.read.parquet`` — Catalyst pushes filters and prunes columns into the
 parquet reader, so a downstream 2-column projection reads 2 columns.
+
+Spark answers a plain ``spark.read.parquet`` with a schema-inference job
+(one task reading the footers), even for one file. ``load_table`` keeps a
+process-wide memo instead: local table path -> (identity, inferred schema),
+where the identity is the sorted (relative path, size, mtime_ns) of every
+file under the path plus the values of the confs that change what inference
+returns (``INFERENCE_CONFS``). While the identity holds, the read passes the
+memoized schema to ``spark.read.schema`` and launches no job; any changed,
+added or removed file, or a changed conf, infers again and replaces the
+entry. A path ``os.stat`` cannot resolve (a non-local scheme, any OS error)
+fails open: it infers on every read and is never memoized. The first read
+of each table in a process still infers.
 """
 
 from __future__ import annotations
@@ -12,6 +24,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -28,11 +41,26 @@ TABLE_NAMES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# SQL confs whose value changes the schema parquet inference returns for the
+# same files (part of a memo entry's identity)
+INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+)
+# local table path -> (identity, schema inferred under it); see the module
+# docstring. Dict get/set is atomic, so concurrent readers at worst infer
+# twice.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
 
 def ensure_runtime_confs(spark: SparkSession) -> None:
     """Make ANY caller-provided SparkSession meet the engine's contract.
 
-    Both confs are runtime-settable SQL confs, so this works even when the
+    All three are runtime-settable SQL confs, so this works even when the
     session was built elsewhere (e.g. the verify driver's plain session):
 
     - ``nanosAsLong``: a TIMESTAMP(NANOS) parquet column (early testdata
@@ -63,6 +91,12 @@ def load_table(
     session.get_spark) and convert to a µs timestamp (lossless — the
     generator emits whole microseconds).
 
+    The scan reuses the schema last inferred for the same local files under
+    the same ``INFERENCE_CONFS`` values and so launches no Spark job; a
+    first read, a changed file set or conf, or a path ``os.stat`` cannot
+    resolve infers as a plain ``spark.read.parquet`` does (module
+    docstring).
+
     ``min_partitions``: opt-in for CPU-heavy per-row operators (shingling,
     hashing). A small single-row-group file scans as ONE partition, which
     serializes the expensive map work onto one core; a cheap round-robin
@@ -70,13 +104,54 @@ def load_table(
     has ≥ this many splits and the branch is a no-op (no shuffle added).
     """
     ensure_runtime_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         from pyspark.sql import functions as F
 
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     if min_partitions and df.rdd.getNumPartitions() < min_partitions:
         df = df.repartition(min_partitions)
+    return df
+
+
+def _reraise(err: OSError) -> None:
+    """``os.walk`` error hook: an unreadable directory fails the identity
+    (so the read infers) instead of being left out of it."""
+    raise err
+
+
+def _identity(spark: SparkSession, path: str) -> tuple | None:
+    """The memo key of ``path``'s files under the session's inference
+    confs; None when ``os.stat`` cannot resolve the path."""
+    try:
+        if os.path.isdir(path):
+            files = []
+            for root, _, names in os.walk(path, onerror=_reraise, followlinks=True):
+                for n in names:
+                    f = os.path.join(root, n)
+                    st = os.stat(f)
+                    files.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns))
+            files.sort()
+        else:
+            st = os.stat(path)
+            files = [("", st.st_size, st.st_mtime_ns)]
+    except OSError:
+        return None
+    return tuple(files), tuple(spark.conf.get(k) for k in INFERENCE_CONFS)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the memoized schema when the
+    path's identity matches its memo entry. The identity is taken before
+    inferring, so files that change during inference never match again."""
+    identity = _identity(spark, path)
+    entry = _SCHEMAS.get(path)
+    if identity is not None and entry is not None and entry[0] == identity:
+        return spark.read.schema(entry[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if identity is not None:
+        # a copy: the DataFrame caches the StructType it hands its callers
+        _SCHEMAS[path] = (identity, StructType.fromJson(df.schema.jsonValue()))
     return df
 
 
@@ -149,14 +224,3 @@ def local_table_bytes(sf_dir: str, name: str) -> int:
         return p.stat().st_size if p.exists() else 0
     except OSError:
         return 0
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load the full star schema as a dict of lazy DataFrames."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """S2: expose tables as temp views so spark.sql(...) can ref() them."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

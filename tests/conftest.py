@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import sys
+import uuid
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -10,6 +12,24 @@ sys.path.insert(0, str(REPO))
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
+
+
+@contextmanager
+def count_jobs(spark):
+    """Counts the Spark jobs launched inside the block: the status-tracker
+    job-id delta of a fresh job group, read after the listener bus drains
+    (job-start events reach the status store asynchronously)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "job count")
+    out = {"n": 0}
+    try:
+        yield out
+    finally:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        out["n"] = len(sc.statusTracker().getJobIdsForGroup(group))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 @pytest.fixture(scope="session")

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from enterprise_data_warehouse_spark.api import Warehouse
 
+from .conftest import SF_ORACLE, count_jobs
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -54,6 +56,15 @@ def test_two_warehouses_do_not_cross_serve(spark):
     n_small_again = wh_small.sql("SELECT COUNT(*) AS n FROM orders").collect()[0]["n"]
     assert n_small == n_small_again == 1500
     assert n_big == 15000
+
+
+def test_register_views_on_warm_process_launches_no_job(spark):
+    wh = Warehouse(spark, SF_ORACLE)
+    wh.register_views()
+    with count_jobs(spark) as jobs:
+        wh.register_views()
+    assert jobs["n"] == 0
+    assert wh.sql("SELECT count(*) FROM region").collect()[0][0] == 5
 
 
 def test_explain_returns_formatted_plan(spark):

@@ -9,8 +9,6 @@ partitioned merges that change the schema) must keep inferring."""
 from __future__ import annotations
 
 import json
-import uuid
-from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,6 +20,8 @@ from enterprise_data_warehouse_spark.sources.sink import (
     read_table,
 )
 from enterprise_data_warehouse_spark.sources.versioned import VersionedTable
+
+from .conftest import count_jobs
 
 # one column per type family whose parquet round trip has a quirk:
 # timezone semantics, decimal precision, char padding, nesting, binary
@@ -51,24 +51,6 @@ def _dirs(t: VersionedTable, meta: dict) -> list[str]:
 
 def _rows(df) -> list[str]:
     return sorted(str(r) for r in df.collect())
-
-
-@contextmanager
-def _jobs(spark):
-    """Counts the Spark jobs launched inside the block: the status-tracker
-    job-id delta of a fresh job group, read after the listener bus drains
-    (job-start events reach the status store asynchronously)."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "job count")
-    out = {"n": 0}
-    try:
-        yield out
-    finally:
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        out["n"] = len(sc.statusTracker().getJobIdsForGroup(group))
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
 
 
 def _strip_schema(root, version: int) -> None:
@@ -243,10 +225,10 @@ def test_reads_launch_no_spark_job(spark, tmp_path):
     plain = _op_merge(spark, tmp_path / "a")
     mapped = _op_merge_partitioned_inherited(spark, tmp_path / "b")
     for path in (plain.root, mapped.root):
-        with _jobs(spark) as jobs:
+        with count_jobs(spark) as jobs:
             read_table(spark, path)
         assert jobs["n"] == 0, path
-    with _jobs(spark) as jobs:
+    with count_jobs(spark) as jobs:
         plain.read(version=1)
     assert jobs["n"] == 0
 
@@ -257,13 +239,13 @@ def test_reads_launch_no_spark_job(spark, tmp_path):
 
     _, hit = cache.get_or_build("totals", totals(), {"t": 2})
     assert not hit
-    with _jobs(spark) as jobs:
+    with count_jobs(spark) as jobs:
         out, hit = cache.get_or_build("totals", totals(), {"t": 2})
     assert hit and jobs["n"] == 0
     assert out.collect()[0]["n"] == 9
 
     _strip_schema(tmp_path / "a" / "t", 2)
-    with _jobs(spark) as jobs:
+    with count_jobs(spark) as jobs:
         read_table(spark, plain.root)
     assert jobs["n"] >= 1
 
