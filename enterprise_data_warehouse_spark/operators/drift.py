@@ -18,11 +18,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.deterministic import (
-    DEC,
     davg,
-    dec2dbl,
     dec2dbl_s,
+    dec_sum,
     dstd_samp,
+    dsum,
     sql_davg,
     sql_dstd_samp,
     sql_dsum,
@@ -113,9 +113,9 @@ def categorical_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = F.col("cnt").cast("double") / F.col("total").cast("double")
     # Per-term cast to decimal before the SUM: double addition is
     # order-dependent, and a last-ULP difference can flip the 6dp rounding.
-    term = (p * F.log(p) / F.log(F.lit(2.0))).cast(DEC)
+    term = p * F.log(p) / F.log(F.lit(2.0))
     entropy = tops.groupBy("lang").agg(
-        F.round(-F.sum(term), 6).cast("double").alias("source_entropy_bits")
+        F.round(-dec_sum(term), 6).cast("double").alias("source_entropy_bits")
     )
     return (
         tops.where(F.col("rn") == 1)
@@ -165,13 +165,10 @@ def regr_slope_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("y"),
     )
 
-    def ds(c):
-        return dec2dbl(F.sum(c.cast(DEC)))
-
     x, y = F.col("x"), F.col("y")
     n = F.count("*")
-    num = n * ds(x * y) - ds(x) * ds(y)
-    den = n * ds(x * x) - ds(x) * ds(x)
+    num = n * dsum(x * y) - dsum(x) * dsum(y)
+    den = n * dsum(x * x) - dsum(x) * dsum(x)
     return pts.groupBy("user_id").agg(
         (num / F.nullif(den, F.lit(0))).alias("value_trend_slope"),
         F.count("*").alias("n_points"),
@@ -231,7 +228,7 @@ def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     props = counts.select(p_ref.alias("p_ref"), p_cur.alias("p_cur"))
     psi_term = (F.col("p_cur") - F.col("p_ref")) * F.log(F.col("p_cur") / F.col("p_ref"))
     return props.agg(
-        dec2dbl_s(F.sum(psi_term.cast(DEC)), 6).alias("psi"),
+        dec2dbl_s(dec_sum(psi_term), 6).alias("psi"),
         F.count("*").alias("n_bins"),
     )
 
@@ -343,7 +340,7 @@ def chi2_category_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # decimal-route the cross-partition sum of double terms (order-independent)
     return scaled.agg(
-        dec2dbl_s(F.sum(term.cast(DEC)), 6).alias("chi2_stat"),
+        dec2dbl_s(dec_sum(term), 6).alias("chi2_stat"),
         (F.count("*") - 1).alias("dof"),
     )
 
@@ -414,13 +411,10 @@ def corr_quantity_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     same result as df.stat.corr but engine-exact and groupable."""
     li = load_table(spark, sf_dir, "lineitem")
 
-    def ds(c):
-        return dec2dbl(F.sum(c.cast(DEC)))
-
     x, y = F.col("l_quantity"), F.col("l_extendedprice")
     n = F.count("*")
-    num = n * ds(x * y) - ds(x) * ds(y)
-    den = F.sqrt(n * ds(x * x) - ds(x) * ds(x)) * F.sqrt(n * ds(y * y) - ds(y) * ds(y))
+    num = n * dsum(x * y) - dsum(x) * dsum(y)
+    den = F.sqrt(n * dsum(x * x) - dsum(x) * dsum(x)) * F.sqrt(n * dsum(y * y) - dsum(y) * dsum(y))
     return li.groupBy("l_returnflag").agg(
         (num / den).alias("qty_price_corr"), F.count("*").alias("n")
     )
@@ -508,7 +502,7 @@ def _psum(x, power: int):
     prod = c
     for _ in range(power - 1):
         prod = prod * c
-    return dec2dbl_s(F.sum(prod.cast(DEC)), 0)
+    return dec2dbl_s(dec_sum(prod), 0)
 
 
 def _sql_psum(x: str, power: int) -> str:

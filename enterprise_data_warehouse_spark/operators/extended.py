@@ -211,6 +211,7 @@ def order_window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("o_totalprice").over(seq).alias("next_price"),
         F.first("o_totalprice").over(seq).alias("first_price"),
         F.last("o_totalprice").over(full).alias("last_price"),
+        # a windowed sum: dec_sum is several aggregates and cannot take .over()
         dec2dbl_s(
             F.sum(F.col("o_totalprice").cast("decimal(38,10)")).over(run), 4
         ).alias("running_spend"),

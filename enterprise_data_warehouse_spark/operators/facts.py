@@ -13,7 +13,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import DEC, dec2dbl, sql_davg, sql_dsum
+from ..functions.deterministic import dec2dbl, dec_sum, sql_davg, sql_dsum
 from ..plans.catalog import Catalog, ModelRegistry, build_fact, build_scd1_dimension
 from ..queries import query
 from ..sources.tables import cpu_parallelism, load_table
@@ -880,10 +880,8 @@ def mv_incremental_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     partials = lambda d: d.groupBy(*keys).agg(  # noqa: E731
         F.count("*").alias("n_rows"),
-        F.sum(F.col("l_quantity").cast(DEC)).alias("qty_dec"),
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(DEC)
-        ).alias("rev_dec"),
+        dec_sum("l_quantity").alias("qty_dec"),
+        dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev_dec"),
     )
     mv = partials(li.where(F.col("l_shipdate") < cutoff))  # the stored MV
     delta_agg = partials(li.where(F.col("l_shipdate") >= cutoff))
@@ -944,7 +942,7 @@ def mv_rollup_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
     ).agg(
         F.count("*").alias("_n"),
-        F.sum(F.col("o_totalprice").cast(DEC)).alias("_sum_dec"),
+        dec_sum("o_totalprice").alias("_sum_dec"),
     )
     # routed monthly answer: re-aggregate the partial states only
     return daily_mv.groupBy(

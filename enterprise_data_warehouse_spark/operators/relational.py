@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import DEC, dec2dbl, sql_dsum
+from ..functions.deterministic import DEC, dec2dbl, dec_sum, sql_dsum
 from ..functions.expressions import band, safe_div, surrogate_key
 from ..queries import query
 from ..sources.tables import load_table
@@ -93,7 +93,7 @@ def conditional_agg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def cond_dsum(cond, alias):
         return dec2dbl(
-            F.coalesce(F.sum(F.when(cond, F.col("o_totalprice").cast(DEC))), F.lit(0).cast(DEC))
+            F.coalesce(dec_sum(F.when(cond, F.col("o_totalprice"))), F.lit(0).cast(DEC))
         ).alias(alias)
 
     return o.groupBy("o_orderstatus").agg(
@@ -492,13 +492,11 @@ def salted_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     salted result is BIT-IDENTICAL to the plain groupBy — which is exactly
     what the oracle checks (its SQL is the unsalted form).
     """
-    from ..functions.deterministic import DEC, dec2dbl
-
     e = load_table(spark, sf_dir, "events")
     salted = e.withColumn("_salt", F.pmod(F.xxhash64("event_id"), F.lit(N_SALTS)))
     partial = salted.groupBy("event_type", "_salt").agg(
         F.count("*").alias("_n"),
-        F.sum(F.col("value").cast(DEC)).alias("_sum"),
+        dec_sum("value").alias("_sum"),
         F.max("value").alias("_max"),
     )
     return partial.groupBy("event_type").agg(

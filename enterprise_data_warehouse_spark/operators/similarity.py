@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import DEC, dec2dbl
+from ..functions.deterministic import davg, dsum
 from ..queries import query
 from ..sources.tables import load_table
 
@@ -596,7 +596,7 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # posexplode is 0-based; the oracle's unnest(range(1, DIM+1)) is 1-based.
     return ex.groupBy("label", "pos").agg(
-        (dec2dbl(F.sum(F.col("x").cast(DEC))) / F.count("x")).alias("component"),
+        davg("x", "component"),
         F.count("x").alias("n_vectors"),
     ).select(
         "label", (F.col("pos") + 1).cast("int").alias("pos"),
@@ -800,7 +800,7 @@ def _lloyd_iterations(e: DataFrame, centroids: DataFrame, iters: int) -> DataFra
         comp = assigned.select(
             "cluster_id", F.posexplode("v").alias("pos", "x")
         ).groupBy("cluster_id", "pos").agg(
-            (dec2dbl(F.sum(F.col("x").cast(DEC))) / F.count("x")).alias("comp")
+            davg("x", "comp")
         )
         centroids = comp.groupBy("cluster_id").agg(
             F.transform(
@@ -1228,10 +1228,10 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.posexplode("emb").alias("pos", "x"),
         )
         comps = scored.groupBy("pos").agg(
-            dec2dbl(F.sum((F.col("score") * F.col("x")).cast(DEC))).alias("comp")
+            dsum(F.col("score") * F.col("x"), "comp")
         )
         n2 = comps.agg(
-            dec2dbl(F.sum((F.col("comp") * F.col("comp")).cast(DEC))).alias("n2")
+            dsum(F.col("comp") * F.col("comp"), "n2")
         )
         normed = comps.crossJoin(F.broadcast(n2)).select(
             "pos", (F.col("comp") / F.sqrt("n2")).alias("val")

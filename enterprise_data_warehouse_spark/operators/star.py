@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import DEC, davg, dec2dbl, dsum, sql_davg, sql_dsum
+from ..functions.deterministic import DEC, davg, dec2dbl, dec_sum, dsum, sql_davg, sql_dsum
 from ..functions.expressions import net_revenue
 from ..queries import query
 from ..sources.tables import load_table, parallelize_degenerate_scan
@@ -92,12 +92,7 @@ def star_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             dec2dbl(
                 F.coalesce(
-                    F.sum(
-                        F.when(
-                            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"),
-                            disc_rev.cast(DEC),
-                        )
-                    ),
+                    dec_sum(F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), disc_rev)),
                     F.lit(0).cast(DEC),
                 )
             ).alias("urgent_discounted_revenue"),
@@ -420,7 +415,7 @@ def segment_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy(F.col("c_mktsegment").alias("segment"), F.col("n_name").alias("nation"))
         .agg(
-            F.round(F.sum(F.col("o_totalprice").cast(DEC)) * 100, 0)
+            F.round(dec_sum("o_totalprice") * 100, 0)
             .cast("long")
             .alias("rev_cents")
         )
@@ -475,7 +470,7 @@ def abc_part_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     part key, shares as single divisions."""
     li = load_table(spark, sf_dir, "lineitem")
     part_rev = li.groupBy("l_partkey").agg(
-        F.round(F.sum(F.col("l_extendedprice").cast(DEC)) * 100, 0)
+        F.round(dec_sum("l_extendedprice") * 100, 0)
         .cast("long")
         .alias("rev_cents")
     )

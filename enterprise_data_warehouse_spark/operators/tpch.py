@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import DEC, davg, dec2dbl, dsum, sql_davg, sql_dsum
+from ..functions.deterministic import davg, dec2dbl, dec_sum, dsum, sql_davg, sql_dsum
 from ..queries import query
 from ..sources.tables import load_table
 
@@ -124,10 +124,8 @@ def market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     n = load_table(spark, sf_dir, "nation")
     vol = _disc_rev()
-    national = F.sum(
-        F.when(F.col("n_name") == "NATION_5", vol.cast(DEC)).otherwise(F.lit(0).cast(DEC))
-    )
-    total = F.sum(vol.cast(DEC))
+    national = dec_sum(F.when(F.col("n_name") == "NATION_5", vol).otherwise(F.lit(0.0)))
+    total = dec_sum(vol)
     return (
         li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
@@ -206,7 +204,7 @@ def important_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(dsum(_disc_rev(), "supplier_value"))
     )
     threshold = li.agg(
-        (dec2dbl(F.sum(_disc_rev().cast(DEC))) * F.lit(0.002)).alias("cutoff")
+        (dsum(_disc_rev()) * F.lit(0.002)).alias("cutoff")
     )
     return (
         per_supp.join(F.broadcast(threshold))
@@ -272,10 +270,8 @@ def promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
     vol = _disc_rev()
-    promo = F.sum(
-        F.when(F.col("p_type") == "PROMO", vol.cast(DEC)).otherwise(F.lit(0).cast(DEC))
-    )
-    total = F.sum(vol.cast(DEC))
+    promo = dec_sum(F.when(F.col("p_type") == "PROMO", vol).otherwise(F.lit(0.0)))
+    total = dec_sum(vol)
     return (
         li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.year("l_shipdate").cast("int").alias("ship_year"))
@@ -410,7 +406,7 @@ def large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast(DEC)).alias("qty"))
+        .agg(dec_sum("l_quantity").alias("qty"))
         .where(F.col("qty") > 140)
         .select("l_orderkey")
     )

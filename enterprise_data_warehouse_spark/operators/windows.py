@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.deterministic import DEC, davg, dec2dbl, dstd_samp, sql_davg, sql_dstd_samp, sql_dsum
+from ..functions.deterministic import DEC, davg, dec2dbl, dec_sum, dstd_samp, sql_davg, sql_dstd_samp, sql_dsum
 from ..queries import query
 from ..sources.tables import load_table
 
@@ -133,6 +133,7 @@ def rolling_1h_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts",
+        # dec_sum is several aggregates in one expression, so it cannot take .over(w)
         dec2dbl(F.sum(F.col("value").cast(DEC)).over(w)).alias("value_sum_1h"),
         F.count("*").over(w).alias("events_1h"),
         F.max("value").over(w).cast("double").alias("value_max_1h"),
@@ -413,6 +414,7 @@ def rolling_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_cols = []
     for name, secs in MATRIX_WINDOWS.items():
         w = Window.partitionBy("user_id").orderBy(epoch).rangeBetween(-secs, 0)
+        # a windowed sum: dec_sum cannot take .over(w) (see rolling_1h_features)
         s = dec2dbl(F.sum(F.col("value").cast(DEC)).over(w))
         n = F.count("*").over(w)
         out_cols += [
@@ -504,10 +506,8 @@ def forecast_baseline_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded frame (at event grain it would be the classic scale killer —
     see rolling_1h_features for that form)."""
     o = load_table(spark, sf_dir, "orders")
-    from ..functions.deterministic import DEC
-
     daily = o.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.round(F.sum(F.col("o_totalprice").cast(DEC)) * 100, 0)
+        F.round(dec_sum("o_totalprice") * 100, 0)
         .cast("long")
         .alias("rev_cents")
     )
@@ -572,7 +572,7 @@ def densify_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact."""
     o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.round(F.sum(F.col("o_totalprice").cast(DEC)) * 100, 0)
+        F.round(dec_sum("o_totalprice") * 100, 0)
         .cast("long")
         .alias("rev_cents")
     )

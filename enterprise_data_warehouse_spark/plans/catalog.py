@@ -98,10 +98,12 @@ def build_fact(src: DataFrame, spec: dict, decimal_sums: bool = True) -> DataFra
         # group, e.g. fact_sales_daily's (date, customer, part) over order
         # lines — measured 5,999,350 groups from 6,001,215 rows at sf1).
         # The default partial→exchange→final plan ships WIDENED partial
-        # rows through the exchange: each decimal-sum partial is a
-        # decimal(38,10)+isEmpty pair (~17 B) where the source double is
-        # 8 B, and with no reduction the partial aggregation only inflates
-        # the shuffle (~2.2× for this measure set). Repartitioning by the
+        # rows through the exchange: each exact-sum partial is three bigint
+        # limbs (dec_sum, 24 B) plus a row count shared by the measures,
+        # where the source double is 8 B, and with
+        # no reduction the partial aggregation only inflates the shuffle
+        # (~2.2× for this measure set, measured with the older
+        # decimal(38,10)+isEmpty buffer). Repartitioning by the
         # group keys FIRST makes the exchange carry the raw narrow rows;
         # the aggregation then runs entirely post-shuffle (partial+final
         # back-to-back, no second exchange). No fixed partition count —

@@ -87,6 +87,8 @@ def tumbling_counts(
         src.groupBy(F.window(ts_col, window_len), F.col("event_type"))
         .agg(
             F.count("*").alias("n_events"),
+            # not dec_sum: the state store keeps this buffer, and a new
+            # buffer shape would not restore from an existing checkpoint
             dec2dbl_s(F.sum(F.col("value").cast("decimal(38,10)")), 4).alias("total_value"),
         )
         .select(
@@ -135,6 +137,7 @@ def session_metrics(
         src.groupBy(F.session_window(F.col(ts_col), gap), F.col("user_id"))
         .agg(
             F.count("*").alias("n_events"),
+            # not dec_sum: a checkpointed state buffer (see tumbling_counts)
             dec2dbl_s(F.sum(F.col("value").cast("decimal(38,10)")), 4).alias("session_value"),
             F.min(ts_col).alias("first_event"),
             F.max(ts_col).alias("last_event"),
@@ -224,6 +227,8 @@ def stream_mv_merge(
         spark = batch.sparkSession
         partial = batch.groupBy(*group_keys).agg(
             F.count("*").alias("n"),
+            # not dec_sum's limbs: sum_dec is the MV's stored DECIMAL(38,10)
+            # state column, and stored MVs must keep their schema
             F.sum(F.col(measure_col).cast("decimal(38,10)")).alias("sum_dec"),
         )
         _adopt_plain(spark, target_path)  # migrate a legacy plain-parquet MV

@@ -96,6 +96,27 @@ def test_pricing_summary_partial_aggregation(spark):
     assert 0 <= exchange_idx < partial_idx, plan
 
 
+def _plan_nodes(node) -> list:
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.inputPlan()
+    kids = node.children()
+    return [node] + [n for i in range(kids.size()) for n in _plan_nodes(kids.apply(i))]
+
+
+def test_pricing_summary_partial_buffer_has_no_decimal(spark):
+    """The exact sums combine map-side in bigint limbs (dec_sum): the
+    partial HashAggregate that feeds the exchange carries no 38-digit
+    decimal buffer."""
+    plan = REG["pricing_summary"].fn(spark, SF)._jdf.queryExecution().executedPlan()
+    partial = [
+        n.schema().simpleString()
+        for n in _plan_nodes(plan)
+        if n.nodeName() == "HashAggregate" and "partial_" in n.toString()
+    ]
+    assert partial, plan_of(REG["pricing_summary"].fn(spark, SF))
+    assert not any("decimal(38,10)" in schema for schema in partial), partial
+
+
 def test_in_list_predicate_pushed(spark):
     """S5: the IN-list feature fetch must push the id filter into the scan."""
     df = REG["feature_fetch_inlist"].fn(spark, SF)
