@@ -13,12 +13,14 @@ oracle_sql) is documented per function.
 
 The sums themselves go through ``dec_sum``, which returns exactly
 ``SUM(CAST(x AS DECIMAL(38,10)))`` from bigint limbs. Measured on the
-300k-row star fixture (4 cores, C1 JIT), five grouped sums cost
-0.65–0.69 CPU-s as doubles, 3.0–3.3 CPU-s as plain decimal sums (about 5×:
-a per-row ``BigDecimal`` cast plus a 38-digit buffer) and 1.6–1.8 CPU-s
-through ``dec_sum``. It stays scale-safe: the sums are one-pass,
-map-side-combinable aggregates, so the shuffle shape is identical at
-100 TB.
+300k-row star fixture (4 cores, C1 JIT, 5 runs each), five grouped sums
+cost 0.41–0.46 JVM CPU-s as doubles, 2.9–3.6 as plain decimal sums (about
+7×: a per-row ``BigDecimal`` cast plus a 38-digit buffer) and 1.6–2.1
+through ``dec_sum``. In exchange each ``dec_sum`` adds about 0.07 s per
+query to build, analyse and plan, whatever the row count, so a plain
+decimal SUM stays cheaper for an aggregate over a few thousand rows. Both
+are one-pass, map-side-combinable aggregates, so the shuffle shape is
+identical at 100 TB.
 """
 
 from __future__ import annotations
@@ -51,20 +53,13 @@ OUT_SCALE = 4  # final round scale before the double conversion.
 # contract the value-hash gate needs.
 
 
-def _jvm_functions():
-    from pyspark import SparkContext
-
-    return getattr(SparkContext._active_spark_context._jvm, "org.apache.spark.sql.functions")
-
-
 def dec2dbl_s(c: Column, scale: int) -> Column:
     """decimal → double at an explicit round scale, engine-independent at
     ANY magnitude (split integer/fraction conversion — see OUT_SCALE
     note). SQL mirror: ``sql_split_dbl(f"ROUND({expr}, {scale})")``."""
-    f = _jvm_functions()  # see dec_sum for why not PySpark's wrappers
-    r = f.round(c._jc, scale)
+    r = F.round(c, scale)
     # pmod(r, 1) is r − floor(r) for a decimal, with r written once
-    return Column(f.floor(r).cast("double").plus(f.pmod(r, f.lit(1)).cast("double")))
+    return F.floor(r).cast("double") + F.pmod(r, F.lit(1)).cast("double")
 
 
 def dec2dbl(c: Column) -> Column:
@@ -73,99 +68,118 @@ def dec2dbl(c: Column) -> Column:
     return dec2dbl_s(c, OUT_SCALE)
 
 
-# dec_sum capacity. A row adds less than 2^32 to the low integer limb,
-# at most 2^27 to the high one, and at most 10^10 + 2^14 to the fraction
-# limb, so no limb can wrap in a group of MAX_ROWS rows. A row needs
-# |x| < 2^59, so that MAX_ROWS of them sum to under 10^27 (5.3e26): the
-# final ``decimal(27,0) + decimal(31,10)`` add is the widest Spark
-# evaluates without dropping a fraction digit.
-MAX_ROWS = (2**63 - 1) // (10**10 + 2**14)  # 922,335,692
-_ROW_LIMIT = 2.0**59
-_WIDE = 2.0**33  # from here on the integer part comes from the decimal cast
-_FAST_LIMIT = 2.0**17
-_HALF_ULP = 2.0**-53 * 1e10  # ½ ulp(x) ≤ |x|·2^-53, in units of 1e-10
-# ≥ the 2^-20 rounding error of t plus the 2^-54·1e10 of x − h, with room
-# for the rounding of the test itself
+# dec_sum capacity, as a weight per row: 1 + |x|·2^-53 for a finite x,
+# and infinite from |x| = 2^63 on, where x no longer fits a bigint. A row
+# adds at most (10^10 + 2)·(1 + |x|·2^-53) to Σr, so while a group's weight
+# stays under CAPACITY no bigint sum can wrap, also in a partial aggregate:
+# |Σr| < (10^10 + 2)·CAPACITY < 2^63, the low limb of Σh stays under
+# 2^32·CAPACITY, and |Σh| < 2^53·CAPACITY < 10^25. The weight is summed as
+# a double; its rounding error (under 10^-7 of the sum for 10^9 rows) is
+# inside the margin CAPACITY keeps below (2^63 − 1) / (10^10 + 2) =
+# 922,337,203.
+CAPACITY = 9.2e8
+_FAST_LIMIT = 2.0**19  # from here on ½ ulp(x) is ½ or more in units of 1e-10
+_HALF_ULP = 2.0**-53 * 1e10  # ½ ulp(x) ≤ min(|x|, 2^18)·2^-53, in units of 1e-10
+# ≥ the 2^-20 rounding error of t, with room for the rounding of the test
 _SLACK = 2e-6
 
 
+def _jvm_functions():
+    """``org.apache.spark.sql.functions`` in the active SparkContext's JVM
+    (see dec_sum for why not PySpark's wrappers)."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        raise RuntimeError("dec_sum needs an active SparkContext")
+    return getattr(sc._jvm, "org.apache.spark.sql.functions")
+
+
 def _split(f, c):
-    """(fast, h, r) as JVM Columns for a column ``c``: the DECIMAL(38,10)
-    cast of ``c`` is exactly ``h + r·1e-10``, and ``fast`` is true where
-    ``r`` needed no decimal cast (see dec_sum)."""
+    """(fast, h, r, w) as JVM Columns for a JVM Column ``c``: the
+    DECIMAL(38,10) cast of ``c`` is exactly ``h + r·1e-10``, ``fast`` is
+    true where ``r`` needed no decimal cast, and ``w`` is the row's
+    capacity weight (see dec_sum)."""
     x = c.cast("double")
     ax = f.abs(x)
-    fl = f.floor(x)
-    t = x.minus(fl).multiply(1e10)
-    # distance from t to the nearest half-integer; t ≥ 0, so t % 1 is exact
-    gap = f.abs(f.pmod(t, f.lit(1.0)).minus(0.5))
-    fast = f.when(ax.lt(_FAST_LIMIT), gap.gt(ax.multiply(_HALF_ULP).plus(_SLACK)))
-    d = c.cast("decimal(29,10)")
-    h = f.when(ax.geq(_WIDE), f.floor(d).cast("bigint")).otherwise(fl)
-    # A row out of range raises here, and so fails the whole aggregate.
-    too_big = f.when(ax.lt(float("inf")), ax.geq(_ROW_LIMIT))  # NULL for NaN, ±Inf
-    d = f.when(too_big, f.raise_error(f.lit("dec_sum: a value has |x| >= 2^59"))).otherwise(d)
-    rd = d.minus(h).multiply(f.lit(Decimal(10**10))).cast("bigint")
-    return fast, h, f.when(fast, f.floor(t.plus(0.5))).otherwise(rd)
+    t = x.mod(1.0).multiply(1e10)
+    # distance from t to the nearest half-integer; t % 1 is exact
+    gap = f.abs(f.abs(t.mod(1.0)).minus(0.5))
+    margin = F.least(Column(ax), F.lit(2.0**18))._jc.multiply(_HALF_ULP).plus(_SLACK)
+    fast = f.when(ax.lt(_FAST_LIMIT), gap.gt(margin))  # NULL, so false, from 2^19 on
+    h = x.try_cast("bigint")  # x truncated; NULL for NaN and ±Inf
+    rd = c.cast("decimal(29,10)").minus(h).multiply(f.lit(Decimal(10**10))).cast("bigint")
+    w = f.when(ax.lt(2.0**63), ax.multiply(2.0**-53).plus(1.0))
+    w = w.when(ax.lt(float("inf")), float("inf"))  # NULL for NaN and ±Inf
+    return fast, h, f.when(fast, f.floor(t.plus(0.5))).otherwise(rd), w
 
 
 def dec_sum(col: Column | str) -> Column:
     """``SUM(CAST(x AS DECIMAL(38,10)))``, the same type and the same value,
-    with an aggregation buffer of bigint sums instead of a 38-digit decimal
-    and, for most rows, no per-row BigDecimal.
+    with an aggregation buffer of three bigint sums and a double instead of
+    a 38-digit decimal and, for most rows, no per-row BigDecimal.
 
-    Each row is split into an integer part ``h`` and a fraction ``r`` in
-    units of 1e-10, so that the row's cast is exactly ``h + r·1e-10``. The
-    group sums Σr, and Σh as a limb of its low 32 bits plus a limb of the
-    bits above, are bigints. The result is ``Σh + Σr·1e-10`` as
-    ``DECIMAL(38,10)``, NULL when no row contributed.
+    Each row is split into ``h``, x truncated toward zero, and a fraction
+    ``r`` in units of 1e-10, so that the row's cast is exactly
+    ``h + r·1e-10``. The group sums Σr, and Σh as a limb of its low 32 bits
+    plus a limb of the bits above, are bigints, and the result is
+    ``Σh + Σr·1e-10`` as ``DECIMAL(38,10)``, NULL when no row contributed.
+    ``r`` comes from the fast path or, for the other rows (near-ties,
+    |x| ≥ 2^19, NaN, ±Inf and nulls), is ``(d − h)·1e10``, where ``d`` is
+    the real cast. That cast goes to ``decimal(29,10)``: with
+    ``decimal(38,10) - h`` Spark's precision-loss rule silently drops the
+    last digit. NaN and ±Inf cast to NULL and add nothing, as in the plain
+    SUM.
 
-    ``h`` is ``floor(x)`` below |x| = 2^33 and ``floor(d)`` above, where
-    ``d`` is the real cast. ``r`` comes from the fast path or, for the
-    other rows (near-ties, |x| ≥ 2^17, NaN, ±Inf and nulls), is
-    ``(d − h)·1e10``; below 2^33 that lies within 2^14 of [0, 1e10],
-    because the cast is within ½ ulp(x) of x. The cast goes to
-    ``decimal(29,10)``: with ``decimal(38,10) - floor`` Spark's
-    precision-loss rule silently drops the last digit. NaN and ±Inf cast to
-    NULL and add nothing, as in the plain SUM.
-
-    **Fast path.** With ``h = floor(x)`` and ``t = (x - h)·1e10``,
-    ``r = floor(t + 0.5)`` where ``|x| < 2^17`` and the distance from ``t``
-    to the nearest half-integer exceeds ``|x|·2^-53·1e10 + 2e-6``. Why it
-    is exact:
+    **Fast path.** With ``t = (x % 1)·1e10``, ``r = floor(t + 0.5)`` where
+    ``|x| < 2^19`` and the distance from ``t`` to the nearest half-integer
+    exceeds ``min(|x|, 2^18)·2^-53·1e10 + 2e-6``. Why it is exact:
 
     - Spark's cast rounds R = ``Double.toString(x)`` HALF_UP to 10 places.
-      R parses back to x, so |R − x| ≤ ½ ulp(x) ≤ |x|·2^-53. (Float inputs
-      and integers below 2^17 convert to double exactly; a decimal input's
-      double is its correctly rounded value, so the bound holds with R the
-      decimal itself.)
-    - ``x - h`` is exact unless −½ < x < 0, and then off by at most 2^-54.
-      ``t`` adds at most ½ ulp(2^34) = 2^-20 ≈ 9.5e-7 more. Together that
-      is under 1.6e-6 in units of 1e-10.
+      R parses back to x, so |R − x| ≤ ½ ulp(x): at most |x|·2^-53 below
+      2^18, and exactly 2^-35 = 2^18·2^-53 on [2^18, 2^19). Nothing else
+      about ``toString`` is used, so the JDK's choice among the decimals
+      that parse back to x does not matter. (Float inputs and integers
+      below 2^19 convert to double exactly; a decimal input's double is its
+      correctly rounded value, so the bound holds with R the decimal
+      itself.)
+    - ``x % 1`` is exactly x − h. ``t`` adds at most ½ ulp(2^34) = 2^-20
+      ≈ 9.5e-7 of rounding, in units of 1e-10.
     - So (R − h)·1e10 is within the margin of ``t``. When no half-integer
       lies within the margin of ``t``, (R − h)·1e10 and ``t`` round to the
-      same integer ``r``, with no tie to break, and the cast is exactly
-      ``h + r·1e-10``.
+      same nearest integer ``r``, with no tie to break, and the cast is
+      exactly ``h + r·1e-10``.
 
-    **Capacity.** Exact for a group of at most ``MAX_ROWS`` (922,335,692)
-    rows, each with |x| < 2^59 (5.8e17). Outside it ``dec_sum`` raises,
-    with ANSI on or off, so a wrapped bigint is never returned. The plain
-    decimal SUM reaches 10^28 per row and per group.
+    From 2^19 on, ½ ulp(x) is ½ or more in units of 1e-10, so no margin
+    works there. A value with few decimal places has ``t`` next to an
+    integer: below 2^18 it always takes the fast path, and on
+    [2^18, 2^19) about 70% of such values do.
 
-    The expression is built through the JVM Column API: each PySpark
-    Column call also records its Python call site, about seven py4j round
-    trips, so building it through PySpark took about 80 ms a call against
-    about 25 ms this way (a plain decimal SUM takes about 5 ms).
+    **Capacity.** A finite row with |x| < 2^63 (9.2e18) weighs
+    1 + |x|·2^-53, so about 1, and a group may weigh up to ``CAPACITY``
+    (9.2e8): about 920M rows, with a Σ|x| of up to 8.3e24. A larger row or
+    a heavier group raises, with ANSI on or off, so a wrapped bigint is
+    never returned. The plain decimal SUM reaches 10^28 and has no row
+    limit.
+
+    **Built through the JVM Column API.** Each PySpark Column call also
+    records its Python call site (about seven py4j round trips), which made
+    building one dec_sum through PySpark's wrappers cost about 80 ms
+    against about 25 ms this way. In one JVM on the 300k-row star fixture
+    (10 interleaved runs each), ``pricing_summary`` (seven exact sums) took
+    1.99 s with plain decimal sums, 2.05 s with dec_sum built through
+    PySpark and 1.60 s built this way. Errors from the expression carry no
+    Python call site; the capacity error names dec_sum. Like the rest of
+    the engine, this needs classic (not Connect) PySpark.
     """
     f = _jvm_functions()
-    _, h, r = _split(f, f.col(col) if isinstance(col, str) else col._jc)
-    lo = f.sum(h.bitwiseAND(0xFFFFFFFF)).cast("decimal(20,0)")
-    hi = f.sum(f.shiftright(h, 32)).cast("decimal(20,0)")
-    whole = hi.multiply(f.lit(Decimal(2**32))).plus(lo).cast("decimal(27,0)")
-    total = whole.plus(f.sum(r).cast("decimal(20,0)").multiply(f.lit(Decimal("1E-10"))))
-    over = f.count(f.lit(1)).gt(MAX_ROWS)
+    _, h, r, w = _split(f, f.col(col) if isinstance(col, str) else col._jc)
+    lo = f.sum(h.bitwiseAND(0xFFFFFFFF)).cast("decimal(19,0)")
+    hi = f.sum(f.shiftright(h, 32)).cast("decimal(19,0)")
+    whole = hi.multiply(f.lit(Decimal(2**32))).plus(lo).cast("decimal(26,0)")
+    total = whole.plus(f.sum(r).cast("decimal(19,0)").multiply(f.lit(Decimal("1E-10"))))
     capacity = f.raise_error(f.lit("dec_sum: group exceeds the exact-sum capacity"))
-    return Column(f.when(over, capacity).otherwise(total))  # decimal(38,10)
+    return Column(f.when(f.sum(w).gt(CAPACITY), capacity).otherwise(total.cast(DEC)))
 
 
 def dsum(col: Column | str, alias: str | None = None) -> Column:

@@ -13,7 +13,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.deterministic import dec2dbl, dec_sum, sql_davg, sql_dsum
+from ..functions.deterministic import DEC, dec2dbl, dec_sum, sql_davg, sql_dsum
 from ..plans.catalog import Catalog, ModelRegistry, build_fact, build_scd1_dimension
 from ..queries import query
 from ..sources.tables import cpu_parallelism, load_table
@@ -942,7 +942,7 @@ def mv_rollup_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
     ).agg(
         F.count("*").alias("_n"),
-        dec_sum("o_totalprice").alias("_sum_dec"),
+        F.sum(F.col("o_totalprice").cast(DEC)).alias("_sum_dec"),
     )
     # routed monthly answer: re-aggregate the partial states only
     return daily_mv.groupBy(

@@ -691,7 +691,7 @@ def target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats table is tiny and BROADCASTS; the global mean comes from a
     window over that tiny frame, so no 1-row crossJoin and no second fact
     scan."""
-    from ..functions.deterministic import DEC, dec2dbl, dec_sum
+    from ..functions.deterministic import DEC, dec2dbl
 
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
@@ -701,7 +701,7 @@ def target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").alias("target"),
     )
     seg = base.groupBy("segment").agg(
-        dec_sum("target").alias("seg_sum_dec"),
+        F.sum(F.col("target").cast(DEC)).alias("seg_sum_dec"),
         F.count("*").alias("n_seg"),
     )
     w = Window.partitionBy()  # |segments| rows: global stats without rescan

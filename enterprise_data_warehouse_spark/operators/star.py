@@ -277,7 +277,15 @@ def shipping_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderdate").cast("date").alias("order_date"),
             "o_orderpriority",
         )
-        .agg(dsum(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), "revenue"))
+        .agg(
+            # A plain decimal SUM, not dsum: this aggregate sees 1,467 rows
+            # at sf0.05, and dsum's bigint-limb split adds about 0.12 s a
+            # query to build, analyse and plan (about 300 expression nodes
+            # against 37) to save about 1.4 µs a row.
+            dec2dbl(
+                F.sum((F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(DEC))
+            ).alias("revenue")
+        )
         .select("l_orderkey", "revenue", "order_date", "o_orderpriority")
         .orderBy(F.desc("revenue"), "l_orderkey")
         .limit(10)
@@ -415,7 +423,7 @@ def segment_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy(F.col("c_mktsegment").alias("segment"), F.col("n_name").alias("nation"))
         .agg(
-            F.round(dec_sum("o_totalprice") * 100, 0)
+            F.round(F.sum(F.col("o_totalprice").cast(DEC)) * 100, 0)
             .cast("long")
             .alias("rev_cents")
         )

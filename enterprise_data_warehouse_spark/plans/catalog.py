@@ -99,8 +99,8 @@ def build_fact(src: DataFrame, spec: dict, decimal_sums: bool = True) -> DataFra
         # lines — measured 5,999,350 groups from 6,001,215 rows at sf1).
         # The default partial→exchange→final plan ships WIDENED partial
         # rows through the exchange: each exact-sum partial is three bigint
-        # limbs (dec_sum, 24 B) plus a row count shared by the measures,
-        # where the source double is 8 B, and with
+        # limbs and a double capacity weight (dec_sum, 32 B) where the
+        # source double is 8 B, and with
         # no reduction the partial aggregation only inflates the shuffle
         # (~2.2× for this measure set, measured with the older
         # decimal(38,10)+isEmpty buffer). Repartitioning by the

@@ -31,9 +31,13 @@ def _adversarial(seed: int = 20261018, n: int = 3000) -> list[float | None]:
     for _ in range(n // 3):  # exact decimal ties at the 11th place, |x| < 2^17 and above
         whole = rng.choice((rng.randrange(-(2**17), 2**17), rng.randrange(-(10**9), 10**9)))
         xs.append(float(f"{whole}.{rng.randrange(10**10):010d}5"))
-    for _ in range(n // 3):  # short decimals below 2^17, the common case
-        xs.append(rng.randrange(-(2**17) * 100, 2**17 * 100) / 100.0)
-    edges = [0.0, -0.0, 2.0**17, -(2.0**17), 2.0**31, -(2.0**31), 2.0**32, -(2.0**32)]
+    for _ in range(n // 3):  # short decimals below 2^20, the common case
+        xs.append(rng.randrange(-(2**20) * 100, 2**20 * 100) / 100.0)
+    for _ in range(n // 3):  # near-ties on [2^17, 2^20), where ½ ulp(x) nears the margin
+        tie = rng.randrange(2**17, 2**20) + (rng.randrange(10**10) + 0.5) * 1e-10
+        xs += [s * math.nextafter(tie, d) for s in (-1.0, 1.0) for d in (0.0, math.inf)]
+    edges = [0.0, -0.0, 2.0**17, -(2.0**17), 2.0**18, -(2.0**18), 2.0**19, -(2.0**19)]
+    edges += [2.0**31, -(2.0**31), 2.0**32, -(2.0**32)]
     edges += [math.nextafter(e, 0.0) for e in edges] + [math.nextafter(e, math.inf) for e in edges]
     edges += [2.0**58, -(2.0**58), 5e-324, -5e-324, 1e-11, 5e-11, -5e-11]
     xs += edges
@@ -96,10 +100,15 @@ def test_dec_sum_empty_input(adversarial, ansi):
 
 def test_dec_sum_fast_path_reaches_both_sides(adversarial):
     """The comparison above is only meaningful if both the fast split and
-    the fallback cast carry rows of the fixture."""
-    fast = Column(det._split(det._jvm_functions(), F.col("x")._jc)[0])
-    n_fast, n = adversarial.agg(F.sum(fast.cast("int")), F.count("*")).first()
+    the fallback cast carry rows of the fixture, also on [2^18, 2^19),
+    where the margin is widest."""
+    fast = Column(det._split(det._jvm_functions(), F.col("x")._jc)[0]).cast("int")
+    top = F.abs("x").between(2.0**18, 2.0**19)
+    n_fast, n, top_fast, n_top = adversarial.agg(
+        F.sum(fast), F.count("*"), F.sum(F.when(top, fast)), F.count(F.when(top, 1))
+    ).first()
     assert min(n_fast, n - n_fast) >= 1000, (n_fast, n)
+    assert min(top_fast, n_top - top_fast) >= 100, (top_fast, n_top)
 
 
 def _raises(df, col, match="dec_sum"):
@@ -107,26 +116,27 @@ def _raises(df, col, match="dec_sum"):
         df.groupBy("g").agg(dec_sum(col)).collect()
 
 
-def test_dec_sum_row_range_raises(spark, ansi):
+def test_dec_sum_capacity_raises(spark, ansi, monkeypatch):
+    """A row beyond 2^63, or a group heavier than CAPACITY, raises; lighter
+    groups stay exact."""
     # beyond 1e19 an ANSI session may hit the decimal cast's overflow first
-    for big in (2.0**59, -(2.0**59), 1e19, 1e27):
-        df = spark.createDataFrame([(0, 1.0), (0, big)], SCHEMA)
-        _raises(df, "x", match="dec_sum|NUMERIC_VALUE_OUT_OF_RANGE")
-    ok = [(0, s * math.nextafter(2.0**59, 0.0)) for s in (1.0, -1.0, 1.0)]
+    for big in (2.0**63, -(2.0**63), 1e19, 1e27):
+        _raises(spark.createDataFrame([(0, 1.0), (0, big)], SCHEMA), "x",
+                match="dec_sum|NUMERIC_VALUE_OUT_OF_RANGE")
+    edge = math.nextafter(2.0**63, 0.0)
+    ok = [(0, 2.0**59), (0, -(2.0**59)), (0, edge), (0, edge), (0, -edge), (0, 0.5)]
     row = (
         spark.createDataFrame(ok, SCHEMA)
         .groupBy("g")
         .agg(dec_sum("x").alias("s"), F.sum(F.col("x").cast(DEC)).alias("r"))
         .first()
     )
-    assert row["s"] == row["r"] > 5e17
-
-
-def test_dec_sum_capacity_guard_raises(spark, ansi, monkeypatch):
-    """The row-count guard raises instead of returning a wrapped limb. The
-    real capacity (922M rows) is too large to build in a test, so it is
-    lowered."""
-    monkeypatch.setattr(det, "MAX_ROWS", 3)
+    assert row["s"] == row["r"] > 9e18
+    # The real capacity (9.2e8) is too large to reach in a test, so it is
+    # lowered: small values weigh about 1 each, so the guard bounds the row
+    # count, and large ones weigh more.
+    monkeypatch.setattr(det, "CAPACITY", 3.5)
     small = spark.createDataFrame([(0, 0.5)] * 3, SCHEMA)
     assert small.groupBy("g").agg(dec_sum("x").alias("s")).first()["s"] == Decimal("1.5")
     _raises(spark.createDataFrame([(0, 0.5)] * 4, SCHEMA), "x")
+    _raises(spark.createDataFrame([(0, 3 * 2.0**53)], SCHEMA), "x")
