@@ -105,6 +105,7 @@ def _split(f, c):
     t = x.mod(1.0).multiply(1e10)
     # distance from t to the nearest half-integer; t % 1 is exact
     gap = f.abs(f.abs(t.mod(1.0)).minus(0.5))
+    # least() takes varargs, which py4j cannot pass, so PySpark builds it
     margin = F.least(Column(ax), F.lit(2.0**18))._jc.multiply(_HALF_ULP).plus(_SLACK)
     fast = f.when(ax.lt(_FAST_LIMIT), gap.gt(margin))  # NULL, so false, from 2^19 on
     h = x.try_cast("bigint")  # x truncated; NULL for NaN and ±Inf
