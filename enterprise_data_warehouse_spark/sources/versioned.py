@@ -1242,7 +1242,11 @@ class VersionedTable:
                                extra_meta=extra_meta)
         target = self.read(version=current, merge_schema=evolve_schema,
                            meta=meta)
-        survivors = target.join(src.select(*keys).distinct(), list(keys), "left_anti")
+        # the key set is not de-duplicated: a left-anti join keeps a row
+        # exactly when no key matches, so duplicate (or null) keys give the
+        # same survivors, and a distinct() would add a shuffle stage and a
+        # job that the broadcast build waits for
+        survivors = target.join(src.select(*keys), list(keys), "left_anti")
         merged = src.unionByName(survivors, allowMissingColumns=evolve_schema)
         return self.commit(merged, op="merge", at_version=current + 1,
                            stats_cols=self._inherited_stats_cols(current, meta),
@@ -1264,7 +1268,16 @@ class VersionedTable:
 
         The staged dir nests one subdir per touched partition
         (``_pv=<value>``); the partition column itself stays in the data
-        files so a mapped subdir is self-contained.
+        files so a mapped subdir is self-contained. The write is rebalanced
+        on ``_pv``, so a small partition is ONE file: written straight from
+        the delta and survivor-scan tasks, every task wrote a file into
+        every partition it held (8 files per dir for a delta of 8 tasks,
+        and touched dirs kept growing merge after merge). A rebalance, not
+        a repartition, because AQE then also splits a skewed partition into
+        advisory-size files. On the perfbench ingest round this cut the
+        files written per pass (parquet plus ``.crc`` sidecars, markers)
+        from 88 to 48; every file create forks a ``chmod`` on a Hadoop local
+        FS without its native library (SCALING.md, protocol section).
 
         Contract: the merge key must be PARTITION-STABLE (a key never
         moves between partition values) — survivors are read only from
@@ -1299,9 +1312,9 @@ class VersionedTable:
             # merge): one-time full conversion — every row must land in a
             # mapped dir or the new marker would silently drop it
             target = self.read(version=current, meta=prev)
-            survivors = target.join(
-                src.select(*keys).distinct(), list(keys), "left_anti"
-            )
+            # key set not de-duplicated, as in merge(): the anti-join's
+            # result is the same with duplicate or null keys
+            survivors = target.join(src.select(*keys), list(keys), "left_anti")
             merged = src.unionByName(survivors)
         else:
             existing_rel = [parts[p] for p in touched if p in parts]
@@ -1309,18 +1322,27 @@ class VersionedTable:
                 target = self._reader((prev or {}).get("schema")).parquet(
                     *[self._abs(rel) for rel in existing_rel]
                 )
+                # key set not de-duplicated, as in merge()
                 survivors = target.join(
-                    src.select(*keys).distinct(), list(keys), "left_anti"
-                )
+                    src.select(*keys), list(keys), "left_anti")
                 merged = src.unionByName(survivors)
             else:
                 merged = src
         dirname = f"v{version:08d}-{uuid.uuid4().hex[:8]}"
         # duplicate the partition key into _pv: hive layout on _pv gives one
-        # subdir per value while partition_col survives inside the files
-        merged.withColumn("_pv", F.col(partition_col).cast("string")).write.mode(
-            "error"
-        ).partitionBy("_pv").parquet(f"{self.root}/{dirname}")
+        # subdir per value while partition_col survives inside the files.
+        # Shuffled on _pv so one task writes each touched partition (not
+        # tasks × partitions files). A rebalance, not a repartition: AQE
+        # coalesces small partitions and splits a skewed one into
+        # advisory-size files. Spark drops the rebalance hint when AQE is
+        # off, so there a hash repartition keeps one file per value.
+        out = merged.withColumn("_pv", F.col(partition_col).cast("string"))
+        if self.spark.conf.get("spark.sql.adaptive.enabled").lower() == "true":
+            out = out.hint("rebalance", "_pv")
+        else:
+            out = out.repartition("_pv")
+        out.write.mode("error").partitionBy("_pv").parquet(
+            f"{self.root}/{dirname}")
         # map values from the dirs actually written (hive-escaped names)
         from urllib.parse import unquote
 
@@ -1476,8 +1498,10 @@ class VersionedTable:
             )
         current, meta = self.current()
         target = self.read(version=current, meta=meta)
-        keyset = subject_keys.select(*keys).distinct()
-        survivors = target.join(keyset, list(keys), "left_anti")
+        # key set not de-duplicated, as in merge(): a subject listed twice
+        # (or a null key) leaves the anti-join's survivors unchanged
+        survivors = target.join(subject_keys.select(*keys), list(keys),
+                                "left_anti")
         n_before = target.count()
         # pinned: a rival committing mid-erase raises instead of having its
         # rows silently purged by a commit derived from the stale read

@@ -7,11 +7,16 @@ from __future__ import annotations
 
 import os
 
+import pytest
+from pyspark.sql import functions as F
+
 from enterprise_data_warehouse_spark.sources.sink import (
     merge_upsert_partitioned,
     read_table,
 )
 from enterprise_data_warehouse_spark.sources.versioned import VersionedTable
+
+from .conftest import count_jobs
 
 
 def _files_with_mtimes(root: str, rel: str) -> dict[str, float]:
@@ -579,3 +584,86 @@ def test_wm_memo_mixed_second_and_microsecond_precision(spark, tmp_path):
     assert (t._read_marker(t.current_version())["wm"]["updated_at"]
             == "2024-01-02 10:00:00.600000")
     assert sorted(r.id for r in t.read().collect()) == [1, 3]
+
+
+def _month(i: int) -> str:
+    # partition-stable: a key's month never changes between merges
+    return f"2024-{i % 6 + 1:02d}"
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_merge_partitioned_writes_one_file_per_partition(spark, tmp_path, aqe):
+    """A source spread over 8 tasks, then three merges touching
+    overlapping partitions: every _pv dir of every new version holds
+    exactly one parquet file (the write is rebalanced on _pv; without it
+    each task writes into every partition it holds), with AQE on and off.
+    Rows and Σ match a pure-Python model."""
+    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        t = VersionedTable(spark, str(tmp_path / "fact"))
+        model: dict[int, tuple[str, int]] = {}
+
+        def merge(ids, rnd):
+            rows = [(i, _month(i), i * 10 + rnd * 1000) for i in ids]
+            src = spark.createDataFrame(
+                rows, "id int, month string, amount long").repartition(8)
+            assert src.rdd.getNumPartitions() == 8
+            t.merge_partitioned(src, ["id"], "month")
+            model.update({i: (m, a) for i, m, a in rows})
+            meta = t._read_marker(t.current_version())
+            staged = os.path.join(t.root, meta["dir"])
+            pv_dirs = [d for d in os.listdir(staged) if d.startswith("_pv=")]
+            assert sorted(d[len("_pv="):] for d in pv_dirs) == sorted(
+                {_month(i) for i in ids})
+            for d in pv_dirs:
+                files = [f for f in os.listdir(os.path.join(staged, d))
+                         if f.endswith(".parquet")]
+                assert len(files) == 1, (rnd, d, files)
+
+        merge(range(200), 0)
+        # rounds touch months {1,2,3}, {2,3,4}, {3,4,5}: updates plus inserts
+        for rnd in (1, 2, 3):
+            merge([i for i in range(300) if i % 6 in (rnd - 1, rnd, rnd + 1)],
+                  rnd)
+
+        got = sorted((r["id"], r["month"], r["amount"])
+                     for r in t.read().collect())
+        assert got == sorted((i, m, a) for i, (m, a) in model.items())
+        total = t.read().agg(F.sum("amount")).first()[0]
+        assert total == sum(a for _, a in model.values())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+
+
+def test_merge_partitioned_onto_existing_map_job_count(spark, tmp_path):
+    """A merge onto an existing map launches no more jobs than before the
+    rebalanced write. Measured before it (AQE on, 8 shuffle partitions):
+    5 jobs for a delta read from parquet, 6 for one built from Python rows.
+
+    With a parquet delta the anti-join is planned as a broadcast join from
+    the start: the rebalance's shuffle job replaces the job of the dropped
+    key-set distinct (2 for the touched-partition collect, the broadcast,
+    the rebalance, the write). A delta of unknown size (Python rows) is
+    first planned as a sort-merge anti-join whose key-side exchange runs
+    with or without the distinct, so there the rebalance costs one job
+    more: 7."""
+    schema = "id int, val string, p string"
+    t = VersionedTable(spark, str(tmp_path / "fact"))
+    t.merge_partitioned(spark.createDataFrame(
+        [(i, str(i), f"p{i % 3}") for i in range(30)], schema), ["id"], "p")
+    spark.createDataFrame(
+        [(i, f"n{i}", f"p{i % 3}") for i in range(0, 40, 4)], schema
+    ).write.parquet(str(tmp_path / "delta"))
+    delta = spark.read.schema(schema).parquet(str(tmp_path / "delta"))
+    with count_jobs(spark) as jobs:
+        t.merge_partitioned(delta, ["id"], "p")
+    assert jobs["n"] <= 5
+    rows = spark.createDataFrame(
+        [(i, f"m{i}", f"p{i % 3}") for i in range(0, 40, 4)], schema)
+    with count_jobs(spark) as jobs:
+        t.merge_partitioned(rows, ["id"], "p")
+    assert jobs["n"] <= 7
+    got = {r["id"]: r["val"] for r in t.read().collect()}
+    assert got == {i: (f"m{i}" if i % 4 == 0 else str(i)) for i in range(40)
+                   if i < 30 or i % 4 == 0}

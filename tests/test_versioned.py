@@ -2276,3 +2276,43 @@ def test_bloom_collection_fails_open_without_pandas_udf(spark, tmp_path, monkeyp
     assert t.read().count() == 100
     # probing still works (no bloom -> full read, answer preserved)
     assert t.read(prune={"user_id": 3}).where("user_id = 3").count() > 0
+
+
+def test_anti_joins_keep_duplicate_and_null_key_semantics(spark, tmp_path):
+    """merge, merge_partitioned and erase anti-join against the source's
+    key column as it is, without de-duplicating it. A delta that repeats a
+    key with two different rows and carries a null key gives the rows
+    below, recorded before the key-set distinct was dropped: both rows of
+    the repeated key land, a null key replaces nothing (a null target key
+    survives beside the new null row), and erase removes the repeated
+    subject once and no null-key row."""
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()),
+                      key=lambda r: tuple((v is None, v) for v in r))
+
+    t = VersionedTable(spark, str(tmp_path / "m"))
+    t.commit(_mk(spark, [(1, "a"), (2, "b"), (3, "c"), (None, "t-null")]))
+    t.merge(_mk(spark, [(2, "b1"), (2, "b2"), (None, "d-null"), (4, "d")]),
+            ["id"])
+    assert rows(t.read()) == [
+        (1, "a"), (2, "b1"), (2, "b2"), (3, "c"), (4, "d"),
+        (None, "d-null"), (None, "t-null")]
+
+    schema = "id int, val string, p string"
+    t = VersionedTable(spark, str(tmp_path / "mp"))
+    t.merge_partitioned(spark.createDataFrame(
+        [(1, "a", "x"), (2, "b", "x"), (3, "c", "y"), (None, "t-null", "x")],
+        schema), ["id"], "p")
+    t.merge_partitioned(spark.createDataFrame(
+        [(2, "b1", "x"), (2, "b2", "x"), (None, "d-null", "x"), (4, "d", "y")],
+        schema), ["id"], "p")
+    assert rows(t.read()) == [
+        (1, "a", "x"), (2, "b1", "x"), (2, "b2", "x"), (3, "c", "y"),
+        (4, "d", "y"), (None, "d-null", "x"), (None, "t-null", "x")]
+
+    t = VersionedTable(spark, str(tmp_path / "e"))
+    t.commit(_mk(spark, [(1, "a"), (2, "b"), (3, "c"), (None, "t-null")]))
+    audit = t.erase(
+        spark.createDataFrame([(2,), (2,), (None,)], "id int"), ["id"])
+    assert audit == {"version": 2, "n_erased": 1, "purged_versions": [1]}
+    assert rows(t.read()) == [(1, "a"), (3, "c"), (None, "t-null")]
