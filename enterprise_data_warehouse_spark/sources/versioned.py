@@ -1268,16 +1268,25 @@ class VersionedTable:
 
         The staged dir nests one subdir per touched partition
         (``_pv=<value>``); the partition column itself stays in the data
-        files so a mapped subdir is self-contained. The write is rebalanced
-        on ``_pv``, so a small partition is ONE file: written straight from
+        files so a mapped subdir is self-contained. The write is shuffled
+        on ``_pv`` (a rebalance under AQE), so each touched partition under
+        AQE's advisory partition size is ONE file. Written straight from
         the delta and survivor-scan tasks, every task wrote a file into
         every partition it held (8 files per dir for a delta of 8 tasks,
-        and touched dirs kept growing merge after merge). A rebalance, not
-        a repartition, because AQE then also splits a skewed partition into
-        advisory-size files. On the perfbench ingest round this cut the
-        files written per pass (parquet plus ``.crc`` sidecars, markers)
-        from 88 to 48; every file create forks a ``chmod`` on a Hadoop local
-        FS without its native library (SCALING.md, protocol section).
+        and touched dirs kept growing merge after merge). On the perfbench
+        ingest round this cut the files written per pass (parquet plus
+        ``.crc`` sidecars, markers) from 88 to 48; every file create forks
+        a ``chmod`` on a Hadoop local FS without its native library
+        (SCALING.md, protocol section). The rebalance, not a plain
+        repartition, because AQE splits a partition above the advisory
+        size across tasks: merging 2M-row partitions on 4 cores took
+        2.1 s unshuffled, 3.0 s rebalanced and 6.0 s repartitioned (one
+        task per partition). So the shuffle costs merges of a few large
+        partitions; it pays where many small partitions meet many tasks.
+
+        The survivor anti-join broadcasts the delta's keys when the
+        touched-partition collect's row count says they are small
+        (``_delta_keys``).
 
         Contract: the merge key must be PARTITION-STABLE (a key never
         moves between partition values) — survivors are read only from
@@ -1302,19 +1311,23 @@ class VersionedTable:
         # found (a str(None) or '' key would orphan the existing default
         # partition — data loss on the second merge touching it)
         null_key = "__HIVE_DEFAULT_PARTITION__"
+        # row counts per partition value: the same aggregate as a
+        # distinct(), and its total sizes the anti-join's key side
+        counts = src.groupBy(F.col(partition_col).cast("string")).count().collect()
         touched = sorted({
             null_key if r[0] is None or r[0] == "" else str(r[0])
-            for r in src.select(F.col(partition_col).cast("string")).distinct().collect()
+            for r in counts
         })  # a set: null and '' both map to null_key — a duplicated entry
         # would read the default partition's survivor files twice
+        # both survivor anti-joins below take the delta's key column as it
+        # is, not de-duplicated (as in merge()), and broadcast when small
+        keyset = self._delta_keys(src, keys, sum(r[1] for r in counts))
         if prev and not parts:
             # current version is NOT partition-mapped (plain commit/adopt/
             # merge): one-time full conversion — every row must land in a
             # mapped dir or the new marker would silently drop it
             target = self.read(version=current, meta=prev)
-            # key set not de-duplicated, as in merge(): the anti-join's
-            # result is the same with duplicate or null keys
-            survivors = target.join(src.select(*keys), list(keys), "left_anti")
+            survivors = target.join(keyset, list(keys), "left_anti")
             merged = src.unionByName(survivors)
         else:
             existing_rel = [parts[p] for p in touched if p in parts]
@@ -1322,26 +1335,22 @@ class VersionedTable:
                 target = self._reader((prev or {}).get("schema")).parquet(
                     *[self._abs(rel) for rel in existing_rel]
                 )
-                # key set not de-duplicated, as in merge()
-                survivors = target.join(
-                    src.select(*keys), list(keys), "left_anti")
+                survivors = target.join(keyset, list(keys), "left_anti")
                 merged = src.unionByName(survivors)
             else:
                 merged = src
         dirname = f"v{version:08d}-{uuid.uuid4().hex[:8]}"
         # duplicate the partition key into _pv: hive layout on _pv gives one
         # subdir per value while partition_col survives inside the files.
-        # Shuffled on _pv so one task writes each touched partition (not
-        # tasks × partitions files). A rebalance, not a repartition: AQE
-        # coalesces small partitions and splits a skewed one into
-        # advisory-size files. Spark drops the rebalance hint when AQE is
-        # off, so there a hash repartition keeps one file per value.
-        out = merged.withColumn("_pv", F.col(partition_col).cast("string"))
-        if self.spark.conf.get("spark.sql.adaptive.enabled").lower() == "true":
-            out = out.hint("rebalance", "_pv")
-        else:
-            out = out.repartition("_pv")
-        out.write.mode("error").partitionBy("_pv").parquet(
+        # Shuffled on _pv so one task writes each touched partition as one
+        # file, not one file per writing task (the fix sink.write_clustered
+        # makes). The rebalance hint replaces the repartition under AQE
+        # (the optimizer collapses the pair into the rebalance), which also
+        # splits a partition above the advisory size across tasks; Spark
+        # drops the hint when AQE is off, leaving the hash repartition.
+        merged.withColumn("_pv", F.col(partition_col).cast("string")).repartition(
+            "_pv"
+        ).hint("rebalance", "_pv").write.mode("error").partitionBy("_pv").parquet(
             f"{self.root}/{dirname}")
         # map values from the dirs actually written (hive-escaped names)
         from urllib.parse import unquote
@@ -1382,6 +1391,22 @@ class VersionedTable:
                 meta.setdefault(kk, vv)
         self._create_marker(version, meta)
         return version
+
+    def _delta_keys(self, src: DataFrame, keys: Sequence[str],
+                    n_rows: int) -> DataFrame:
+        """The delta's key column for merge_partitioned's survivor
+        anti-join. Not de-duplicated, as in merge(). Broadcast when
+        ``n_rows`` at Spark's own per-row size estimate (8 bytes plus each
+        key type's default size) fits ``spark.sql.autoBroadcastJoinThreshold``:
+        the planner cannot size a delta built from Python rows, and AQE
+        converts that shuffled join to a broadcast only after the survivor
+        side's shuffle has run too. A threshold of -1 broadcasts nothing."""
+        keyset = src.select(*keys)
+        conf = self.spark._jsparkSession.sessionState().conf()
+        limit = conf.autoBroadcastJoinThreshold()
+        if 0 <= n_rows * (8 + keyset._jdf.schema().defaultSize()) <= limit:
+            return F.broadcast(keyset)
+        return keyset
 
     def incremental(self, source: DataFrame, watermark_col: str,
                     keys: Sequence[str],

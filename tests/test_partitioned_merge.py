@@ -595,7 +595,7 @@ def _month(i: int) -> str:
 def test_merge_partitioned_writes_one_file_per_partition(spark, tmp_path, aqe):
     """A source spread over 8 tasks, then three merges touching
     overlapping partitions: every _pv dir of every new version holds
-    exactly one parquet file (the write is rebalanced on _pv; without it
+    exactly one parquet file (the write is shuffled on _pv; without it
     each task writes into every partition it holds), with AQE on and off.
     Rows and Σ match a pure-Python model."""
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -636,18 +636,43 @@ def test_merge_partitioned_writes_one_file_per_partition(spark, tmp_path, aqe):
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
 
+def test_merge_partitioned_splits_partition_above_advisory_size(
+        spark, tmp_path):
+    """Under AQE the write is a rebalance, not a plain repartition: a
+    partition above spark.sql.adaptive.advisoryPartitionSizeInBytes is
+    split across tasks (several files), a small one stays one file."""
+    prev = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64k")
+    try:
+        t = VersionedTable(spark, str(tmp_path / "fact"))
+        src = spark.range(0, 20_000, numPartitions=8).select(
+            F.col("id"),
+            F.when(F.col("id") < 19_990, "big").otherwise("small").alias("p"),
+            F.sha2(F.col("id").cast("string"), 256).alias("s"))
+        v = t.merge_partitioned(src, ["id"], "p")
+        staged = os.path.join(t.root, t._read_marker(v)["dir"])
+        n = {d: sum(f.endswith(".parquet")
+                    for f in os.listdir(os.path.join(staged, d)))
+             for d in os.listdir(staged) if d.startswith("_pv=")}
+        assert n["_pv=small"] == 1 and n["_pv=big"] > 1, n
+        assert t.read().count() == 20_000
+    finally:
+        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", prev)
+
+
 def test_merge_partitioned_onto_existing_map_job_count(spark, tmp_path):
     """A merge onto an existing map launches no more jobs than before the
-    rebalanced write. Measured before it (AQE on, 8 shuffle partitions):
-    5 jobs for a delta read from parquet, 6 for one built from Python rows.
+    shuffled write. Measured before it (AQE on, 8 shuffle
+    partitions): 5 jobs for a delta read from parquet, 6 for one built
+    from Python rows. Now 5 for both: 2 for the touched-partition collect,
+    the broadcast of the delta's keys, the _pv shuffle, the write.
 
-    With a parquet delta the anti-join is planned as a broadcast join from
-    the start: the rebalance's shuffle job replaces the job of the dropped
-    key-set distinct (2 for the touched-partition collect, the broadcast,
-    the rebalance, the write). A delta of unknown size (Python rows) is
-    first planned as a sort-merge anti-join whose key-side exchange runs
-    with or without the distinct, so there the rebalance costs one job
-    more: 7."""
+    A parquet delta is small by its file size, so its anti-join was
+    always a broadcast, and the _pv shuffle's job replaces the dropped
+    key-set distinct's. Spark cannot size a delta of Python rows: without
+    the row-count broadcast its anti-join is planned shuffled, and AQE
+    converts it to a broadcast only after the survivor side's shuffle has
+    run, one job more (7 with the _pv shuffle)."""
     schema = "id int, val string, p string"
     t = VersionedTable(spark, str(tmp_path / "fact"))
     t.merge_partitioned(spark.createDataFrame(
@@ -663,7 +688,35 @@ def test_merge_partitioned_onto_existing_map_job_count(spark, tmp_path):
         [(i, f"m{i}", f"p{i % 3}") for i in range(0, 40, 4)], schema)
     with count_jobs(spark) as jobs:
         t.merge_partitioned(rows, ["id"], "p")
-    assert jobs["n"] <= 7
+    assert jobs["n"] <= 5
     got = {r["id"]: r["val"] for r in t.read().collect()}
     assert got == {i: (f"m{i}" if i % 4 == 0 else str(i)) for i in range(40)
                    if i < 30 or i % 4 == 0}
+
+
+@pytest.mark.parametrize("limit", ["-1", "1b", "10MB"])
+def test_merge_partitioned_broadcasts_keys_only_under_threshold(
+        spark, tmp_path, limit):
+    """The survivor anti-join broadcasts the delta's keys only when the
+    delta's row count at Spark's per-row size estimate fits
+    spark.sql.autoBroadcastJoinThreshold; -1 broadcasts nothing. The
+    merged rows are the same either way."""
+    schema = "id int, val string, p string"
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", limit)
+    try:
+        t = VersionedTable(spark, str(tmp_path / "fact"))
+        t.merge_partitioned(spark.createDataFrame(
+            [(i, str(i), f"p{i % 3}") for i in range(30)], schema),
+            ["id"], "p")
+        delta = spark.createDataFrame(
+            [(i, f"m{i}", f"p{i % 3}") for i in range(0, 40, 4)], schema)
+        keyset = t._delta_keys(delta, ["id"], 10)
+        hinted = "broadcast" in keyset._jdf.queryExecution().logical().toString()
+        assert hinted == (limit == "10MB")
+        t.merge_partitioned(delta, ["id"], "p")
+        got = {r["id"]: r["val"] for r in t.read().collect()}
+        assert got == {i: (f"m{i}" if i % 4 == 0 else str(i))
+                       for i in range(40) if i < 30 or i % 4 == 0}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
