@@ -10,7 +10,7 @@ the Spark engine:
     wh.table("lineitem")                       # lazy scans
     wh.sql("SELECT COUNT(*) FROM orders")      # ANSI SQL over all tables
     wh.query("pricing_summary")                # any of the 190+ registry ops
-    wh.build_models()                          # catalog YAML → all models,
+    wh.build_models()                          # the 10 staging models,
                                                #   topo-parallel
     wh.cached_query("pricing_summary", versions={"lineitem": 7})
                                                # plan-fingerprint result cache
@@ -106,13 +106,17 @@ class Warehouse:
     # --- catalog models ----------------------------------------------------
 
     def models(self):
-        """The catalog/warehouse.yml ModelRegistry (dbt-style ref graph)."""
+        """The staging-layer ModelRegistry (dbt-style ref graph): the 8
+        source tables and the 10 staging models over them. The facts and
+        dims of catalog/warehouse.yml are registered only by
+        ``operators.facts.full_catalog_registry``."""
         from .operators.facts import _registry
 
         return _registry(self.spark, self.sf_dir)
 
     def build_models(self, threads: int = 8, action=None) -> dict[str, DataFrame]:
-        """Compile/build every catalog model, dependency-layered, models
-        within a layer on concurrent driver threads (the dbt-threads
-        analogue). ``action`` is the per-model materialization hook."""
+        """Compile/build the 10 staging models of ``models()``,
+        dependency-layered, models within a layer on concurrent driver
+        threads (the dbt-threads analogue). ``action`` is the per-model
+        materialization hook."""
         return self.models().build_all(threads=threads, action=action)

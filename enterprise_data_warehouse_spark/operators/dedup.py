@@ -339,7 +339,7 @@ def minhash_signatures(ss: DataFrame, k: int = MINHASH_K) -> DataFrame:
     regression the old docstring pinned on "explode + groupBy" belonged to
     a k·|shingles|-ROW explode; this form explodes shingles once).
 
-    A/B vs the old map-side lambda shape (r13, tools/minhash_ab.py — the
+    A/B vs the old map-side lambda shape (r13, SCALING.md — the
     full minhash_lsh_candidates pipeline, interleaved in one warm session
     per SF; VERDICT r12 item 3): sf0.1 warm is a TIE within host noise
     (new 1.585 s best vs old 1.517 — the earlier "1.9 → 0.9 s" claim

@@ -82,8 +82,8 @@ class ResultCache:
         instead of re-running the query's lineage. Either way the entry is
         read with ``df``'s schema (as written: nullable), which the key
         names, so the read launches no schema-inference job."""
-        from ..sources.sink import fs_handles, staged_swap
-        from ..sources.versioned import written_schema
+        from ..sources.sink import staged_swap
+        from ..sources.versioned import fs_handles, written_schema
 
         key = plan_fingerprint(df, versions)
         path = self._entry(name, key)
@@ -107,7 +107,7 @@ class ResultCache:
         return reader.parquet(path), False
 
     def entries(self, name: str) -> list[str]:
-        from ..sources.sink import fs_handles
+        from ..sources.versioned import fs_handles
 
         _, fs, hdir = fs_handles(self.spark, os.path.join(self.root, name))
         if not fs.exists(hdir):
@@ -122,7 +122,7 @@ class ResultCache:
         """Drop cached entries for ``name`` (all, or all except ``keep``
         fingerprints — e.g. the current input versions' keys). Returns the
         number of entries removed."""
-        from ..sources.sink import fs_handles
+        from ..sources.versioned import fs_handles
 
         jvm, fs, _ = fs_handles(self.spark, self.root)
         removed = 0

@@ -27,7 +27,8 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .sink import fs_handles, staged_swap
+from .sink import staged_swap
+from .versioned import fs_handles
 
 
 def backfill_partitions(

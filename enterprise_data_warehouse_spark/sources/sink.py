@@ -4,31 +4,26 @@ The reference's materializations (dbt view/table/incremental-merge,
 chunked pandas appends, audit INSERTs) re-expressed as DataFrame writes.
 
 MERGE on plain parquet has no atomic in-place story (SURVEY.md §7.4a), so
-``merge_upsert``/``merge_upsert_partitioned`` run on the commit-manifest
-protocol (sources/versioned.py) by DEFAULT: data lands in immutable
-version dirs and only becomes visible via atomic marker creation —
-kill-safe on HDFS AND object stores, with optimistic concurrency. Use
-``read_table`` to read merge targets. The staged-swap rename remains only
-for restartable derived-data sinks (backfill partitions, the query result
-cache) where a crash loses nothing a re-run can't rebuild; compaction
-swaps via a healing two-rename and the streaming MV store commits through
-the manifest protocol. Production target is Delta `MERGE INTO`, same call
-shape.
+``merge_upsert``/``merge_upsert_partitioned`` and the two
+``incremental_build`` variants are thin wrappers over the commit-manifest
+protocol (sources/versioned.py): data lands in immutable version dirs and
+only becomes visible via atomic marker creation — kill-safe on HDFS AND
+object stores, with optimistic concurrency. Use ``read_table`` to read
+merge targets. Compaction (``VersionedTable.compact``) and the streaming
+MV store commit through the same protocol. The staged-swap rename remains
+only for restartable derived-data sinks (backfill partitions, the query
+result cache) where a crash loses nothing a re-run can't rebuild.
+Production target is Delta `MERGE INTO`, same call shape.
 """
 
 from __future__ import annotations
 
-import os
-import uuid
-from collections.abc import Sequence
-
-# Schemes whose FileSystem.rename moves a DIRECTORY as one metadata op —
-# what compact_parquet's two-rename swap and crash heal depend on. Bare
-# s3a/gs emulate rename with per-object copy+delete: NOT atomic.
-_ATOMIC_RENAME_SCHEMES = frozenset({"file", "hdfs", "viewfs", "abfs", "abfss"})
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .versioned import _DIR_RE, ConcurrentWriteError, VersionedTable, fs_handles
 
 
 def write_table(
@@ -43,16 +38,6 @@ def write_table(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def fs_handles(spark: SparkSession, path: str):
-    """(jvm, fs, hadoop Path) for ``path`` — the one place the py4j Hadoop
-    boilerplate lives (result_cache, backfill, and the swaps below all
-    reuse it, so FS semantics can't drift between them)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, hpath.getFileSystem(conf), hpath
 
 
 def staged_swap(
@@ -89,49 +74,33 @@ def staged_swap(
     return True
 
 
-def _versioned(spark: SparkSession, path: str,
-               assume_atomic_marker_create: bool = False):
-    from .versioned import VersionedTable
-
-    return VersionedTable(
-        spark, path,
-        assume_atomic_marker_create=assume_atomic_marker_create,
-    )
-
-
-def _adopt_plain(spark: SparkSession, path: str,
-                 assume_atomic_marker_create: bool = False) -> None:
-    """One-time migration: a pre-existing PLAIN parquet table at ``path``
-    (flat or hive-partitioned — either way the read yields every column)
-    becomes v1 of the commit-manifest layout, then the plain files are
-    removed. The plain df's file listing is resolved eagerly at read
+def _adopt_plain(t: VersionedTable) -> None:
+    """One-time migration: a pre-existing PLAIN parquet table at ``t``'s
+    root (flat or hive-partitioned — either way the read yields every
+    column) becomes v1 of the commit-manifest layout, then the plain files
+    are removed. The plain df's file listing is resolved eagerly at read
     creation, so the v1 dir written into the same root is never picked up
     by it. A crash after the v1 marker but before the plain-file cleanup
     leaves stale-but-invisible files (read_table prefers the manifest).
     A later merge_partitioned converts v1 to the partition-mapped layout
     on its first run."""
-    from .versioned import _DIR_RE
-
-    t = _versioned(spark, path, assume_atomic_marker_create)
-    if t.exists() or not _target_exists(spark, path):
+    root = t._Path(t.root)
+    if t.exists() or not t._hfs.exists(root):
         return
-    jvm, fs, hpath = fs_handles(spark, path)
     # adopt only the PLAIN entries: a crashed writer may have left orphan
     # v*-* staging dirs (or an empty _commits) next to the legacy files —
     # reading the whole root would trip over them. basePath keeps hive
     # partition columns recoverable when entries are key=value dirs.
     plain_entries = [
         st.getPath()
-        for st in fs.listStatus(hpath)
+        for st in t._hfs.listStatus(root)
         if st.getPath().getName() != "_commits"
         and not _DIR_RE.match(st.getPath().getName())
     ]
     if not plain_entries:
         return
-    from .versioned import ConcurrentWriteError
-
     try:
-        plain = spark.read.option("basePath", path).parquet(
+        plain = t.spark.read.option("basePath", t.root).parquet(
             *[p.toString() for p in plain_entries]
         )
         # pinned at v1: a delayed adopter racing a winner (who may already
@@ -149,7 +118,43 @@ def _adopt_plain(spark: SparkSession, path: str,
             return
         raise
     for p in plain_entries:
-        fs.delete(p, True)
+        t._hfs.delete(p, True)
+
+
+def _commit_retrying(
+    spark: SparkSession,
+    path: str,
+    write: Callable[[VersionedTable], object],
+    attempts: int,
+    retain_versions: int | None,
+    assume_atomic_marker_create: bool = False,
+) -> None:
+    """The one write path of the merge and incremental sinks: adopt a
+    plain-parquet target as v1, run ``write(t)`` until it commits, then
+    vacuum down to ``retain_versions`` versions when that is set.
+
+    A lost commit race raises ConcurrentWriteError inside the protocol;
+    the next attempt re-derives the write against the winner's version
+    (the documented optimistic-concurrency loop, Delta-on-S3 stance).
+    ``attempts`` is the TOTAL attempt count. ``write`` resolves the table
+    method when it runs, so a wrapper installed on VersionedTable later
+    (a tracer, a test double) is the one called."""
+    if attempts < 1:
+        raise ValueError("max_retries must be >= 1 (it is the total attempt "
+                         "count; 0 would silently skip the merge)")
+    t = VersionedTable(
+        spark, path, assume_atomic_marker_create=assume_atomic_marker_create
+    )
+    _adopt_plain(t)
+    for attempt in range(attempts):
+        try:
+            write(t)
+            break
+        except ConcurrentWriteError:
+            if attempt == attempts - 1:
+                raise
+    if retain_versions is not None:
+        t.vacuum(keep=retain_versions)
 
 
 def read_table(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
@@ -159,7 +164,7 @@ def read_table(spark: SparkSession, path: str, merge_schema: bool = False) -> Da
     to ``read``, which then needs no schema-inference job either (see
     sources/versioned.py)."""
     # read-only: the create-capability probe is irrelevant
-    t = _versioned(spark, path, assume_atomic_marker_create=True)
+    t = VersionedTable(spark, path, assume_atomic_marker_create=True)
     version, meta = t.current()
     if version is not None:
         return t.read(version=version, merge_schema=merge_schema, meta=meta)
@@ -196,10 +201,7 @@ def merge_upsert(
     schema drift should fail loudly unless the caller opted into
     evolution.
 
-    Lost commit races self-heal: a concurrent writer winning the version
-    marker raises ConcurrentWriteError inside the protocol; this wrapper
-    re-derives the merge against the NEW current version and retries (the
-    documented optimistic-concurrency loop, Delta-on-S3 stance).
+    Lost commit races self-heal (see ``_commit_retrying``).
     ``max_retries`` is the TOTAL attempt count (must be >= 1; the default
     3 allows 2 re-derives). Every loss means a rival COMMITTED, so with
     only merge writers N total attempts suffice for N writers; a
@@ -214,22 +216,10 @@ def merge_upsert(
     it: every merge writes a full immutable version, so unbounded history
     means storage ∝ batches × table size and O(versions) marker reads per
     merge."""
-    from .versioned import ConcurrentWriteError
-
-    if max_retries < 1:
-        raise ValueError("max_retries must be >= 1 (it is the total attempt "
-                         "count; 0 would silently skip the merge)")
-    _adopt_plain(spark, path, assume_atomic_marker_create)
-    t = _versioned(spark, path, assume_atomic_marker_create)
-    for attempt in range(max_retries):
-        try:
-            t.merge(src, keys, evolve_schema=evolve_schema)
-            break
-        except ConcurrentWriteError:
-            if attempt == max_retries - 1:
-                raise
-    if retain_versions is not None:
-        t.vacuum(keep=retain_versions)
+    _commit_retrying(
+        spark, path, lambda t: t.merge(src, keys, evolve_schema=evolve_schema),
+        max_retries, retain_versions, assume_atomic_marker_create,
+    )
 
 
 def merge_upsert_partitioned(
@@ -252,42 +242,11 @@ def merge_upsert_partitioned(
     add-file pruning with marker-last crash safety, replacing the old
     in-place dynamic-partition overwrite (which had a non-atomic window
     per partition directory). Read results back with ``read_table``.
-    Lost commit races self-heal by re-deriving against the winner's
-    version, same as merge_upsert."""
-    from .versioned import ConcurrentWriteError
-
-    if max_retries < 1:
-        raise ValueError("max_retries must be >= 1 (it is the total attempt "
-                         "count; 0 would silently skip the merge)")
-    _adopt_plain(spark, path, assume_atomic_marker_create)
-    t = _versioned(spark, path, assume_atomic_marker_create)
-    for attempt in range(max_retries):
-        try:
-            t.merge_partitioned(src, keys, partition_col)
-            break
-        except ConcurrentWriteError:
-            if attempt == max_retries - 1:
-                raise
-    # retention note: see merge_upsert — mandatory for high-frequency loops
-    if retain_versions is not None:
-        t.vacuum(keep=retain_versions)
-
-
-def _target_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(conf).exists(hpath)
-
-
-def read_watermark(spark: SparkSession, path: str, col: str, default: str) -> str:
-    """S3/P5: scalar watermark from the target — driver-side collect of a
-    max() so the incremental filter is a literal Catalyst can push into the
-    source scan (SURVEY.md §4 note on scalar subqueries)."""
-    if not _target_exists(spark, path):
-        return default
-    row = read_table(spark, path).agg(F.max(col).alias("wm")).collect()[0]
-    return str(row["wm"]) if row["wm"] is not None else default
+    Retries and retention as in merge_upsert."""
+    _commit_retrying(
+        spark, path, lambda t: t.merge_partitioned(src, keys, partition_col),
+        max_retries, retain_versions, assume_atomic_marker_create,
+    )
 
 
 def incremental_build(
@@ -309,20 +268,12 @@ def incremental_build(
     from the marker in O(1) instead of re-scanning the whole target (the
     S3 scalar-subquery term — a full pass over the fact at 100 TB). A
     pre-existing plain-parquet target is adopted as v1 first; races
-    retry like merge_upsert."""
-    from .versioned import ConcurrentWriteError
-
-    _adopt_plain(spark, path, False)
-    t = _versioned(spark, path, False)
-    for attempt in range(3):
-        try:
-            t.incremental(source, watermark_col, keys, default_watermark)
-            break
-        except ConcurrentWriteError:
-            if attempt == 2:
-                raise
-    if retain_versions is not None:
-        t.vacuum(keep=retain_versions)
+    retry like merge_upsert, 3 attempts in all."""
+    _commit_retrying(
+        spark, path,
+        lambda t: t.incremental(source, watermark_col, keys, default_watermark),
+        3, retain_versions,
+    )
 
 
 def incremental_build_partitioned(
@@ -341,20 +292,12 @@ def incremental_build_partitioned(
     VersionedTable.incremental_partitioned). Use for day/hour-partitioned
     facts where plain incremental_build would rewrite the whole table
     every run."""
-    from .versioned import ConcurrentWriteError
-
-    _adopt_plain(spark, path, False)
-    t = _versioned(spark, path, False)
-    for attempt in range(3):
-        try:
-            t.incremental_partitioned(
-                source, watermark_col, keys, partition_col, default_watermark)
-            break
-        except ConcurrentWriteError:
-            if attempt == 2:
-                raise
-    if retain_versions is not None:
-        t.vacuum(keep=retain_versions)
+    _commit_retrying(
+        spark, path,
+        lambda t: t.incremental_partitioned(
+            source, watermark_col, keys, partition_col, default_watermark),
+        3, retain_versions,
+    )
 
 
 def write_with_audit(
@@ -421,198 +364,3 @@ def append_audit(
         .withColumn("logged_at", F.current_timestamp())
     )
     df.write.mode("append").parquet(path)
-
-
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    partition_by: str,
-    cluster_by: Sequence[str],
-    max_records_per_file: int | None = None,
-) -> None:
-    """The reference's clustering keys (`cluster_by=['transaction_date',
-    'customer_key','product_key']`, models/marts/facts/fact_sales_daily.sql:5)
-    mapped to parquet physics: directory partitioning on the coarse key
-    (partition pruning) + sortWithinPartitions on the cluster keys so each
-    file's row groups hold narrow min/max ranges — parquet row-group stats
-    then skip I/O for point/range predicates on the cluster keys, which is
-    what Snowflake micro-partition clustering buys.
-
-    repartition(partition_by) before the sort gives one shuffle and avoids
-    the small-files explosion (without it, every task writes a file into
-    every partition directory: tasks × partitions files at 100 TB).
-    maxRecordsPerFile caps file size so a skewed partition still splits."""
-    writer = (
-        df.repartition(F.col(partition_by))
-        .sortWithinPartitions(partition_by, *cluster_by)
-        .write.mode("overwrite")
-        .partitionBy(partition_by)
-    )
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(path)
-
-
-def _dir_stats(spark: SparkSession, path: str) -> tuple[int, int]:
-    """(n_data_files, total_bytes) of a parquet directory tree via the
-    Hadoop FS API — no data read, just the file listing."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(conf)
-    n_files = total = 0
-    it = fs.listFiles(hpath, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.endswith(".parquet") and not name.startswith("_"):
-            n_files += 1
-            total += st.getLen()
-    return n_files, total
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 << 20,
-    partition_by: Sequence[str] | None = None,
-    assume_atomic_rename: bool = False,
-) -> dict[str, int]:
-    """Table maintenance: rewrite a parquet directory's many small files
-    into ~target-size files (default 128 MB — one HDFS block / one scan
-    split). Snowflake does this invisibly for the reference (micro-partition
-    compaction); on a parquet lake it's an explicit op, and at 100 TB an
-    uncompacted table turns every scan into millions of file opens — small
-    files are a metadata problem long before they are an I/O problem.
-
-    Sizing uses the ACTUAL on-disk byte count (no data read), rewrites via
-    a round-robin repartition (even output sizes, no skew by content), and
-    swaps the rewritten directory in with TWO RENAMES — current → aside,
-    staged → current, then delete the aside copy (the in-place layout is
-    the point of compaction; merge targets get the stronger
-    commit-manifest protocol instead). Nothing is deleted until the new
-    layout is in place: the unreadable window is two metadata ops, not a
-    recursive delete of the whole table (at 100 TB a delete-then-rename
-    swap leaves the table unreadable for the minutes the delete takes, and
-    a crash inside it destroys the only copy). A crash between the renames
-    leaves the full table under the aside name and the staged copy
-    complete — the next compact_parquet call auto-heals by renaming the
-    aside back before doing anything else. Returns before/after file
-    counts for auditability.
-
-    Partitioned layout: a round-robin repartition would hand EVERY task
-    rows of every partition value, so the partitionBy writer would emit up
-    to n_files × |values| files — compaction that can INCREASE file count.
-    Instead we shuffle on the partition columns plus a bounded hash salt
-    (≤ files_per_partition distinct values), so each output directory gets
-    at most files_per_partition ~target-size files.
-
-    STORAGE REQUIREMENT — atomic directory rename. Both the two-rename
-    swap and the crash heal reason "path and aside cannot BOTH hold live
-    rows": true when rename moves the directory as one metadata op (local/
-    HDFS/viewfs, ABFS hierarchical namespace), FALSE on bare s3a/gs where
-    rename is a client-side per-object copy+delete — a crash mid-rename
-    splits the rows across both names and the heal would then delete live
-    data. The probe refuses such schemes up front (pass
-    ``assume_atomic_rename=True`` only if the store provides the
-    guarantee); on object stores, compact via
-    ``VersionedTable.commit(read(), ...)`` instead — the manifest protocol
-    needs no renames at all.
-    """
-    from .versioned import UnsupportedStoreError, _fs
-
-    _, fs_probe = _fs(spark, path)
-    try:
-        scheme = str(fs_probe.getScheme())
-    except Exception:
-        try:
-            scheme = str(fs_probe.getUri().getScheme() or "unknown")
-        except Exception:
-            scheme = "unknown"
-    if scheme not in _ATOMIC_RENAME_SCHEMES and not assume_atomic_rename:
-        raise UnsupportedStoreError(
-            f"filesystem scheme {scheme!r} for {path} does not rename "
-            "directories atomically, so compaction's swap (and its crash "
-            "heal) could split or delete live rows. Compact via "
-            "VersionedTable.commit(read(), ...) on such stores, or pass "
-            "assume_atomic_rename=True if the store guarantees it."
-        )
-    if _versioned(spark, path, assume_atomic_marker_create=True).exists():
-        raise ValueError(
-            f"{path} is a commit-manifest (versioned) table: compacting the "
-            "root would read every version's dir as one dataset and swap "
-            "the manifest away. Compact a specific version's data dir, or "
-            "rewrite via VersionedTable.commit(read(), ...) instead."
-        )
-    _heal_interrupted_compaction(spark, path)
-    n_before, total_bytes = _dir_stats(spark, path)
-    n_files = max(1, -(-total_bytes // target_file_bytes))  # ceil
-    df = spark.read.parquet(path)
-    if partition_by:
-        n_parts = df.select(*partition_by).distinct().count()
-        files_per_part = max(1, -(-int(n_files) // max(n_parts, 1)))  # ceil
-        data_cols = [c for c in df.columns if c not in partition_by]
-        salt = (
-            F.pmod(F.xxhash64(*[F.col(c) for c in data_cols]), F.lit(files_per_part))
-            if data_cols
-            else F.lit(0)
-        )
-        shuffled = df.repartition(
-            int(n_parts * files_per_part),
-            *[F.col(c) for c in partition_by],
-            salt,
-        )
-    else:
-        shuffled = df.repartition(int(n_files))
-    staged = path.rstrip("/") + "__compact_staged"
-    writer = shuffled.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staged)
-    # two-rename swap: aside the current layout, move the new one in, only
-    # then delete — see the crash-window rationale in the docstring
-    jvm, fs, hpath = fs_handles(spark, path)
-    aside = path.rstrip("/") + "__compact_old-" + uuid.uuid4().hex[:8]
-    haside = jvm.org.apache.hadoop.fs.Path(aside)
-    hstaged = jvm.org.apache.hadoop.fs.Path(staged)
-    if not fs.rename(hpath, haside):
-        fs.delete(hstaged, True)
-        raise RuntimeError(f"compaction aside-rename failed for {path}")
-    if not fs.rename(hstaged, hpath):
-        fs.rename(haside, hpath)  # roll the original straight back
-        fs.delete(hstaged, True)
-        raise RuntimeError(f"compaction swap-rename failed for {path}")
-    fs.delete(haside, True)
-    n_after, _ = _dir_stats(spark, path)
-    return {"files_before": n_before, "files_after": n_after}
-
-
-def _heal_interrupted_compaction(spark: SparkSession, path: str) -> None:
-    """Recover from a compaction crash between its two renames: the table
-    lives under ``<path>__compact_old-*`` and ``path`` is missing — rename
-    the aside copy back (and drop any leftover staged dir) so the table is
-    readable again before the new run re-stats it. No-op otherwise; if the
-    swap COMPLETED but the aside delete didn't, the aside copy is stale —
-    remove it. SOUND ONLY under atomic directory rename (path-or-aside,
-    never rows split across both) — which compact_parquet's scheme probe
-    guarantees before any swap can have happened."""
-    jvm, fs, hpath = fs_handles(spark, path)
-    parent = hpath.getParent()
-    if parent is None or not fs.exists(parent):
-        return
-    base = hpath.getName()
-    asides = [
-        st.getPath()
-        for st in fs.listStatus(parent)
-        if st.getPath().getName().startswith(base + "__compact_old-")
-    ]
-    for haside in asides:
-        if fs.exists(hpath):
-            fs.delete(haside, True)  # swap completed; aside copy is stale
-        else:
-            fs.rename(haside, hpath)
-    staged = jvm.org.apache.hadoop.fs.Path(
-        path.rstrip("/") + "__compact_staged"
-    )
-    if fs.exists(staged) and fs.exists(hpath):
-        fs.delete(staged, True)

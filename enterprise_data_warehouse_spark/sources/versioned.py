@@ -1,13 +1,15 @@
 """Crash-safe table commits: a commit-manifest protocol for parquet sinks.
 
-``merge_upsert`` (sink.py:48) swaps a staged directory into place with
-delete-then-rename — atomic per-directory on HDFS, but on object stores a
-crash between the delete and the rename leaves NO readable table. This
-module closes that window the way Delta Lake's ``_delta_log`` does
-(reference's production materialization target is Snowflake/Delta; see
-SURVEY.md §7.4a): data is staged into a uniquely-named immutable directory,
-and the table "pointer" only moves when a tiny commit-marker file is
-created. There is no moment at which a reader can observe a half-table:
+A staged directory swapped into place with delete-then-rename is atomic
+per-directory on HDFS, but on object stores a crash between the delete
+and the rename leaves NO readable table. This module closes that window
+the way Delta Lake's ``_delta_log`` does (reference's production
+materialization target is Snowflake/Delta; see SURVEY.md §7.4a). The sink
+merges and incremental builds (sources/sink.py), compaction, erasure,
+clones and the streaming MV store all commit through it. Data is staged
+into a uniquely-named immutable directory, and the table "pointer" only
+moves when a tiny commit-marker file is created. There is no moment at
+which a reader can observe a half-table:
 
     root/
       v00000001-3f2a9c1b/ ... parquet files ...  (immutable once committed)
@@ -132,11 +134,29 @@ _ATOMIC_CREATE_SCHEMES = frozenset(
 )
 
 
-def _fs(spark: SparkSession, path: str):
+def fs_handles(spark: SparkSession, path: str):
+    """(jvm, fs, hadoop Path) for ``path`` — the one place the py4j Hadoop
+    boilerplate lives (the sinks, result cache and backfill reuse it, so
+    FS semantics can't drift between them)."""
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, hpath.getFileSystem(conf)
+    return jvm, hpath.getFileSystem(conf), hpath
+
+
+def _dir_stats(spark: SparkSession, path: str) -> tuple[int, int]:
+    """(n_data_files, total_bytes) of a parquet directory tree via the
+    Hadoop FS API — no data read, just the file listing."""
+    _, fs, hpath = fs_handles(spark, path)
+    n_files = total = 0
+    it = fs.listFiles(hpath, True)
+    while it.hasNext():
+        st = it.next()
+        name = st.getPath().getName()
+        if name.endswith(".parquet") and not name.startswith("_"):
+            n_files += 1
+            total += st.getLen()
+    return n_files, total
 
 
 def _as_nullable(t):
@@ -1343,11 +1363,11 @@ class VersionedTable:
         # duplicate the partition key into _pv: hive layout on _pv gives one
         # subdir per value while partition_col survives inside the files.
         # Shuffled on _pv so one task writes each touched partition as one
-        # file, not one file per writing task (the fix sink.write_clustered
-        # makes). The rebalance hint replaces the repartition under AQE
-        # (the optimizer collapses the pair into the rebalance), which also
-        # splits a partition above the advisory size across tasks; Spark
-        # drops the hint when AQE is off, leaving the hash repartition.
+        # file, not one file per writing task. The rebalance hint replaces
+        # the repartition under AQE (the optimizer collapses the pair into
+        # the rebalance), which also splits a partition above the advisory
+        # size across tasks; Spark drops the hint when AQE is off, leaving
+        # the hash repartition.
         merged.withColumn("_pv", F.col(partition_col).cast("string")).repartition(
             "_pv"
         ).hint("rebalance", "_pv").write.mode("error").partitionBy("_pv").parquet(
@@ -1797,7 +1817,7 @@ class VersionedTable:
                 f"{'source' if not source else 'ref'} — repair it (see the "
                 "clone v1 marker's source/ref fields) before releasing"
             )
-        _, src_fs = _fs(self.spark, source)
+        _, src_fs, _ = fs_handles(self.spark, source)
         ref = self._Path(f"{source}/_refs/{token}.json")
         released = bool(src_fs.delete(ref, False))
         if not released:
@@ -1830,8 +1850,8 @@ class VersionedTable:
         """Table maintenance on the manifest protocol: rewrite the CURRENT
         version's many small files (the residue of high-frequency merges)
         into ~target-size files as a NEW pinned commit — no renames, no
-        unreadable window, works on object stores (unlike compact_parquet's
-        in-place two-rename swap, which needs atomic directory rename).
+        unreadable window, works on object stores. The CLI
+        ``table-compact`` runs it.
 
         The rewrite is PINNED to read_version+1 (see commit): a merge
         landing in the read→commit window raises ConcurrentWriteError and
@@ -1848,8 +1868,6 @@ class VersionedTable:
         when small files, not partition pruning, are the bottleneck.
 
         Returns {"version", "files_before", "files_after", "bytes"}."""
-        from .sink import _dir_stats  # sizing helper shared with compact_parquet
-
         if max_retries < 1:
             raise ValueError("compact max_retries must be >= 1")
         last_err: Exception | None = None

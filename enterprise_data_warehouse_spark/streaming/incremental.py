@@ -231,8 +231,8 @@ def stream_mv_merge(
             # state column, and stored MVs must keep their schema
             F.sum(F.col(measure_col).cast("decimal(38,10)")).alias("sum_dec"),
         )
-        _adopt_plain(spark, target_path)  # migrate a legacy plain-parquet MV
         t = VersionedTable(spark, target_path)
+        _adopt_plain(t)  # migrate a legacy plain-parquet MV
         cur, meta = t.current()
         if cur is not None:
             existing = t.read(version=cur, meta=meta)

@@ -91,8 +91,9 @@ def _op_merge_partitioned_inherited(spark, tmp_path):
 def _op_adopt(spark, tmp_path):
     path = str(tmp_path / "t")
     _typed(spark).write.parquet(path)
-    _adopt_plain(spark, path)
-    return VersionedTable(spark, path)
+    t = VersionedTable(spark, path)
+    _adopt_plain(t)
+    return t
 
 
 def _op_erase(spark, tmp_path):

@@ -10,7 +10,6 @@ from enterprise_data_warehouse_spark.sources.sink import (
     incremental_build,
     merge_upsert,
     read_table,
-    read_watermark,
     write_table,
 )
 from enterprise_data_warehouse_spark.sources.tables import load_table
@@ -54,8 +53,6 @@ def test_incremental_build_idempotent(spark, tmp_path):
     o = load_table(spark, SF, "orders").select("o_orderkey", "o_totalprice", "o_orderdate")
     first = o.where(F.col("o_orderdate") < "2000-01-01")
     write_table(first, path)
-    wm = read_watermark(spark, path, "o_orderdate", "1900-01-01")
-    assert wm.startswith("1999")
     incremental_build(spark, path, o, "o_orderdate", ["o_orderkey"])
     assert read_table(spark, path).count() == o.count()
     # replay: nothing newer than watermark → no change
@@ -102,36 +99,6 @@ def test_audit_append(spark, tmp_path):
     log = spark.read.parquet(path)
     assert log.count() == 2
     assert set(r["status"] for r in log.collect()) == {"SUCCESS", "FAILED"}
-
-
-def test_write_clustered_layout(spark, tmp_path):
-    """write_clustered: one file per partition dir (no small-files fan-out),
-    rows inside each file sorted on the cluster keys (row-group skipping)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from enterprise_data_warehouse_spark.sources.sink import write_clustered
-
-    path = str(tmp_path / "clustered")
-    o = load_table(spark, SF, "orders").withColumn(
-        "order_year", F.year("o_orderdate")
-    )
-    write_clustered(o, path, "order_year", ["o_custkey", "o_orderkey"])
-
-    part_dirs = sorted(glob.glob(path + "/order_year=*"))
-    assert part_dirs, "partition directories missing"
-    for d in part_dirs:
-        files = glob.glob(d + "/*.parquet")
-        # single shuffle partition per key → exactly one file per partition
-        assert len(files) == 1, d
-        t = pq.read_table(files[0], columns=["o_custkey", "o_orderkey"])
-        pairs = list(zip(t["o_custkey"].to_pylist(), t["o_orderkey"].to_pylist()))
-        assert pairs == sorted(pairs), f"{d} not clustered on sort keys"
-
-    # partition pruning still applies on the directory key
-    pruned = spark.read.parquet(path).where(F.col("order_year") == 1996)
-    assert pruned.count() == o.where(F.col("order_year") == 1996).count()
 
 
 def test_write_with_audit_single_pass(spark, tmp_path):

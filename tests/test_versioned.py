@@ -1,7 +1,7 @@
 """Commit-manifest protocol (sources/versioned.py): the table must stay
 readable — and show ONLY fully-committed data — through every crash point,
-including the window where sink.merge_upsert's delete-then-rename swap is
-unsafe on object stores, and through lost commit races."""
+including the window where a delete-then-rename swap is unsafe on object
+stores, and through lost commit races."""
 
 from __future__ import annotations
 
@@ -232,30 +232,52 @@ def test_merge_upsert_adopts_plain_table(spark, tmp_path):
     assert not stray
 
 
-def test_merge_upsert_retries_lost_commit_race(spark, tmp_path):
-    """Optimistic concurrency self-heals at the sink level: when another
-    writer steals the version marker mid-merge, merge_upsert re-derives
+def _mk_ts(spark, rows, ts):
+    """``_mk`` rows plus a watermark column ``ts`` and a per-key stable
+    partition column ``p``."""
+    return (_mk(spark, rows).withColumn("ts", F.lit(ts).cast("timestamp"))
+            .withColumn("p", F.col("id") % 2))
+
+
+# every sink wrapper that runs the adopt -> commit-retry -> vacuum loop
+_SINK_WRITES = {
+    "merge_upsert": lambda sink, spark, path, src: sink.merge_upsert(
+        spark, path, src, ["id"]),
+    "merge_upsert_partitioned":
+        lambda sink, spark, path, src: sink.merge_upsert_partitioned(
+            spark, path, src, ["id"], "p"),
+    "incremental_build": lambda sink, spark, path, src: sink.incremental_build(
+        spark, path, src, "ts", ["id"]),
+    "incremental_build_partitioned":
+        lambda sink, spark, path, src: sink.incremental_build_partitioned(
+            spark, path, src, "ts", ["id"], "p"),
+}
+
+
+@pytest.mark.parametrize("wrapper", sorted(_SINK_WRITES))
+def test_merge_upsert_retries_lost_commit_race(spark, tmp_path, wrapper):
+    """Optimistic concurrency self-heals at the sink level, in every sink
+    wrapper: the plain-parquet target is adopted as v1, and when another
+    writer steals the next version marker mid-merge, the wrapper re-derives
     against the winner's table and retries — the final state contains BOTH
     writers' rows with source-wins semantics, not an exception."""
-    from enterprise_data_warehouse_spark.sources.sink import (
-        merge_upsert,
-        read_table,
-    )
+    from enterprise_data_warehouse_spark.sources import sink
 
+    old_ts, new_ts = "2024-01-01 00:00:00", "2024-01-02 00:00:00"
     path = str(tmp_path / "t")
-    t = VersionedTable(spark, path)
-    t.commit(_mk(spark, [(1, "a"), (2, "b")]))
+    sink.write_table(_mk_ts(spark, [(1, "a"), (2, "b")], old_ts), path)
 
-    # interpose: the FIRST marker create is beaten by a racing writer
+    # interpose: the first marker create after adoption is beaten by a
+    # racing writer
     original = VersionedTable._create_marker
     state = {"raced": False}
 
     def racing_create(self, version, meta):
-        if not state["raced"]:
+        if version >= 2 and not state["raced"]:
             state["raced"] = True
             # the racing writer lands the same version first — with ITS
             # merge result (v1 ∪ its delta), as a real MERGE writer would
-            rival = _mk(spark, [(1, "a"), (2, "b"), (9, "rival")])
+            rival = _mk_ts(spark, [(1, "a"), (2, "b"), (9, "rival")], old_ts)
             original(
                 self,
                 version,
@@ -269,12 +291,14 @@ def test_merge_upsert_retries_lost_commit_race(spark, tmp_path):
 
     VersionedTable._create_marker = racing_create
     try:
-        merge_upsert(spark, path, _mk(spark, [(2, "B"), (3, "c")]), ["id"])
+        _SINK_WRITES[wrapper](
+            sink, spark, path, _mk_ts(spark, [(2, "B"), (3, "c")], new_ts))
     finally:
         VersionedTable._create_marker = original
 
     assert state["raced"]
-    assert _rows(read_table(spark, path)) == {
+    assert VersionedTable(spark, path).current_version() == 3
+    assert _rows(sink.read_table(spark, path)) == {
         (1, "a"),
         (2, "B"),
         (3, "c"),
@@ -1248,13 +1272,19 @@ def test_clone_of_a_clone_refused_until_localized(spark, tmp_path):
 
 def test_merge_and_compact_reject_zero_retry_budget(spark, tmp_path):
     """max_retries=0 must be an error, not a silent no-op merge."""
-    from enterprise_data_warehouse_spark.sources.sink import merge_upsert
+    from enterprise_data_warehouse_spark.sources.sink import (
+        merge_upsert,
+        merge_upsert_partitioned,
+    )
 
     path = str(tmp_path / "t")
     t = VersionedTable(spark, path)
     t.commit(_mk(spark, [(1, "a")]))
     with pytest.raises(ValueError, match="max_retries"):
         merge_upsert(spark, path, _mk(spark, [(2, "b")]), ["id"], max_retries=0)
+    with pytest.raises(ValueError, match="max_retries"):
+        merge_upsert_partitioned(spark, path, _mk(spark, [(2, "b")]), ["id"],
+                                 "val", max_retries=0)
     assert _rows(t.read()) == {(1, "a")}  # nothing was silently skipped
     with pytest.raises(ValueError, match="max_retries"):
         t.compact(max_retries=0)
