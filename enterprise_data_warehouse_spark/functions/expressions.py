@@ -2,19 +2,15 @@
 
 Each helper re-expresses a scalar pattern the reference uses in dbt SQL or
 pandas, as a JVM-side Column expression (no Python UDFs — everything stays
-inside whole-stage codegen).
+inside whole-stage codegen). The rest of F1–F20 (string cleansing, date
+arithmetic, JSON props) is written inline in the query that uses it
+(COVERAGE.md §2.8).
 
 Reference citations (into /root/reference/):
-  clean_string/upper/lower    models/staging/staging_customers.sql:15-31
-  clean_phone                 models/staging/staging_customers.sql:17
-  email_valid                 models/staging/staging_customers.sql:40
   surrogate_key               macros/scd_type2_macro.sql:25-28 (md5 concat)
   safe_div                    models/marts/facts/fact_sales_daily.sql:86-95
-  age_band / lifecycle CASE   models/staging/staging_customers.sql:71-79,94-99
-  datediff_years              models/staging/staging_customers.sql:60-67
-  epoch_seconds_between       models/marts/facts/fact_sales_daily.sql:113-118
+  band (age_band / lifecycle) models/staging/staging_customers.sql:71-79,94-99
   net_revenue arithmetic      models/marts/facts/fact_sales_daily.sql:86
-  json_prop                   ml_platform/core/ml_pipeline_framework.py:313,330
 """
 
 from __future__ import annotations
@@ -27,38 +23,6 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-# --- F1/F2/F3/F4: string cleansing ---------------------------------------
-
-def clean_string(col: Column | str) -> Column:
-    """trim + collapse inner whitespace (staging cleanse)."""
-    return F.regexp_replace(F.trim(_c(col)), r"\s+", " ")
-
-
-def clean_phone(col: Column | str) -> Column:
-    """Strip everything but digits and + ( ) - ."""
-    return F.regexp_replace(_c(col), r"[^0-9+()\-]", "")
-
-
-EMAIL_RE = r"^[^@]+@[^@]+\.[^@]+$"
-
-
-def email_valid(col: Column | str) -> Column:
-    return _c(col).rlike(EMAIL_RE)
-
-
-# --- F6/F7/F9/F10/F11: date & time ---------------------------------------
-
-def datediff_years(end: Column | str, start: Column | str) -> Column:
-    """Snowflake DATEDIFF('year', a, b) counts year-boundary crossings,
-    not elapsed 365-day periods (SURVEY.md §7.4c)."""
-    return F.year(_c(end)) - F.year(_c(start))
-
-
-def epoch_seconds_between(end: Column | str, start: Column | str) -> Column:
-    """extract(epoch from a - b) — data-age seconds."""
-    return F.unix_timestamp(_c(end)) - F.unix_timestamp(_c(start))
-
-
 # --- F13: multi-branch CASE bands ----------------------------------------
 
 def band(col: Column | str, edges: list[float], labels: list[str]) -> Column:
@@ -68,10 +32,6 @@ def band(col: Column | str, edges: list[float], labels: list[str]) -> Column:
     for i in range(1, len(edges)):
         expr = expr.when(c < F.lit(edges[i]), labels[i])
     return expr.otherwise(labels[-1])
-
-
-def price_tier(col: Column | str) -> Column:
-    return band(col, [100.0, 500.0, 1000.0], ["BUDGET", "STANDARD", "PREMIUM", "LUXURY"])
 
 
 # --- F14/F15: guarded arithmetic -----------------------------------------
@@ -106,13 +66,3 @@ def surrogate_key(*cols: Column | str) -> Column:
 def change_hash(*cols: Column | str) -> Column:
     """Row-content hash for SCD2 change detection (same construction)."""
     return surrogate_key(*cols)
-
-
-# --- F19: JSON --------------------------------------------------------------
-
-def json_prop(col: Column | str, path: str) -> Column:
-    """get_json_object over the events.props payload.
-
-    DuckDB mirror: json_extract_string(props, '$.k').
-    """
-    return F.get_json_object(_c(col), f"$.{path}")

@@ -143,70 +143,3 @@ def zorder_write(
         .write.mode("overwrite")
         .parquet(path)
     )
-
-
-# --- table layout stats (footer-only inspection) -------------------------------
-
-
-def table_stats(path: str, cluster_col: str | None = None) -> dict:
-    """Layout health from parquet FOOTERS alone (no data read — the same
-    information a lakehouse OPTIMIZE planner uses): file count/sizes, row
-    groups, and — when ``cluster_col`` is given — each file's min/max span
-    on that column, the direct measure of whether clustering (zorder_write,
-    clustered writes) is doing its job: well-clustered files have small
-    disjoint spans, so predicate scans skip most files via stats alone.
-
-    Returns: n_files, total_bytes, total_rows, n_row_groups, avg_file_mb,
-    plus (with cluster_col) spans[] and span_fraction = mean(file span) /
-    global span — ~1/n_files when clustered, ~1.0 when every file covers
-    the whole domain."""
-    import pathlib
-
-    import pyarrow.parquet as pq
-
-    root = pathlib.Path(path)
-    files = (
-        [root]
-        if root.is_file()
-        else sorted(
-            f
-            for f in root.rglob("*.parquet")
-            if not f.name.startswith(("_", "."))
-        )
-    )
-    out: dict = {
-        "n_files": len(files),
-        "total_bytes": 0,
-        "total_rows": 0,
-        "n_row_groups": 0,
-    }
-    spans: list[float] = []
-    lo_all: float | None = None
-    hi_all: float | None = None
-    for f in files:
-        md = pq.read_metadata(f)
-        out["total_bytes"] += f.stat().st_size
-        out["total_rows"] += md.num_rows
-        out["n_row_groups"] += md.num_row_groups
-        if cluster_col is not None and md.num_row_groups > 0:
-            idx = next(
-                j
-                for j in range(md.row_group(0).num_columns)
-                if md.row_group(0).column(j).path_in_schema == cluster_col
-            )
-            stats = [
-                md.row_group(i).column(idx).statistics
-                for i in range(md.num_row_groups)
-            ]
-            lo = min(s.min for s in stats)
-            hi = max(s.max for s in stats)
-            spans.append(float(hi - lo))
-            lo_all = lo if lo_all is None else min(lo_all, lo)
-            hi_all = hi if hi_all is None else max(hi_all, hi)
-    out["avg_file_mb"] = (
-        out["total_bytes"] / len(files) / 1024**2 if files else 0.0
-    )
-    if cluster_col is not None and spans and hi_all > lo_all:
-        out["spans"] = spans
-        out["span_fraction"] = (sum(spans) / len(spans)) / float(hi_all - lo_all)
-    return out

@@ -452,35 +452,3 @@ def scd2_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("o_custkey").alias("n_customers"),
         )
     )
-
-
-# --- dense surrogate key assignment --------------------------------------------
-
-
-def assign_surrogate_keys(
-    dim: DataFrame | None, new_rows: DataFrame, natural_key: str, sk_col: str = "sk"
-) -> DataFrame:
-    """Kimball-style DENSE surrogate keys for new dimension members:
-    contiguous integers continuing from the stored dimension's max
-    (hash surrogate keys — scd2's default — are join-stable but sparse;
-    star schemas that want small int keys for fact compression use this).
-
-    Scale shape: the global max is a 1-row aggregate; ordering the NEW
-    members (the bounded daily delta, never the full dimension) by natural
-    key through a row_number gives deterministic, gap-free assignment —
-    the single-partition window touches |delta| rows only, which is the
-    same envelope every incremental MERGE batch already fits. Re-running
-    on the same delta yields the same keys (order is total on the natural
-    key)."""
-    from pyspark.sql.window import Window
-
-    if dim is not None and sk_col in dim.columns:
-        base = dim.agg(F.coalesce(F.max(sk_col), F.lit(0)).alias("_max_sk"))
-    else:
-        base = new_rows.sparkSession.range(1).select(F.lit(0).alias("_max_sk"))
-    w = Window.orderBy(natural_key)
-    return (
-        new_rows.crossJoin(F.broadcast(base))
-        .withColumn(sk_col, F.col("_max_sk") + F.row_number().over(w))
-        .drop("_max_sk")
-    )

@@ -288,15 +288,3 @@ def build_scd2_dimension(
     return scd2_apply(
         base, updates, key, tracked, spec.get("updated_at", "updated_at"), attrs=attrs
     )
-
-
-def build_dimension(
-    spec: dict, initial: DataFrame, updates: DataFrame | None = None
-) -> DataFrame:
-    """Dispatch on the catalog's scd_type — the single entry point the
-    model registry uses for dimension specs."""
-    if int(spec.get("scd_type", 1)) == 2:
-        if updates is None:
-            raise ValueError(f"{spec['name']}: scd_type 2 needs an update batch")
-        return build_scd2_dimension(initial, updates, spec)
-    return build_scd1_dimension(initial, spec)

@@ -100,7 +100,7 @@ class ResultCache:
             self.root, name, "_staged-" + key[:8] + "-" + uuid.uuid4().hex[:8]
         )
         df.write.mode("overwrite").parquet(staged)
-        if not staged_swap(self.spark, staged, path, overwrite=False):
+        if not staged_swap(self.spark, staged, path):
             # concurrent builder won the race — their result is ours too
             if not fs.exists(hpath):
                 raise RuntimeError(f"result-cache rename failed for {path}")

@@ -9,11 +9,11 @@ MERGE on plain parquet has no atomic in-place story (SURVEY.md §7.4a), so
 protocol (sources/versioned.py): data lands in immutable version dirs and
 only becomes visible via atomic marker creation — kill-safe on HDFS AND
 object stores, with optimistic concurrency. Use ``read_table`` to read
-merge targets. Compaction (``VersionedTable.compact``) and the streaming
-MV store commit through the same protocol. The staged-swap rename remains
-only for restartable derived-data sinks (backfill partitions, the query
-result cache) where a crash loses nothing a re-run can't rebuild.
-Production target is Delta `MERGE INTO`, same call shape.
+merge targets. Compaction (``VersionedTable.compact``) commits through
+the same protocol. The staged-swap rename remains only for the query
+result cache, where an entry never changes once written and a crash loses
+nothing a re-run can't rebuild. Production target is Delta `MERGE INTO`,
+same call shape.
 """
 
 from __future__ import annotations
@@ -40,30 +40,27 @@ def write_table(
     writer.parquet(path)
 
 
-def staged_swap(
-    spark: SparkSession, staged: str, path: str, overwrite: bool = True
-) -> bool:
-    """Move a staged directory into place via Hadoop FS rename (atomic on
-    HDFS; best-effort on object stores — sources/versioned.py is the
-    commit-manifest answer when that matters). Returns whether the rename
-    landed; on a lost race the staged dir is cleaned up and False returned
-    so callers can adopt the winner's output."""
+def staged_swap(spark: SparkSession, staged: str, path: str) -> bool:
+    """Move a staged directory into place via Hadoop FS rename unless
+    ``path`` is already taken (atomic on HDFS; best-effort on object stores
+    — sources/versioned.py is the commit-manifest answer when that
+    matters). Returns whether the rename landed; when a rival's output is
+    already at ``path`` the staged dir is cleaned up and False returned so
+    callers can adopt the winner's output."""
     jvm, fs, hpath = fs_handles(spark, path)
     hstaged = jvm.org.apache.hadoop.fs.Path(staged)
     if fs.exists(hpath):
-        if not overwrite:
-            fs.delete(hstaged, True)
-            return False
-        fs.delete(hpath, True)
+        fs.delete(hstaged, True)
+        return False
     parent = hpath.getParent()
     if parent is not None:
         fs.mkdirs(parent)
     if not fs.rename(hstaged, hpath):
         # distinguish "lost a race" (destination appeared — a rival's
         # output is in place, our copy is redundant) from a genuine rename
-        # failure (destination still absent — deleting the staged copy
-        # here would destroy the ONLY copy, since the old target was
-        # already removed above): clean up only in the race case
+        # failure (destination still absent — the staged dir is the ONLY
+        # copy of the result, so deleting it would lose it): clean up only
+        # in the race case
         if fs.exists(hpath):
             fs.delete(hstaged, True)
             return False
@@ -83,9 +80,13 @@ def _adopt_plain(t: VersionedTable) -> None:
     by it. A crash after the v1 marker but before the plain-file cleanup
     leaves stale-but-invisible files (read_table prefers the manifest).
     A later merge_partitioned converts v1 to the partition-mapped layout
-    on its first run."""
+    on its first run.
+
+    The root listing comes first: a committed table's root holds only
+    ``_commits`` and ``v*-*`` dirs, so the steady-state merge returns
+    without resolving a version (the merge resolves its own)."""
     root = t._Path(t.root)
-    if t.exists() or not t._hfs.exists(root):
+    if not t._hfs.exists(root):
         return
     # adopt only the PLAIN entries: a crashed writer may have left orphan
     # v*-* staging dirs (or an empty _commits) next to the legacy files —
@@ -97,7 +98,10 @@ def _adopt_plain(t: VersionedTable) -> None:
         if st.getPath().getName() != "_commits"
         and not _DIR_RE.match(st.getPath().getName())
     ]
-    if not plain_entries:
+    # other entries next to a committed version (clone/ref metadata, or
+    # the plain files of a racing adopter or of one that crashed before
+    # its cleanup) are not a table to adopt
+    if not plain_entries or t.exists():
         return
     try:
         plain = t.spark.read.option("basePath", t.root).parquet(

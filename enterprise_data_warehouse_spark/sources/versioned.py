@@ -5,10 +5,10 @@ per-directory on HDFS, but on object stores a crash between the delete
 and the rename leaves NO readable table. This module closes that window
 the way Delta Lake's ``_delta_log`` does (reference's production
 materialization target is Snowflake/Delta; see SURVEY.md §7.4a). The sink
-merges and incremental builds (sources/sink.py), compaction, erasure,
-clones and the streaming MV store all commit through it. Data is staged
-into a uniquely-named immutable directory, and the table "pointer" only
-moves when a tiny commit-marker file is created. There is no moment at
+merges and incremental builds (sources/sink.py), compaction, erasure and
+clones all commit through it. Data is staged into a uniquely-named
+immutable directory, and the table "pointer" only moves when a tiny
+commit-marker file is created. There is no moment at
 which a reader can observe a half-table:
 
     root/
@@ -136,8 +136,8 @@ _ATOMIC_CREATE_SCHEMES = frozenset(
 
 def fs_handles(spark: SparkSession, path: str):
     """(jvm, fs, hadoop Path) for ``path`` — the one place the py4j Hadoop
-    boilerplate lives (the sinks, result cache and backfill reuse it, so
-    FS semantics can't drift between them)."""
+    boilerplate lives (the sinks and the result cache reuse it, so FS
+    semantics can't drift between them)."""
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     hpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -738,32 +738,6 @@ class VersionedTable:
             if keep:
                 hit.append(rel)
         return hit
-
-    def read_partitions(self, values: Sequence[str]) -> DataFrame | None:
-        """Read ONLY the named partitions of the current (partition-mapped)
-        version — driver-side partition pruning over the manifest, the same
-        file-skipping Delta's MERGE gets from its add-file stats. Returns
-        None when the table doesn't exist or none of the values exist yet.
-
-        Raises ValueError when the CURRENT version is not partition-mapped
-        (a plain commit/adopt/merge landed on top): the parts map can no
-        longer say which rows belong to which partition, and returning None
-        there would let a caller mistake existing data for absent data."""
-        version, meta = self.current()
-        if version is None:
-            return None
-        parts = meta.get("parts") or {}
-        if not parts:
-            raise ValueError(
-                f"current version v{version} of {self.root} is not "
-                "partition-mapped — read() the full table (or re-establish "
-                "the map with merge_partitioned) instead"
-            )
-        hit = [parts[v] for v in values if v in parts]
-        if not hit:
-            return None
-        return self._reader(meta.get("schema")).parquet(
-            *[self._abs(rel) for rel in hit])
 
     # -- write side --------------------------------------------------------
     def _stage_data(self, df: DataFrame, version: int,

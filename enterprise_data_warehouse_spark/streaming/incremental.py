@@ -170,105 +170,3 @@ def run_stream_to_memory(
     )
     q.awaitTermination()
     return spark.table(name)
-
-
-def stream_mv_merge(
-    stream: DataFrame,
-    target_path: str,
-    group_keys: Sequence[str],
-    measure_col: str,
-    checkpoint: str,
-) -> StreamingQuery:
-    """Streaming materialized-view maintenance: each micro-batch is reduced
-    to PARTIAL AGGREGATE STATES (count + exact decimal sum per group) and
-    merged into the stored MV — the streaming rail of
-    operators/facts.mv_incremental_maintenance, and the foreachBatch shape
-    every Delta/Iceberg streaming-MV pipeline uses.
-
-    Because the states are associative/commutative, merge-per-batch equals
-    a full recompute over everything ever streamed (pinned in tests across
-    multi-batch arrivals + restarts from the checkpoint). Cost per batch:
-    |batch| + |touched groups| — the base stream is never replayed.
-
-    The MV stores (keys, n, sum_dec DECIMAL(38,10)) plus two constant
-    columns — ``_last_batch_id`` and ``_ckpt`` (hash of the checkpoint
-    location) — which readers drop; finalize (e.g. dec2dbl) at query time,
-    exactly like mv_rollup_routing. Read it back with ``read_table``.
-
-    Failure semantics: each batch's merged MV lands as a NEW VERSION of a
-    commit-manifest table (sources/versioned.py) — marker-last, so a crash
-    at ANY point leaves the previous MV fully readable and the replayed
-    batch re-derives against it. (The pre-r05 staged-swap had a
-    delete-then-rename window: a crash inside it left NO readable MV, and
-    the replay then mistook that for the first batch and silently replaced
-    history with one batch's partials.) "First batch" is decided by the
-    manifest's exists() — a transient read error PROPAGATES and fails the
-    micro-batch (the checkpoint retries it) instead of being mistaken for
-    an empty MV. ``_last_batch_id`` makes the merge idempotent per
-    batch_id: a crash between the version commit and the checkpoint commit
-    replays the batch, sees its id already folded in, and skips — no
-    double-merge. The guard is scoped to ONE checkpoint lineage via
-    ``_ckpt``: batch ids restart from 0 under a fresh checkpoint, so
-    comparing them across checkpoints would silently discard genuinely new
-    data — a different checkpoint's batches always merge. History is
-    vacuumed to 2 versions per batch (the merge_upsert retention
-    rationale: unbounded streams must not accumulate one MV copy per
-    batch)."""
-    import hashlib
-
-    from ..sources.sink import _adopt_plain
-    from ..sources.versioned import VersionedTable
-
-    ckpt_id = hashlib.md5(checkpoint.encode()).hexdigest()[:16]
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        partial = batch.groupBy(*group_keys).agg(
-            F.count("*").alias("n"),
-            # not dec_sum's limbs: sum_dec is the MV's stored DECIMAL(38,10)
-            # state column, and stored MVs must keep their schema
-            F.sum(F.col(measure_col).cast("decimal(38,10)")).alias("sum_dec"),
-        )
-        t = VersionedTable(spark, target_path)
-        _adopt_plain(t)  # migrate a legacy plain-parquet MV
-        cur, meta = t.current()
-        if cur is not None:
-            existing = t.read(version=cur, meta=meta)
-            if "_last_batch_id" in existing.columns:
-                # Constant columns → one row answers the replay probe.
-                row = existing.select("_last_batch_id", "_ckpt").first()
-                if (
-                    row is not None
-                    and row[0] is not None
-                    and row[1] == ckpt_id
-                    and batch_id <= row[0]
-                ):
-                    return  # replayed batch of THIS stream: already folded in
-                existing = existing.drop("_last_batch_id", "_ckpt")
-            merged = (
-                existing.unionByName(partial)
-                .groupBy(*group_keys)
-                .agg(F.sum("n").alias("n"), F.sum("sum_dec").alias("sum_dec"))
-            )
-        else:
-            merged = partial
-        merged = merged.withColumn("_last_batch_id", F.lit(batch_id)).withColumn(
-            "_ckpt", F.lit(ckpt_id)
-        )
-        # pinned to read_version+1: a rival (zombie driver after failover, a
-        # manual backfill merge) committing between our read and our commit
-        # collides on the marker and fails THIS micro-batch for a clean
-        # checkpoint retry — an unpinned commit would land one version
-        # higher with state derived from the stale read and silently revert
-        # the rival's batches (versioned.commit's RMW contract)
-        t.commit(merged, op="mv_merge", at_version=(cur or 0) + 1)
-        t.vacuum(keep=2)
-
-    return (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -12,8 +12,8 @@ from enterprise_data_warehouse_spark.operators.scd2 import (
 )
 from enterprise_data_warehouse_spark.plans.catalog import (
     Catalog,
-    build_dimension,
     build_scd1_dimension,
+    build_scd2_dimension,
 )
 from enterprise_data_warehouse_spark.sources.tables import load_table
 
@@ -24,7 +24,7 @@ def test_catalog_scd2_dimension_invariants(spark):
     spec = Catalog.load("catalog/warehouse.yml").dimension("dim_customer")
     assert int(spec["scd_type"]) == 2
     customer = load_table(spark, SF, "customer")
-    dim = build_dimension(spec, customer, updates=_customer_updates(spark, SF))
+    dim = build_scd2_dimension(customer, _customer_updates(spark, SF), spec)
 
     key = spec["natural_key"]
     assert scd2_integrity_violations(dim, key).count() == 0
@@ -42,7 +42,7 @@ def test_catalog_scd2_dimension_invariants(spark):
 def test_catalog_scd1_dimension_shape(spark):
     spec = Catalog.load("catalog/warehouse.yml").dimension("dim_part")
     part = load_table(spark, SF, "part")
-    dim = build_dimension(spec, part)
+    dim = build_scd1_dimension(part, spec)
     assert dim.count() == part.select("p_partkey").distinct().count()
     assert "price_tier" in dim.columns and "size_band" in dim.columns
 

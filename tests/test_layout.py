@@ -113,21 +113,3 @@ def test_zorder_write_single_exchange(spark):
     # SinglePartition reduce and its 1-row broadcast — the big table itself
     # is never hash-shuffled
     assert "Exchange hashpartitioning" not in plan, plan
-
-
-def test_table_stats_reads_footers_and_measures_clustering(spark, tmp_path):
-    from enterprise_data_warehouse_spark.operators.layout import (
-        table_stats,
-        zorder_write,
-    )
-
-    st = table_stats("/root/testdata/sf0.001/orders.parquet")
-    assert st["n_files"] >= 1 and st["total_rows"] == 1500
-
-    # clustered write → per-file spans much smaller than the domain
-    out = str(tmp_path / "zordered")
-    li = load_table(spark, SF, "lineitem")
-    zorder_write(li, F.col("l_orderkey"), F.col("l_partkey"), out, N_FILES)
-    st2 = table_stats(out, cluster_col="l_orderkey")
-    assert st2["n_files"] >= N_FILES // 2
-    assert 0 < st2["span_fraction"] < 0.5, st2["span_fraction"]

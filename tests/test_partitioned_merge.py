@@ -162,22 +162,6 @@ def test_plain_parquet_target_is_adopted(spark, tmp_path):
     assert not [d for d in top if d.startswith("date_key=")]
 
 
-def test_read_partitions_prunes_via_manifest(spark, tmp_path):
-    """read_partitions returns only the named partitions' rows by path
-    selection over the marker's parts map — driver-side file pruning, no
-    scan of other partitions."""
-    path = str(tmp_path / "fact")
-    batch = spark.createDataFrame(
-        [(1, "2024-01-01", 1.0), (2, "2024-01-02", 2.0), (3, "2024-01-03", 3.0)],
-        "id int, date_key string, amount double",
-    )
-    merge_upsert_partitioned(spark, path, batch, ["id"], "date_key")
-    t = VersionedTable(spark, path)
-    one = t.read_partitions(["2024-01-02"])
-    assert {r["id"] for r in one.collect()} == {2}
-    assert t.read_partitions(["2099-01-01"]) is None
-
-
 def test_null_partition_values_survive_merges(spark, tmp_path):
     """NULL partition values land in the hive default dir; the parts map
     must key them consistently so a later merge touching the null
@@ -246,24 +230,6 @@ def test_empty_string_partition_survives_second_merge(spark, tmp_path):
     t.merge_partitioned(mk([(4, None, "n1"), (5, "", "e1")]), ["id"], "pcol")
     got = {(r["id"], r["v"]) for r in t.read().collect()}
     assert got == {(1, "keep"), (2, "a1"), (3, "new"), (4, "n1"), (5, "e1")}
-
-
-def test_read_partitions_raises_on_unmapped_current_version(spark, tmp_path):
-    """A plain commit on top of a partition-mapped table invalidates the
-    parts map; read_partitions must fail loudly instead of returning None
-    (None means 'values absent' — existing data must not look absent)."""
-    import pytest as _pytest
-
-    from enterprise_data_warehouse_spark.sources.versioned import VersionedTable
-
-    path = str(tmp_path / "fact")
-    t = VersionedTable(spark, path)
-    mk = lambda rows: spark.createDataFrame(rows, "id int, pcol string, v string")
-    t.merge_partitioned(mk([(1, "a", "x")]), ["id"], "pcol")
-    assert t.read_partitions(["a"]) is not None
-    t.commit(mk([(1, "a", "x"), (2, "b", "y")]))  # plain commit on top
-    with _pytest.raises(ValueError, match="not partition-mapped"):
-        t.read_partitions(["a"])
 
 
 def test_partition_mapped_prune_selects_mapped_dirs(spark, tmp_path):

@@ -162,24 +162,6 @@ def test_merge_upsert_schema_evolution(spark, tmp_path):
     assert got[4] == ("d", None) and got[2] == ("b2", 20.0) and len(got) == 4
 
 
-def test_dense_surrogate_keys_continue_and_are_gap_free(spark):
-    from enterprise_data_warehouse_spark.operators.scd2 import assign_surrogate_keys
-
-    dim = spark.createDataFrame(
-        [(1, "A", 10), (2, "B", 11), (3, "C", 12)], "nk int, val string, sk int"
-    )
-    new = spark.createDataFrame([(9, "X"), (4, "Y"), (7, "Z")], "nk int, val string")
-    out = assign_surrogate_keys(dim, new, "nk")
-    got = {r["nk"]: r["sk"] for r in out.collect()}
-    assert got == {4: 13, 7: 14, 9: 15}  # nk-ordered, continuing from max
-    # rerun on the same delta is deterministic
-    again = {r["nk"]: r["sk"] for r in assign_surrogate_keys(dim, new, "nk").collect()}
-    assert again == got
-    # bootstrap: no dimension yet → keys start at 1
-    boot = {r["nk"]: r["sk"] for r in assign_surrogate_keys(None, new, "nk").collect()}
-    assert boot == {4: 1, 7: 2, 9: 3}
-
-
 def test_incremental_build_partitioned_scoped_and_idempotent(spark, tmp_path):
     from pyspark.sql import functions as F
 

@@ -211,81 +211,3 @@ def test_stream_corpus_ingest_equals_batch(spark):
     batch = REG["corpus_ingest_stats"].fn(spark, SF)
     streamed = REG["streaming_corpus_ingest"].fn(spark, SF)
     assert _norm(batch) == _norm(streamed)
-
-
-def test_stream_mv_merge_equals_full_recompute(spark, tmp_path):
-    from enterprise_data_warehouse_spark.streaming.incremental import (
-        read_file_stream,
-        stream_mv_merge,
-    )
-
-    src_dir = str(tmp_path / "incoming")
-    mv = str(tmp_path / "mv")
-    ckpt = str(tmp_path / "ckpt")
-    o = load_table(spark, SF, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    schema = "o_orderkey bigint, o_orderstatus string, o_totalprice double"
-
-    def drain():
-        q = stream_mv_merge(
-            read_file_stream(spark, src_dir, schema),
-            mv,
-            ["o_orderstatus"],
-            "o_totalprice",
-            ckpt,
-        )
-        q.awaitTermination()
-
-    batch1 = o.where(F.col("o_orderkey") % 3 != 0)
-    batch1.write.mode("append").parquet(src_dir)
-    drain()
-    batch2 = o.where(F.col("o_orderkey") % 3 == 0)
-    batch2.write.mode("append").parquet(src_dir)
-    import shutil as _sh
-
-    _sh.copytree(ckpt, str(tmp_path / "ckpt_snapshot"))  # pre-batch-2 state
-    drain()  # restart from checkpoint: only batch2 is new
-
-    got = {
-        r["o_orderstatus"]: (r["n"], str(r["sum_dec"]))
-        for r in read_table(spark, mv).collect()
-    }
-    expect = {
-        r["o_orderstatus"]: (r["n"], str(r["sum_dec"]))
-        for r in o.groupBy("o_orderstatus")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(38,10)")).alias("sum_dec"),
-        )
-        .collect()
-    }
-    assert got == expect
-
-    # Crash-replay guard: restore the checkpoint to its pre-batch-2 state
-    # (as if the MV swap landed but the checkpoint commit was lost) — the
-    # SAME batch id is re-delivered from the SAME lineage, and the
-    # (_ckpt, _last_batch_id) pair stored with the MV must make the
-    # re-merge a no-op, not a double count.
-    import shutil
-
-    shutil.rmtree(ckpt)
-    shutil.copytree(str(tmp_path / "ckpt_snapshot"), ckpt)
-    drain()
-    got_after_replay = {
-        r["o_orderstatus"]: (r["n"], str(r["sum_dec"]))
-        for r in read_table(spark, mv).collect()
-    }
-    assert got_after_replay == expect, "replayed batch double-merged into the MV"
-
-    # The MV must live on the commit-manifest protocol: marker-last version
-    # commits mean there is NO delete-then-rename window in which a crash
-    # leaves no readable MV (and a replay would then mistake the missing
-    # table for "first batch" and silently drop history). Retention bounds
-    # the per-batch version accumulation.
-    from enterprise_data_warehouse_spark.sources.versioned import VersionedTable
-
-    t = VersionedTable(spark, mv)
-    assert t.exists()
-    assert t.history()[0]["op"] == "mv_merge"
-    assert len(t.committed_versions()) <= 2

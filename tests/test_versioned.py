@@ -232,6 +232,48 @@ def test_merge_upsert_adopts_plain_table(spark, tmp_path):
     assert not stray
 
 
+def test_merge_onto_committed_table_resolves_version_once(
+    spark, tmp_path, monkeypatch
+):
+    """A sink merge onto a committed table resolves the current version
+    once, inside the merge: the plain-table adoption check lists the root,
+    finds only ``_commits`` and version dirs, and returns without a
+    version resolution of its own."""
+    from enterprise_data_warehouse_spark.sources.sink import (
+        merge_upsert,
+        merge_upsert_partitioned,
+        read_table,
+    )
+
+    def mk(rows):
+        return spark.createDataFrame(rows, "id int, d string, val string")
+
+    flat, parted = str(tmp_path / "flat"), str(tmp_path / "parted")
+    base = mk([(1, "x", "a"), (2, "y", "b")])
+    merge_upsert(spark, flat, base, ["id"])
+    merge_upsert_partitioned(spark, parted, base, ["id"], "d")
+
+    calls = []
+    real_current = VersionedTable.current
+
+    def counting_current(self):
+        calls.append(self.root)
+        return real_current(self)
+
+    monkeypatch.setattr(VersionedTable, "current", counting_current)
+    merge_upsert(spark, flat, mk([(2, "y", "B")]), ["id"])
+    assert len(calls) == 1, calls
+    calls.clear()
+    merge_upsert_partitioned(spark, parted, mk([(2, "y", "B")]), ["id"], "d")
+    assert len(calls) == 1, calls
+    monkeypatch.undo()
+
+    for path in (flat, parted):
+        got = {(r["id"], r["d"], r["val"])
+               for r in read_table(spark, path).collect()}
+        assert got == {(1, "x", "a"), (2, "y", "B")}
+
+
 def _mk_ts(spark, rows, ts):
     """``_mk`` rows plus a watermark column ``ts`` and a per-key stable
     partition column ``p``."""
@@ -1444,7 +1486,7 @@ def test_staged_swap_preserves_staged_copy_on_non_race_failure(
 ):
     """rename returning false with NO rival output in place must raise and
     leave the staged copy — deleting it there would destroy the ONLY copy
-    (the old target was already removed)."""
+    of the result."""
     from enterprise_data_warehouse_spark.sources import sink
 
     staged = tmp_path / "staged"
