@@ -19,7 +19,6 @@ Scale design:
 
 from __future__ import annotations
 
-import os
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -250,7 +249,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~25% faster warm, half the corpus I/O. Integer ratio arithmetic →
     engine-exact vs the oracle.
 
-    SCALE PATH (input past EDW_NGRAM_SEGMENT_BYTES, K = _ngram_shards): the
+    SCALE PATH (input past _NGRAM_SEGMENT_BYTES, K = _ngram_shards): the
     SAME operators cut into K sequential jobs over disjoint sh64 ranges
     against a disk-backed checkpoint of the hashed shingle sets, each
     pass reduced to a per-pair PARTIAL aggregate (tiny: true pairs, not
@@ -1290,72 +1289,53 @@ PREFIX_TAU = PREFIX_TAU_NUM / PREFIX_TAU_DEN
 # concurrent spill exceeded one node's 57 GB free disk (r09 DNF). The
 # threshold sits between sf10 (81 MB — completes single-pass in ~50 s) and
 # sf100; K is sized so each pass handles roughly this many input bytes.
-# Read per call (not at import) so tests/operators can set it live.
-_SEGMENT_BYTES_DEFAULT = 200 << 20
+_SEGMENT_BYTES = 200 << 20
 # Pass/chunk ceilings are a runaway backstop (per-pass fixed overhead grows
 # linearly with K), NOT a disk guarantee: 64×200 MB ≈ 13 GB of documents —
 # ~sf1000, an order of magnitude past what one node's disk fits regardless.
 _MAX_SHARDS = 64
 _MAX_VERIFY_CHUNKS = 512
+# Segmented-regime verification chunk size, in candidate pairs: ~25M pairs
+# × ~0.5 kB (pair + both attached hash arrays) ≈ 12 GB of join shuffle per
+# chunk — comfortably inside one node's free disk, reclaimed between chunks.
+_VERIFY_CHUNK_PAIRS = 25_000_000
 
 
-def _verify_chunk_pairs() -> int:
-    """Segmented-regime verification chunk size, in candidate pairs: ~25M
-    pairs × ~0.5 kB (pair + both attached hash arrays) ≈ 12 GB of join
-    shuffle per chunk — comfortably inside one node's free disk, reclaimed
-    between chunks. Read per call, like the other knobs. Floored at 1 so
-    a zero/garbage knob cannot divide-by-zero the chunk count."""
-    return max(1, int(os.environ.get("EDW_PREFIX_VERIFY_CHUNK", 25_000_000)))
-
-
-def _shards_for(sf_dir: str, env_shards: str, env_bytes: str,
-                default_bytes: int) -> int:
+def _shards_for(sf_dir: str, segment_bytes: int) -> int:
     """Segmented-pass count K, shared by the prefix and ngram scale
-    paths: an explicit env_shards knob wins (tests pin sharded ==
-    single-pass with it); otherwise 1 (the single lazy plan) below the
-    env_bytes threshold — floored at 1 byte, so a zero knob means
-    "always segment", never a ZeroDivisionError — else
-    ~input_bytes/threshold with the runaway backstop. Both knobs are
-    read PER CALL."""
-    env = os.environ.get(env_shards)
-    if env:
-        return max(1, int(env))
-    seg = max(1, int(os.environ.get(env_bytes, default_bytes)))
+    paths: 1 (the single lazy plan) at or below segment_bytes of
+    documents, else ~input_bytes/segment_bytes capped at _MAX_SHARDS."""
     b = local_table_bytes(sf_dir, "documents")
-    if b <= seg:
+    if b <= segment_bytes:
         return 1
-    return min(_MAX_SHARDS, -(-b // seg))
+    return min(_MAX_SHARDS, -(-b // segment_bytes))
 
 
 def _prefix_shards(sf_dir: str) -> int:
     """Emission pass count K for prefix_filter_jaccard_pairs (see
     _shards_for)."""
-    return _shards_for(sf_dir, "EDW_PREFIX_SHARDS",
-                       "EDW_PREFIX_SEGMENT_BYTES", _SEGMENT_BYTES_DEFAULT)
+    return _shards_for(sf_dir, _SEGMENT_BYTES)
 
 
-# ngram_jaccard_pairs' segmentation threshold gets its OWN knob (not
-# _SEGMENT_BYTES_DEFAULT) because MEASUREMENT put its default a decade
-# higher: unlike the prefix path (single-pass = ENOSPC at sf100 —
-# segmentation is REQUIRED), ngram's single plan completes sf100 with
-# ~21 GB of spill headroom, and a same-day A/B showed the segmented
-# K=5 plan 1.9× SLOWER (782.9 s vs 408.6 s, control 38% below its cold
-# record) with a WORSE disk high-water (~36 GB: sets checkpoint + pass
-# shuffles coexist) — the 5× re-explode of 500M rows plus per-pass full
-# GCs cost more than the one big shuffle saves (SCALING.md "Round-11").
-# So the default only segments where single-pass spill would approach
-# one node's disk: ~2 GiB of documents (~sf250, extrapolated from the
-# measured ~21 GB spill per 840 MB input against 57 GB free). This knob
-# is a disk-capacity GUARD, not a throughput lever.
-_NGRAM_SEGMENT_BYTES_DEFAULT = 2 << 30
+# ngram_jaccard_pairs' segmentation threshold is its OWN constant (not
+# _SEGMENT_BYTES) because MEASUREMENT put it a decade higher: unlike the
+# prefix path (single-pass = ENOSPC at sf100 — segmentation is REQUIRED),
+# ngram's single plan completes sf100 with ~21 GB of spill headroom, and a
+# same-day A/B showed the segmented K=5 plan 1.9× SLOWER (782.9 s vs
+# 408.6 s, control 38% below its cold record) with a WORSE disk high-water
+# (~36 GB: sets checkpoint + pass shuffles coexist) — the 5× re-explode of
+# 500M rows plus per-pass full GCs cost more than the one big shuffle saves
+# (SCALING.md "Round-11"). So it only segments where single-pass spill
+# would approach one node's disk: ~2 GiB of documents (~sf250, extrapolated
+# from the measured ~21 GB spill per 840 MB input against 57 GB free). This
+# threshold is a disk-capacity GUARD, not a throughput lever.
+_NGRAM_SEGMENT_BYTES = 2 << 30
 
 
 def _ngram_shards(sf_dir: str) -> int:
     """Pass count K for ngram_jaccard_pairs' segmented regime (see
     _shards_for)."""
-    return _shards_for(sf_dir, "EDW_NGRAM_SHARDS",
-                       "EDW_NGRAM_SEGMENT_BYTES",
-                       _NGRAM_SEGMENT_BYTES_DEFAULT)
+    return _shards_for(sf_dir, _NGRAM_SEGMENT_BYTES)
 
 
 def _unpersist_checkpoint(df: DataFrame) -> None:
@@ -1514,7 +1494,7 @@ def prefix_filter_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     compact checkpointed table. Verification intersects int64 hash arrays
     — same birthday-bound trade as exploded_shingles.
 
-    SCALE PATH (input past _PREFIX_SEGMENT_BYTES, K = _prefix_shards):
+    SCALE PATH (input past _SEGMENT_BYTES, K = _prefix_shards):
     one lazy plan keeps every stage's shuffle files on local disk until
     the final job ends, and at sf100 that concurrent spill exceeded one
     node's free disk (r09 DNF at 57 GB under both lz4 and zstd). The
@@ -1655,7 +1635,7 @@ def prefix_filter_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the next, bounding the high-water at ~one chunk's rows (up to the
     # _MAX_VERIFY_CHUNKS runaway backstop — see its note).
     n_cand = cand.count()  # cheap: counts the materialized checkpoint
-    chunks = min(_MAX_VERIFY_CHUNKS, max(1, -(-n_cand // _verify_chunk_pairs())))
+    chunks = min(_MAX_VERIFY_CHUNKS, max(1, -(-n_cand // _VERIFY_CHUNK_PAIRS)))
     if chunks == 1:
         return _verify(cand)
     done = []

@@ -27,8 +27,6 @@ NOT redistributed — documented contract, mirrored in the oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -52,15 +50,7 @@ SUPP_OFFSET = 10**12
 # blocks for the ~2×distinct(part,supp) edge frame displace execution
 # memory (measured r09: OOM at 80-100 GB heaps at sf100's 15 GB input;
 # sf10's 2 GB input completes comfortably in-heap).
-_DISK_CKPT_BYTES_DEFAULT = 8 << 30
-
-
-def _disk_ckpt_bytes() -> int:
-    """EDW_PAGERANK_DISK_BYTES, read PER CALL (not at import) like the
-    dedup segment knobs, so tests and operators can set it live."""
-    return int(
-        os.environ.get("EDW_PAGERANK_DISK_BYTES", _DISK_CKPT_BYTES_DEFAULT)
-    )
+_DISK_CKPT_BYTES = 8 << 30
 
 _EDGES_SQL = f"""
   SELECT DISTINCT l_partkey AS src, l_suppkey + {SUPP_OFFSET} AS dst
@@ -191,11 +181,11 @@ def bipartite_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-sized object here (~400M rows at sf100 — 2× distinct lineitem
     # pairs), and deserialized in-JVM storage blocks for it must coexist
     # with the shuffle that builds it — the measured r09 sf100 OOM at
-    # 80-100 GB heaps. Past _disk_ckpt_bytes() of input the checkpoint
+    # 80-100 GB heaps. Past _DISK_CKPT_BYTES of input the checkpoint
     # goes DISK_ONLY (serialized blocks stream from local disk, heap stays
     # execution-only); below it the in-heap default stands (DISK_ONLY
     # measured 1.4× slower at sf0.1, where the frame is 30 MB).
-    big_input = local_table_bytes(sf_dir, "lineitem") > _disk_ckpt_bytes()
+    big_input = local_table_bytes(sf_dir, "lineitem") > _DISK_CKPT_BYTES
     edges = edges_lazy.localCheckpoint(
         eager=True,
         storageLevel=StorageLevel.DISK_ONLY if big_input else None,

@@ -539,6 +539,9 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     big = e.select("event_id", "event_type").withColumn(
         "_salt", F.pmod(F.xxhash64("event_id"), F.lit(N_SALTS))
     )
+    # The hint pins the shuffled join this query demonstrates (a plan test
+    # asserts it); no timing measurement chose it over a broadcast of the
+    # 5-row dim (unmeasured, ROADMAP item 2).
     return (
         big.join(rep.hint("shuffle_hash"), ["event_type", "_salt"])
         .select("event_id", "event_type", "type_count")

@@ -300,6 +300,8 @@ def ann_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sig = e.withColumn("bucket", portable_hyperplane_sig(F.col("v")).cast("bigint"))
     a = sig.alias("a")
+    # sort-merge hint on the bucket self-join: no measurement chose it
+    # (unmeasured, ROADMAP item 2)
     b = sig.hint("merge").alias("b")
     return (
         a.join(

@@ -322,7 +322,8 @@ def returned_customer_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold and built the fact on the driver (and the shape flips to
     SMJ above the threshold). The hint pins SHJ with the smaller
     customer⋈orders side as build at every scale; exact decimal sums keep
-    the result partitioning-order-free."""
+    the result partitioning-order-free. Measured interleaved warm A/B:
+    sf0.1 0.84–1.12 s → 0.81–0.86 s, sf1 1.92–2.00 s → 1.31–1.45 s."""
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")

@@ -400,7 +400,9 @@ def large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the semi side is NOT broadcast-safe at scale.) The join's orderkey
     exchange then satisfies the rollup's distribution requirement —
     groupBy keys lead with o_orderkey — so the aggregation runs
-    partial+final with no separate exchange."""
+    partial+final with no separate exchange. Measured interleaved warm
+    A/B when the hint went in: sf1 3.6–3.7 s → 1.9–2.0 s, neutral at
+    sf0.1 and sf10 (the shared HAVING pre-aggregate dominates)."""
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")

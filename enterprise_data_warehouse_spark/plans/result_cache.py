@@ -83,7 +83,7 @@ class ResultCache:
         read with ``df``'s schema (as written: nullable), which the key
         names, so the read launches no schema-inference job."""
         from ..sources.sink import staged_swap
-        from ..sources.versioned import fs_handles, written_schema
+        from ..sources.versioned import NO_SUCCESS_FILE, fs_handles, written_schema
 
         key = plan_fingerprint(df, versions)
         path = self._entry(name, key)
@@ -99,7 +99,7 @@ class ResultCache:
         staged = os.path.join(
             self.root, name, "_staged-" + key[:8] + "-" + uuid.uuid4().hex[:8]
         )
-        df.write.mode("overwrite").parquet(staged)
+        df.write.mode("overwrite").options(**NO_SUCCESS_FILE).parquet(staged)
         if not staged_swap(self.spark, staged, path):
             # concurrent builder won the race — their result is ours too
             if not fs.exists(hpath):

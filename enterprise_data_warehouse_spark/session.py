@@ -3,8 +3,11 @@
 Local test mode mirrors the driver contract (local[$SPARK_GRAFT_CPUS]); the
 same configs are what we would ship to a 1000-executor cluster: AQE handles
 runtime re-planning (skew joins, partition coalescing, dynamic broadcast),
-Arrow accelerates every pandas boundary, and shuffle partition count is a
-knob rather than a constant so it can be sized to cluster cores × 2-3.
+Arrow accelerates every pandas boundary. Every tuning value below is a
+constant; ``extra_conf`` (or ``spark.conf.set`` for runtime SQL confs) is
+the one override, e.g. to size shuffle partitions to cluster cores × 2-3.
+Only deployment settings come from the environment: ``SPARK_MASTER``,
+``SPARK_GRAFT_CPUS`` and ``EDW_DRIVER_MEMORY``.
 """
 
 from __future__ import annotations
@@ -16,7 +19,6 @@ from pyspark.sql import SparkSession
 
 def get_spark(
     app_name: str = "edw-spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
@@ -26,8 +28,6 @@ def get_spark(
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("EDW_SHUFFLE_PARTITIONS", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -37,7 +37,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", "32")
         # Arrow for every pandas_udf / applyInPandas / toPandas boundary.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Dimension tables (region/nation/customer at test SF) stay under
@@ -51,16 +51,11 @@ def get_spark(
         # 600M×150M SMJ; SHJ removes the sorts). Static planning honors
         # size estimates; the AQE threshold converts misestimated SMJs at
         # runtime once real post-shuffle sizes are known. Both are
-        # scale-independent policies (ratios/thresholds, not counts) —
-        # env-overridable like every other knob here.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("EDW_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("EDW_SHJ_LOCAL_MAP_THRESHOLD", "256MB"),
-        )
+        # scale-independent policies (ratios/thresholds, not counts). Both
+        # are runtime SQL confs: an A/B sets them through extra_conf or
+        # spark.conf.set.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256MB")
         # Timestamps in testdata are TIMESTAMP_NTZ-like; keep session UTC so
         # date_trunc/extract match the DuckDB oracle.
         .config("spark.sql.session.timeZone", "UTC")

@@ -83,8 +83,9 @@ def _adopt_plain(t: VersionedTable) -> None:
     on its first run.
 
     The root listing comes first: a committed table's root holds only
-    ``_commits`` and ``v*-*`` dirs, so the steady-state merge returns
-    without resolving a version (the merge resolves its own)."""
+    ``_commits``, ``v*-*`` dirs and ``_``/``.``-prefixed clone metadata
+    (``_clone.json``, ``_refs``, checksums), so the steady-state merge
+    returns without resolving a version (the merge resolves its own)."""
     root = t._Path(t.root)
     if not t._hfs.exists(root):
         return
@@ -98,10 +99,13 @@ def _adopt_plain(t: VersionedTable) -> None:
         if st.getPath().getName() != "_commits"
         and not _DIR_RE.match(st.getPath().getName())
     ]
-    # other entries next to a committed version (clone/ref metadata, or
-    # the plain files of a racing adopter or of one that crashed before
-    # its cleanup) are not a table to adopt
-    if not plain_entries or t.exists():
+    # a root with no data entry has nothing to adopt: Spark's readers skip
+    # ``_``/``.`` names, which here are clone/ref metadata. Data entries
+    # next to a committed version (the plain files of a racing adopter or
+    # of one that crashed before its cleanup) are not a table to adopt
+    # either.
+    if (all(p.getName().startswith(("_", ".")) for p in plain_entries)
+            or t.exists()):
         return
     try:
         plain = t.spark.read.option("basePath", t.root).parquet(

@@ -98,6 +98,9 @@ ORPHAN_GRACE_MS = 600_000
 # period, sized for the per-merge retain_versions loop rather than days.
 # Bounds retained storage at versions-superseded-per-minute.
 SUPERSEDE_GRACE_MS = 60_000
+# Writer options of every data write: no _SUCCESS file (nor its .crc),
+# which nothing reads — the commit marker, or a rename, is the commit point.
+NO_SUCCESS_FILE = {"mapreduce.fileoutputcommitter.marksuccessfuljobs": "false"}
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -747,7 +750,7 @@ class VersionedTable:
         write and marker create). Unique naming means a racing or replayed
         writer can never touch an already-committed directory."""
         dirname = f"v{version:08d}-{uuid.uuid4().hex[:8]}"
-        writer = df.write.mode("error")
+        writer = df.write.mode("error").options(**NO_SUCCESS_FILE)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(f"{self.root}/{dirname}")
@@ -854,9 +857,6 @@ class VersionedTable:
 
     MAX_STATS_FILES = 4096  # keep the marker a small JSON, not a catalog
 
-    # test hook: force the distributed stats pass even on local paths
-    _force_distributed_stats = False
-
     def _count_staged_files(self, dirname: str) -> int:
         """Recursive count of .parquet files under the staged dir — ONE
         Hadoop listFiles (a metadata op, no data read). The cheap
@@ -884,7 +884,7 @@ class VersionedTable:
         callers then commit WITHOUT stats and read() falls back to the
         full scan: strictly fail-open. ``schema`` is the staged data's
         recorded schema, when known (saves the pass's inference job)."""
-        if self._scheme() == "file" and not self._force_distributed_stats:
+        if self._scheme() == "file":
             stats = self._collect_file_stats_footer(dirname, cols)
             if stats is not None:
                 return stats
@@ -1344,8 +1344,9 @@ class VersionedTable:
         # the hash repartition.
         merged.withColumn("_pv", F.col(partition_col).cast("string")).repartition(
             "_pv"
-        ).hint("rebalance", "_pv").write.mode("error").partitionBy("_pv").parquet(
-            f"{self.root}/{dirname}")
+        ).hint("rebalance", "_pv").write.mode("error").options(
+            **NO_SUCCESS_FILE
+        ).partitionBy("_pv").parquet(f"{self.root}/{dirname}")
         # map values from the dirs actually written (hive-escaped names)
         from urllib.parse import unquote
 

@@ -267,9 +267,7 @@ def test_prefix_filter_sharded_equals_single_pass(spark, monkeypatch):
     be LOSSLESS: every qualifying pair shares a prefix token, that token
     lands in exactly one hash range, so the union over passes equals the
     single-pass result — pairs, counts, and jaccard values bit-identical."""
-    from enterprise_data_warehouse_spark.operators.dedup import (
-        prefix_filter_jaccard_pairs,
-    )
+    from enterprise_data_warehouse_spark.operators import dedup
 
     def rows(df):
         return sorted(
@@ -277,15 +275,15 @@ def test_prefix_filter_sharded_equals_single_pass(spark, monkeypatch):
             for r in df.collect()
         )
 
-    monkeypatch.setenv("EDW_PREFIX_SHARDS", "1")
-    single = rows(prefix_filter_jaccard_pairs(spark, SF))
-    monkeypatch.setenv("EDW_PREFIX_SHARDS", "4")
-    sharded = rows(prefix_filter_jaccard_pairs(spark, SF))
+    monkeypatch.setattr(dedup, "_prefix_shards", lambda sf_dir: 1)
+    single = rows(dedup.prefix_filter_jaccard_pairs(spark, SF))
+    monkeypatch.setattr(dedup, "_prefix_shards", lambda sf_dir: 4)
+    sharded = rows(dedup.prefix_filter_jaccard_pairs(spark, SF))
     assert single and sharded == single
-    # ...and with the chunked verification forced on via the (per-call
-    # live) env knob — tiny chunk size → many chunks: still bit-identical
-    monkeypatch.setenv("EDW_PREFIX_VERIFY_CHUNK", "10")
-    chunked = rows(prefix_filter_jaccard_pairs(spark, SF))
+    # ...and with the chunked verification forced on — tiny chunk size →
+    # many chunks: still bit-identical
+    monkeypatch.setattr(dedup, "_VERIFY_CHUNK_PAIRS", 10)
+    chunked = rows(dedup.prefix_filter_jaccard_pairs(spark, SF))
     assert chunked == single
 
 
@@ -295,9 +293,7 @@ def test_ngram_sharded_equals_single_pass(spark, monkeypatch):
     per-shard per-pair partial aggregates SUM to the single-pass aggregate
     (n_common is additive over disjoint shingle sets; sa/sb are per-doc
     constants) — pairs, counts, and jaccard values bit-identical."""
-    from enterprise_data_warehouse_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-    )
+    from enterprise_data_warehouse_spark.operators import dedup
 
     def rows(df):
         return sorted(
@@ -305,10 +301,10 @@ def test_ngram_sharded_equals_single_pass(spark, monkeypatch):
             for r in df.collect()
         )
 
-    monkeypatch.setenv("EDW_NGRAM_SHARDS", "1")
-    single = rows(ngram_jaccard_pairs(spark, SF))
-    monkeypatch.setenv("EDW_NGRAM_SHARDS", "3")
-    sharded = rows(ngram_jaccard_pairs(spark, SF))
+    monkeypatch.setattr(dedup, "_ngram_shards", lambda sf_dir: 1)
+    single = rows(dedup.ngram_jaccard_pairs(spark, SF))
+    monkeypatch.setattr(dedup, "_ngram_shards", lambda sf_dir: 3)
+    sharded = rows(dedup.ngram_jaccard_pairs(spark, SF))
     assert single and sharded == single
 
 
@@ -347,9 +343,8 @@ def test_pagerank_disk_checkpoint_equals_default(spark, monkeypatch):
         return [tuple(r) for r in df.collect()]
 
     base = rows(graph.bipartite_pagerank(spark, SF))
-    # the knob is LIVE (read per call, not at import) — set the env var,
-    # no module-attribute patching needed
-    monkeypatch.setenv("EDW_PAGERANK_DISK_BYTES", "0")  # every input is "big"
+    # read as a module global per call, so patching it reroutes the branch
+    monkeypatch.setattr(graph, "_DISK_CKPT_BYTES", 0)  # every input is "big"
     disk = rows(graph.bipartite_pagerank(spark, SF))
     assert base and disk == base
 
@@ -373,16 +368,21 @@ def test_local_table_bytes_sizing_helper(tmp_path):
     assert local_table_bytes("s3://bucket/prefix", "t") == 0
 
 
-def test_segment_knob_zero_means_always_segment(spark, monkeypatch):
-    """EDW_*_SEGMENT_BYTES=0 must mean "always segment" (the knob is
-    floored at 1 byte), never a ZeroDivisionError — review finding,
-    round 11."""
+def test_segment_knob_zero_means_always_segment():
+    """The segmented-pass sizing rule: one pass at or below the threshold,
+    else ceil(input bytes / threshold) passes, capped at _MAX_SHARDS."""
     from enterprise_data_warehouse_spark.operators.dedup import (
-        _ngram_shards,
-        _prefix_shards,
+        _MAX_SHARDS,
+        _shards_for,
+    )
+    from enterprise_data_warehouse_spark.sources.tables import (
+        local_table_bytes,
     )
 
-    monkeypatch.setenv("EDW_NGRAM_SEGMENT_BYTES", "0")
-    monkeypatch.setenv("EDW_PREFIX_SEGMENT_BYTES", "0")
-    assert _ngram_shards(SF) > 1
-    assert _prefix_shards(SF) > 1
+    b = local_table_bytes(SF, "documents")
+    assert b > 3
+    assert 1 < _shards_for(SF, 1) <= _MAX_SHARDS == 64
+    assert _shards_for(SF, 1 << 62) == 1
+    assert _shards_for(SF, b) == 1
+    assert _shards_for(SF, b - 1) == 2
+    assert _shards_for(SF, -(-b // 3)) == 3

@@ -12,7 +12,15 @@ anywhere in the package, ``tools/``, ``bench.py``, ``perfbench/`` (not
 its tests) or ``__spark_entry__.py``; docstrings and comments do not
 count. ``ALLOWED`` names the exceptions with one reason each. An entry
 that no longer exists or is now reached fails too, so the list cannot
-outlive its reasons."""
+outlive its reasons.
+
+The same walk guards the environment: the package may read only the
+deployment settings in ``ENV_ALLOWED`` (``os.environ.get``,
+``os.environ[...]``, ``os.getenv``). A tuning value is a constant in the
+code, overridden through ``get_spark(extra_conf=)``, ``spark.conf.set`` or
+a patch of the module name, not an environment knob that no caller sets.
+A name passed in through a parameter is resolved from the module's calls
+that pass it as a string literal."""
 
 from __future__ import annotations
 
@@ -58,6 +66,17 @@ ALLOWED = {
         "ext right-to-be-forgotten erase (ROADMAP item 6 open)",
     "plans.result_cache.ResultCache.evict":
         "ext result-cache eviction (ROADMAP item 6 open)",
+}
+
+
+# environment variable: reason. Each is a deployment setting, not a tuning
+# value.
+ENV_ALLOWED = {
+    "SPARK_MASTER": "the cluster master URL (session.py)",
+    "SPARK_GRAFT_CPUS": "the local[N] core count (session.py)",
+    "EDW_DRIVER_MEMORY": "the driver heap, sized to the host; perfbench "
+                         "pins it (session.py)",
+    "SPARK_GRAFT_SF_DIR": "where the source tables live (sources/tables.py)",
 }
 
 
@@ -136,3 +155,87 @@ def test_allowlist_entries_exist_and_are_unreached():
         f"stale ALLOWED entries: no longer defined {gone}; now reached "
         f"{reached}"
     )
+
+
+def _is_environ(n: ast.expr) -> bool:
+    return (isinstance(n, ast.Attribute) and n.attr == "environ") or (
+        isinstance(n, ast.Name) and n.id == "environ")
+
+
+def _env_name_arg(node: ast.AST) -> ast.expr | None:
+    """The variable-name argument of an environment read, else None."""
+    if isinstance(node, ast.Call) and node.args:
+        f = node.func
+        if (isinstance(f, ast.Name) and f.id == "getenv") or (
+            isinstance(f, ast.Attribute)
+            and (f.attr == "getenv" or (f.attr == "get" and _is_environ(f.value)))
+        ):
+            return node.args[0]
+    if (isinstance(node, ast.Subscript) and isinstance(node.ctx, ast.Load)
+            and _is_environ(node.value)):
+        return node.slice
+    return None
+
+
+def _resolve(arg: ast.expr, fn, calls: list[ast.Call]) -> list[str]:
+    """The variable names ``arg`` can hold: a string literal, or a
+    parameter of ``fn`` that the module's calls pass as literals."""
+    if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
+        return [arg.value]
+    params = [a.arg for a in fn.args.args] if fn else []
+    if isinstance(arg, ast.Name) and arg.id in params:
+        i = params.index(arg.id)
+        names = []
+        for c in calls:
+            callee = getattr(c.func, "id", getattr(c.func, "attr", None))
+            if callee != fn.name:
+                continue
+            given = c.args[i] if i < len(c.args) else next(
+                (k.value for k in c.keywords if k.arg == arg.id), None)
+            if isinstance(given, ast.Constant) and isinstance(given.value, str):
+                names.append(given.value)
+        if names:
+            return names
+    return [f"<not a literal: {ast.unparse(arg)}>"]
+
+
+def _env_reads() -> list[tuple[str, str]]:
+    """(variable name, "file:line") of every environment read in the
+    package."""
+    out = []
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        calls = [n for n in ast.walk(tree) if isinstance(n, ast.Call)]
+        where = path.relative_to(ROOT)
+
+        def visit(node, fn):
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    visit(child, child)
+                    continue
+                arg = _env_name_arg(child)
+                if arg is not None:
+                    out.extend((name, f"{where}:{child.lineno}")
+                               for name in _resolve(arg, fn, calls))
+                visit(child, fn)
+
+        visit(tree, None)
+    return out
+
+
+def test_package_reads_only_allowed_env_vars():
+    unlisted = sorted(
+        f"{where} {name}" for name, where in _env_reads()
+        if name not in ENV_ALLOWED
+    )
+    assert not unlisted, (
+        "environment reads outside ENV_ALLOWED (make a tuning value a "
+        "constant; list a deployment setting with its reason):\n  "
+        + "\n  ".join(unlisted)
+    )
+
+
+def test_env_allowlist_entries_are_read():
+    read = {name for name, _ in _env_reads()}
+    stale = sorted(set(ENV_ALLOWED) - read)
+    assert not stale, f"stale ENV_ALLOWED entries, no longer read: {stale}"

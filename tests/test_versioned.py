@@ -274,6 +274,80 @@ def test_merge_onto_committed_table_resolves_version_once(
         assert got == {(1, "x", "a"), (2, "y", "B")}
 
 
+def test_merge_onto_clone_resolves_version_once(spark, tmp_path, monkeypatch):
+    """A clone's root, and its source's root, hold ``_clone.json``,
+    ``_refs`` and their checksums next to the version dirs. The adoption
+    check skips those metadata names, so a sink merge onto either table
+    resolves the current version once, inside the merge."""
+    from enterprise_data_warehouse_spark.sources.sink import (
+        merge_upsert,
+        read_table,
+    )
+
+    def mk(rows):
+        return spark.createDataFrame(rows, "id int, val string")
+
+    src_path, dev_path = str(tmp_path / "src"), str(tmp_path / "dev")
+    merge_upsert(spark, src_path, mk([(1, "a"), (2, "b")]), ["id"])
+    VersionedTable(spark, src_path).clone(dev_path)
+    assert {"_clone.json", "._clone.json.crc"} <= set(os.listdir(dev_path))
+    assert "_refs" in os.listdir(src_path)
+
+    calls = []
+    real_current = VersionedTable.current
+
+    def counting_current(self):
+        calls.append(self.root)
+        return real_current(self)
+
+    monkeypatch.setattr(VersionedTable, "current", counting_current)
+    merge_upsert(spark, dev_path, mk([(2, "B")]), ["id"])
+    assert len(calls) == 1, calls
+    calls.clear()
+    merge_upsert(spark, src_path, mk([(1, "A")]), ["id"])
+    assert len(calls) == 1, calls
+    monkeypatch.undo()
+
+    assert {tuple(r) for r in read_table(spark, dev_path).collect()} == {
+        (1, "a"), (2, "B")}
+    assert {tuple(r) for r in read_table(spark, src_path).collect()} == {
+        (1, "A"), (2, "b")}
+
+
+def test_data_writes_leave_only_data_files(spark, tmp_path):
+    """A committed version dir, a partitioned merge's dir and a result-cache
+    entry hold only parquet files and their ``.crc`` sidecars: no
+    ``_SUCCESS`` marker, which nothing reads (the commit marker, or the
+    cache's rename, is the commit point)."""
+    from enterprise_data_warehouse_spark.plans.result_cache import ResultCache
+
+    def stray_files(top):
+        out = []
+        for dirpath, _, names in os.walk(top):
+            data = {n for n in names if n.endswith(".parquet")}
+            crcs = {f".{n}.crc" for n in data}
+            out += [os.path.join(dirpath, n) for n in names
+                    if n not in data and n not in crcs]
+        return out
+
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.commit(_mk(spark, [(1, "a"), (2, "b")]))
+    p = VersionedTable(spark, str(tmp_path / "p"))
+    p.merge_partitioned(
+        _mk(spark, [(1, "a"), (2, "b"), (3, "a")]), ["id"], "val")
+    cache = ResultCache(spark, str(tmp_path / "rc"))
+    cache.get_or_build("q", _mk(spark, [(1, "a")]), {"t": 1})
+
+    written = [tmp_path / "t" / _data_dirs(tmp_path)[0],
+               *(tmp_path / "p" / d for d in os.listdir(tmp_path / "p")
+                 if d.startswith("v")),
+               tmp_path / "rc"]
+    assert len(written) == 3
+    for top in written:
+        assert not stray_files(top), stray_files(top)
+    assert any(n.startswith("_pv=") for n in os.listdir(written[1]))
+
+
 def _mk_ts(spark, rows, ts):
     """``_mk`` rows plus a watermark column ``ts`` and a per-key stable
     partition column ``p``."""
@@ -1966,7 +2040,9 @@ def test_distributed_stats_match_footer_stats_and_preserve_answers(
     df = spark.read.parquet(src)
     foot = VersionedTable(spark, str(tmp_path / "foot"))
     foot.commit(df, stats_cols=["id"])
-    monkeypatch.setattr(VersionedTable, "_force_distributed_stats", True)
+    # footer path returns None -> the distributed fall-through
+    monkeypatch.setattr(VersionedTable, "_collect_file_stats_footer",
+                        lambda self, dirname, cols: None)
     dist = VersionedTable(spark, str(tmp_path / "dist"))
     dist.commit(df, stats_cols=["id"])
 
@@ -2005,7 +2081,9 @@ def test_distributed_stats_cover_partition_columns(spark, tmp_path, monkeypatch)
     get per-file stats too (min=max=the partition value) — something the
     footer path can never see. Pruning on the partition column must then
     skip sibling partitions' files."""
-    monkeypatch.setattr(VersionedTable, "_force_distributed_stats", True)
+    # footer path returns None -> the distributed fall-through
+    monkeypatch.setattr(VersionedTable, "_collect_file_stats_footer",
+                        lambda self, dirname, cols: None)
     df = (
         spark.range(0, 1000)
         .withColumn("bucket", (F.col("id") % 4).cast("int"))
